@@ -83,9 +83,9 @@ def _hot_threshold(hot_key_threshold: int | None) -> int | None:
     if env is not None:
         try:
             v = int(float(env))  # accept "2e6" / "2000000"
-        except ValueError:
+        except (ValueError, OverflowError):  # "abc", "nan" / "inf", "-inf"
             raise ValueError(
-                f"{_HOTKEY_ENV}={env!r} is not a number; set a rows-per-key "
+                f"{_HOTKEY_ENV}={env!r} is not a finite number; set a rows-per-key "
                 "bound like 2000000 (or <=0 to disable hot-key routing)"
             ) from None
         return v if v > 0 else None

@@ -27,6 +27,11 @@ Shared two-round protocol (both entries):
   because the injected rows duplicate existing TEXT — the
   text/id-derived oracle outputs stay exactly predictable.
 
+The rounds are staged, linked and run by the shared two-round scaffold
+(`plans/queries.py::overlap_two_rounds` under `stream_dirs`), as are
+the two hash-split entries here (`stream_expectations_by_source`,
+`stream_text_index_terms`, halves from `hash_halves`).
+
 Scale notes: both intakes are the canonical bounded-state shapes — the
 filter's dedup state is keyed by content fingerprint with an event-time
 TTL knob; the near-dup store is banded + bucket-capped (the counted
@@ -37,8 +42,6 @@ band at probe time.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,7 +51,9 @@ from power_generation_etl_spark.operators import minhash as mh
 from power_generation_etl_spark.plans.queries import (
     T,
     _register,
+    hash_halves,
     overlap_two_rounds,
+    stream_dirs,
     stream_scoped,
 )
 
@@ -60,12 +65,7 @@ _H4_SQL = "CAST('0x'||substr(md5(CAST(doc_id AS VARCHAR)),1,8) AS BIGINT) % 4"
 
 
 def _h4():
-    return (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-        ).cast("bigint")
-        % 4
-    )
+    return mh.portable_hash32(F.col("doc_id").cast("string")) % 4
 
 
 def _doc_rounds(spark: SparkSession, sf_dir: str):
@@ -101,25 +101,6 @@ def _doc_rounds(spark: SparkSession, sf_dir: str):
         .unionByName(copies_within)
     )
     return r1, r2
-
-
-def _stage_json(df: DataFrame, path: str) -> None:
-    df.coalesce(1).write.json(path)
-
-
-def _link_round(src: str, landing: str, tag: str) -> None:
-    for i, f in enumerate(
-        sorted(
-            f
-            for f in os.listdir(src)
-            if f.endswith(".json") and not f.startswith((".", "_"))
-        )
-    ):
-        dst = os.path.join(landing, f"{tag}_{i}.json")
-        try:
-            os.link(os.path.join(src, f), dst)
-        except OSError:
-            shutil.copyfile(os.path.join(src, f), dst)
 
 
 # ---------------------------------------------------------------------------
@@ -184,35 +165,19 @@ def stream_intake_filter_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     r1, r2 = _doc_rounds(spark, sf_dir)
-    stage = tempfile.mkdtemp(prefix="intake_f_stage_")
-    landing = tempfile.mkdtemp(prefix="intake_f_landing_")
-    out = os.path.join(stage, "out")
-    ckpt = os.path.join(stage, "ckpt")
     schema_out = "n_docs long, sum_len long, fp_checksum long"
+    with stream_dirs("intake_f") as d:
+        out = os.path.join(d.store, "out")
 
-    def _run() -> None:
-        q = stream_document_filter(
-            spark, landing, out, ckpt,
-            redact_pii=False, dedup_watermark="3650 days",
-        )
-        q.awaitTermination()
-        q.stop()
+        def _run(landing: str) -> None:
+            q = stream_document_filter(
+                spark, landing, out, d.ckpt,
+                redact_pii=False, dedup_watermark="3650 days",
+            )
+            q.awaitTermination()
+            q.stop()
 
-    rounds = (r1, r2)
-
-    def _stage_half(i: int) -> str:
-        out_dir = os.path.join(stage, f"r{i + 1}")
-        _stage_json(rounds[i], out_dir)
-        return out_dir
-
-    def _feed_and_run(src: str, tag: str) -> None:
-        _link_round(src, landing, tag)
-        _run()
-
-    try:
-        # Round-2 staging overlaps round 1's staging and stream run
-        # (guide §2.6), with the shared error-chaining protocol.
-        overlap_two_rounds(_stage_half, _feed_and_run)
+        overlap_two_rounds(d, r1, r2, "json", _run)
         try:
             surv = spark.read.parquet(out)
             row = surv.agg(
@@ -229,9 +194,6 @@ def stream_intake_filter_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             result = [(row["n_docs"], row["sum_len"], row["fp_checksum"])]
         except AnalysisException:  # zero batches ever ran (empty corpus)
             result = [(0, None, None)]
-    finally:
-        for d in (stage, landing):
-            shutil.rmtree(d, ignore_errors=True)
     return spark.createDataFrame(result, schema_out)
 
 
@@ -387,36 +349,19 @@ def stream_intake_neardup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     r1, r2 = _doc_rounds(spark, sf_dir)
-    stage = tempfile.mkdtemp(prefix="intake_nd_stage_")
-    landing = tempfile.mkdtemp(prefix="intake_nd_landing_")
-    out = os.path.join(stage, "out")
-    ckpt = os.path.join(stage, "ckpt")
-    store = os.path.join(stage, "store")
+    with stream_dirs("intake_nd") as d:
+        out = os.path.join(d.store, "out")
 
-    def _run() -> None:
-        q = stream_neardup_intake(
-            spark, landing, out, ckpt, store,
-            threshold=0.5, n=3, k=64, n_bands=16, seed=42,
-            bucket_cap=None,  # pinned: exact, env-independent output
-        )
-        q.awaitTermination()
-        q.stop()
+        def _run(landing: str) -> None:
+            q = stream_neardup_intake(
+                spark, landing, out, d.ckpt, os.path.join(d.store, "sig"),
+                threshold=0.5, n=3, k=64, n_bands=16, seed=42,
+                bucket_cap=None,  # pinned: exact, env-independent output
+            )
+            q.awaitTermination()
+            q.stop()
 
-    rounds = (r1, r2)
-
-    def _stage_half(i: int) -> str:
-        out_dir = os.path.join(stage, f"r{i + 1}")
-        _stage_json(rounds[i], out_dir)
-        return out_dir
-
-    def _feed_and_run(src: str, tag: str) -> None:
-        _link_round(src, landing, tag)
-        _run()
-
-    try:
-        # Round-2 staging overlaps round 1's staging and stream run
-        # (guide §2.6), with the shared error-chaining protocol.
-        overlap_two_rounds(_stage_half, _feed_and_run)
+        overlap_two_rounds(d, r1, r2, "json", _run)
         try:
             # project the documented column explicitly — the batch=<id>
             # layout column must not leak into the contract schema
@@ -426,9 +371,6 @@ def stream_intake_neardup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         except AnalysisException:  # zero batches ever ran (empty corpus)
             rows = []
-    finally:
-        for d in (stage, landing):
-            shutil.rmtree(d, ignore_errors=True)
     return spark.createDataFrame([(i,) for i in rows], "doc_id long")
 
 
@@ -496,12 +438,7 @@ def pii_redaction_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from power_generation_etl_spark.operators import hygiene as hg
 
     d = T(spark, sf_dir, "documents")
-    h3 = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-        ).cast("bigint")
-        % 3
-    )
+    h3 = mh.portable_hash32(F.col("doc_id").cast("string")) % 3
     injected = F.when(
         h3 == 0,
         F.concat(
@@ -515,9 +452,7 @@ def pii_redaction_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "doc_id",
         F.length(rt).cast("bigint").alias("redacted_len"),
-        F.conv(F.substring(F.md5(rt.cast("binary")), 1, 8), 16, 10)
-        .cast("bigint")
-        .alias("redacted_hash"),
+        mh.portable_hash32(rt.cast("binary")).alias("redacted_hash"),
     ).orderBy("doc_id")
 
 
@@ -557,54 +492,26 @@ def stream_expectations_by_source(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     suite = _stream_doc_suite()
-    d = T(spark, sf_dir, "documents").select("doc_id", "text", "source", "n_chars")
-    half = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % 2
-    )
-    stage = tempfile.mkdtemp(prefix="qg_stage_")
-    landing = tempfile.mkdtemp(prefix="qg_landing_")
-    store = tempfile.mkdtemp(prefix="qg_store_")
-    ckpt = tempfile.mkdtemp(prefix="qg_ckpt_")
+    docs = T(spark, sf_dir, "documents").select("doc_id", "text", "source", "n_chars")
+    r1, r2 = hash_halves(docs, "doc_id")
     schema = "doc_id long, text string, source string, n_chars long"
-
-    def _stage_half(i: int) -> str:
-        out = os.path.join(stage, f"half{i}")
-        d.filter(half == i).coalesce(1).write.json(out)
-        return out
-
-    def _feed_and_run(src: str, tag: str) -> None:
-        for k, f in enumerate(
-            sorted(
-                f
-                for f in os.listdir(src)
-                if f.endswith(".json") and not f.startswith((".", "_"))
-            )
-        ):
-            try:
-                os.link(os.path.join(src, f), os.path.join(landing, f"{tag}_{k}.json"))
-            except OSError:
-                shutil.copyfile(
-                    os.path.join(src, f), os.path.join(landing, f"{tag}_{k}.json")
-                )
-        q = stream_expectations(
-            spark, landing, store, ckpt, suite, schema, group_col="source"
-        )
-        q.awaitTermination()
-        q.stop()
-
     out_schema = "grp string, check_name string, metric long, passed int"
-    try:
-        # Round-2 staging overlaps round 1's stream (guide §2.6).
-        overlap_two_rounds(_stage_half, _feed_and_run)
+    with stream_dirs("qg") as d:
+        def _run(landing: str) -> None:
+            q = stream_expectations(
+                spark, landing, d.store, d.ckpt, suite, schema,
+                group_col="source",
+            )
+            q.awaitTermination()
+            q.stop()
+
+        overlap_two_rounds(d, r1, r2, "json", _run)
         try:
-            rows = grouped_expectations_from_store(spark, store, suite).collect()
+            rows = grouped_expectations_from_store(
+                spark, d.store, suite
+            ).collect()
         except ValueError:  # empty corpus: zero batches, no store
             return spark.createDataFrame([], out_schema)
-    finally:
-        for dd in (stage, landing, store, ckpt):
-            shutil.rmtree(dd, ignore_errors=True)
     return spark.createDataFrame([tuple(r) for r in rows], out_schema)
 
 
@@ -648,41 +555,22 @@ def stream_text_index_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         term_stats_from_store,
     )
 
-    d = T(spark, sf_dir, "documents").select("doc_id", "text")
-    half = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % 2
-    )
-    stage = tempfile.mkdtemp(prefix="ix_stage_")
-    landing = tempfile.mkdtemp(prefix="ix_landing_")
-    store = tempfile.mkdtemp(prefix="ix_store_")
-    ckpt = tempfile.mkdtemp(prefix="ix_ckpt_")
-    schema = "doc_id long, text string"
-
-    def _stage_half(i: int) -> str:
-        out = os.path.join(stage, f"half{i}")
-        d.filter(half == i).coalesce(1).write.json(out)
-        return out
-
-    def _feed_and_run(src: str, tag: str) -> None:
-        _link_round(src, landing, tag)
-        q = stream_text_index_ingest(
-            spark, landing, store, ckpt, "doc_id", "text", schema
-        )
-        q.awaitTermination()
-        q.stop()
-
+    docs = T(spark, sf_dir, "documents").select("doc_id", "text")
+    r1, r2 = hash_halves(docs, "doc_id")
     out_schema = "term string, df long, total_tf long"
-    try:
-        # round 1 shards ix_b0; round 2 appends ix_b1. Round-2
-        # staging overlaps round 1's stream (guide §2.6).
-        overlap_two_rounds(_stage_half, _feed_and_run)
+    with stream_dirs("ix") as d:
+        def _run(landing: str) -> None:
+            q = stream_text_index_ingest(
+                spark, landing, d.store, d.ckpt, "doc_id", "text",
+                "doc_id long, text string",
+            )
+            q.awaitTermination()
+            q.stop()
+
+        # round 1 shards ix_b0; round 2 appends ix_b1
+        overlap_two_rounds(d, r1, r2, "json", _run)
         try:
-            rows = term_stats_from_store(spark, store, k=20).collect()
+            rows = term_stats_from_store(spark, d.store, k=20).collect()
         except ValueError:  # empty corpus: zero batches, no shards
             return spark.createDataFrame([], out_schema)
-    finally:
-        for dd in (stage, landing, store, ckpt):
-            shutil.rmtree(dd, ignore_errors=True)
     return spark.createDataFrame([tuple(r) for r in rows], out_schema)

@@ -43,7 +43,14 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from power_generation_etl_spark.plans.queries import T, _register, stream_scoped
+from power_generation_etl_spark.plans.queries import (
+    T,
+    _register,
+    link_data_files,
+    stage_round,
+    stream_dirs,
+    stream_scoped,
+)
 from power_generation_etl_spark.store import TableStore
 
 _OUT_SCHEMA = "change string, status string, n long"
@@ -151,48 +158,30 @@ def stream_cdc_apply_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from power_generation_etl_spark.streaming.ingest import stream_cdc_apply
 
     base, changes = _base_and_changes(spark, sf_dir)
-    wh = tempfile.mkdtemp(prefix="cdc_swh_")
-    stage = tempfile.mkdtemp(prefix="cdc_stage_")
-    landing = tempfile.mkdtemp(prefix="cdc_landing_")
-    ckpt = tempfile.mkdtemp(prefix="cdc_ckpt_")
-    try:
-        store = TableStore(spark, wh, versioned=True)
+    with stream_dirs("cdc") as d:
+        store = TableStore(spark, d.store, versioned=True)
         store.overwrite("orders_snap", base)
-        out = os.path.join(stage, "out")  # write.json refuses an existing dir
-        changes.select("o_orderkey", "o_orderstatus", "ver").coalesce(
-            1
-        ).write.json(out)
-        for k, f in enumerate(
-            sorted(
-                f
-                for f in os.listdir(out)
-                if f.endswith(".json") and not f.startswith((".", "_"))
-            )
-        ):
-            try:
-                os.link(os.path.join(out, f), os.path.join(landing, f"c{k}.json"))
-            except OSError:
-                shutil.copyfile(
-                    os.path.join(out, f), os.path.join(landing, f"c{k}.json")
-                )
+        staged = stage_round(
+            changes.select("o_orderkey", "o_orderstatus", "ver"),
+            os.path.join(d.stage, "changes"),
+            "json",
+        )
+        link_data_files(staged, d.landing, "c")
         q = stream_cdc_apply(
             spark,
-            landing,
+            d.landing,
             store,
             "orders_snap",
             keys=["o_orderkey"],
             order_col="ver",
             schema="o_orderkey long, o_orderstatus string, ver long",
-            checkpoint_dir=ckpt,
+            checkpoint_dir=d.ckpt,
         )
         q.awaitTermination()
         q.stop()
         if 1 not in store.versions("orders_snap"):  # empty base: no batch
             return spark.createDataFrame([], _OUT_SCHEMA)
         return _feed_counts(spark, store)
-    finally:
-        for d in (wh, stage, landing, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

@@ -20,17 +20,23 @@ Design rules (100 TB discipline):
 
 from __future__ import annotations
 
+import collections
 import contextlib
 import functools
 import os
+import shutil
+import tempfile
 import threading
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from power_generation_etl_spark.operators import rank as rk
+from power_generation_etl_spark.operators.minhash import portable_hash32
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -132,47 +138,110 @@ def stream_scoped(fn: QueryFn) -> QueryFn:
     return wrapped
 
 
-def overlap_two_rounds(stage_half, feed_and_run) -> None:
-    """Two-round streaming protocol with the independent staging jobs
-    overlapped (guide §2.6): round-2's staging write is submitted
-    concurrently with round-1's staging AND round 1's stream run —
-    the two ``coalesce(1)`` staging jobs also overlap EACH OTHER by
-    design (each is a single-task write; back-filling one's tail with
-    the other is the point, not an ordering accident) — but round 2 is
-    linked and run only after BOTH round 1 and its stage complete, so
-    round 1's stream never sees round-2 files.
+StreamDirs = collections.namedtuple("StreamDirs", "stage landing store ckpt")
 
-    ``stage_half(i) -> src_dir`` writes half ``i``;
-    ``feed_and_run(src_dir, tag)`` links the staged files into the
-    landing dir under ``tag`` and runs one availableNow round.
 
-    The staging thread runs under ``inheritable_thread_target`` where
-    available so it carries the submitting thread's JVM-local
-    properties (job group/description — pinned-thread mode does not
-    inherit them); and if round 1 raises while the staging job also
-    failed, the staging failure is chained as the cause instead of
-    being silently discarded with the dropped future (ADVICE r11).
-    """
-    from concurrent.futures import ThreadPoolExecutor
+@contextlib.contextmanager
+def stream_dirs(prefix: str):
+    """The temp dirs of one streaming entry, as a `StreamDirs`: ``stage``
+    (round writes), ``landing`` (the file source's input dir),
+    ``store`` (sketch stores, sinks, warehouses) and ``ckpt`` (the
+    query checkpoint). All four live under one temp root, removed on
+    exit — also when the entry raises."""
+    root = tempfile.mkdtemp(prefix=f"{prefix}_")
+    dirs = StreamDirs(*(os.path.join(root, d) for d in StreamDirs._fields))
+    for d in dirs:
+        os.mkdir(d)
+    try:
+        yield dirs
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
-    target = stage_half
-    try:  # carries job group/description into the worker thread
-        from pyspark import inheritable_thread_target
 
-        target = inheritable_thread_target(stage_half)
-    except Exception:
-        pass
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = pool.submit(target, 1)
+def link_data_files(src: str, landing: str, tag: str) -> None:
+    """Add ``src`` to a streaming landing dir without copying bytes:
+    hard-link its data files as ``{tag}_{k}{ext}``, falling back to a
+    copy when linking fails (cross-device temp dirs). ``src`` is one
+    file (the driver tables; link it under several tags to feed it
+    several times) or a Spark-written dir, whose ``.``/``_`` names
+    (``.crc``, ``_SUCCESS``) are skipped. The streaming file source
+    requires a directory (`basePath must be a directory`)."""
+    if os.path.isdir(src):
+        srcs = [
+            os.path.join(src, f)
+            for f in sorted(os.listdir(src))
+            if not f.startswith((".", "_"))
+        ]
+    else:
+        srcs = [src]
+    for k, s in enumerate(srcs):
+        dst = os.path.join(landing, f"{tag}_{k}{os.path.splitext(s)[1]}")
         try:
-            feed_and_run(stage_half(0), "r1")
+            os.link(s, dst)
+        except OSError:
+            shutil.copyfile(s, dst)
+
+
+def stage_round(df: DataFrame, out: str, fmt: str) -> str:
+    """Write one streaming round as ONE ``fmt`` file (``json`` or
+    ``parquet``) under ``out`` — one staged file is one data
+    micro-batch, so a round boundary is the only batch frontier."""
+    getattr(df.coalesce(1).write, fmt)(out)
+    return out
+
+
+def hash_halves(df: DataFrame, key: str, *cols: str) -> list[DataFrame]:
+    """The two rounds of a hash-split stream: ``df``'s rows with
+    ``portable_hash32(key) % 2 == 0`` then ``== 1``, projected to
+    ``cols`` (default: all). The DuckDB oracles restate the split as
+    ``CAST('0x'||substr(md5(CAST(key AS VARCHAR)),1,8) AS BIGINT) % 2``."""
+    half = portable_hash32(F.col(key).cast("string")) % 2
+    return [df.filter(half == i).select(*(cols or df.columns)) for i in (0, 1)]
+
+
+def overlap_two_rounds(dirs: StreamDirs, r1: DataFrame, r2: DataFrame | None,
+                       fmt: str, run: Callable[[str], None]) -> None:
+    """The two-round streaming protocol: stage round ``r1`` (see
+    `stage_round`), link it into ``dirs.landing``, ``run(landing)`` one
+    availableNow round; then the same for ``r2`` against the same
+    checkpoint. ``r2=None`` runs round 1 only — a skip, not an empty
+    second batch.
+
+    Round 2's staging write is independent of round 1, so it is
+    submitted concurrently with round 1's staging AND stream run
+    (guide §2.6: overlap independent jobs) — the two single-task
+    ``coalesce(1)`` writes overlap each other by design, back-filling
+    one job's tail with the other's work. Round 2 is linked and run
+    only after round 1 has returned and its own staging has finished,
+    so round 1's stream never sees round-2 files.
+
+    The staging thread runs under ``inheritable_thread_target(spark)``
+    and so carries the caller's job group, description and session
+    tags (pinned-thread mode does not inherit them). If round 1 raises
+    while round-2 staging also failed, the staging failure is chained
+    as the cause instead of being dropped with its future."""
+    def feed(src: str, tag: str) -> None:
+        link_data_files(src, dirs.landing, tag)
+        run(dirs.landing)
+
+    def stage(i: int, df: DataFrame) -> str:
+        return stage_round(df, os.path.join(dirs.stage, f"r{i}"), fmt)
+
+    if r2 is None:
+        feed(stage(1, r1), "r1")
+        return
+    target = inheritable_thread_target(r1.sparkSession)(stage)
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        fut = pool.submit(target, 2, r2)
+        try:
+            feed(stage(1, r1), "r1")
         except BaseException as exc:
             staged_err = fut.exception()  # waits; never discards silently
             if staged_err is not None and staged_err is not exc:
                 raise exc from staged_err
             raise
-        src1 = fut.result()
-    feed_and_run(src1, "r2")
+        src2 = fut.result()
+    feed(src2, "r2")
 
 
 def ts_to_ntz(df: DataFrame, col: str = "ts") -> DataFrame:

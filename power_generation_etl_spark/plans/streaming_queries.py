@@ -31,6 +31,13 @@ Determinism notes (why these shapes and not others):
   window, on-time row dropped, window emitted early/never) breaks the
   counts.
 
+Feed plumbing: every entry uses the one stream-feed scaffold in
+`plans/queries.py` — `stream_dirs` owns its stage/landing/store/
+checkpoint temp dirs, `link_data_files` adds files to the landing dir,
+and each two-round entry hands its round DataFrames, a staging format
+and a `run(landing)` callable to `overlap_two_rounds`. An entry body
+is only its query, its sink and its result read.
+
 Scale notes: both plans are the standard cluster shapes — file-source
 listing parallelizes per file; the windowed count is a streaming
 partial-agg + state-store merge keyed by (window, type) whose state is
@@ -45,53 +52,27 @@ from __future__ import annotations
 
 import itertools
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
 from power_generation_etl_spark.memo import PlanMemo
-
+from power_generation_etl_spark.operators.minhash import portable_hash32
 from power_generation_etl_spark.plans.queries import (
     T,
     _register,
+    hash_halves,
+    link_data_files,
     ntz_epoch_us,
     overlap_two_rounds,
+    stage_round,
+    stream_dirs,
     stream_scoped,
     ts_to_ntz,
 )
 
 _MEM_SEQ = itertools.count()
-
-
-def _landing(src: str, n_links: int) -> str:
-    """Stage a temp landing DIRECTORY holding `n_links` hard links to a
-    source parquet table — the streaming file source requires a
-    directory (`basePath must be a directory`), and the driver tables
-    are single files. A Spark-written source (a DIRECTORY of part
-    files, e.g. the empty-table mirrors) is handled by linking each
-    contained parquet file. Hard links, so no bytes are copied; falls
-    back to a real copy on cross-device temp dirs."""
-    landing = tempfile.mkdtemp(prefix="stream_landing_")
-    if os.path.isdir(src):
-        files = sorted(
-            f
-            for f in os.listdir(src)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-        srcs = [os.path.join(src, f) for f in files]
-    else:
-        srcs = [src]
-    for i in range(n_links):
-        for k, s in enumerate(srcs):
-            dst = os.path.join(landing, f"copy{i}_{k}.parquet")
-            try:
-                os.link(s, dst)
-            except OSError:
-                shutil.copyfile(s, dst)
-    return landing
 
 
 def _stream_events(spark: SparkSession, sf_dir_or_path: str):
@@ -135,10 +116,10 @@ def stream_hourly_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact DuckDB oracle. Window starts are reported as epoch-µs
     BIGINTs — timezone-free on both engines."""
     name = _mem_name("stream_hourly")
-    landing = _landing(f"{sf_dir}/events.parquet", 1)
-    try:
+    with stream_dirs("stream_hourly") as d:
+        link_data_files(f"{sf_dir}/events.parquet", d.landing, "c0")
         agg = (
-            _stream_events(spark, landing)
+            _stream_events(spark, d.landing)
             .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
             .agg(F.count(F.lit(1)).alias("n_events"))
         )
@@ -151,8 +132,6 @@ def stream_hourly_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
         q.stop()
-    finally:
-        shutil.rmtree(landing, ignore_errors=True)
     schema = "hour_us long, event_type string, n_events long"
     if not spark.catalog.tableExists(name):  # zero micro-batches ran
         return spark.createDataFrame([], schema)
@@ -204,7 +183,6 @@ def stream_dedup_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-ingest contract (`operators/dedupe.py::anti_join_new_rows` —
     reference src/database.py ON CONFLICT DO NOTHING), restated as
     exactly-once streaming intake."""
-    landing = _landing(f"{sf_dir}/events.parquet", 2)
     per_batch: dict[int, dict[str, int]] = {}
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -215,9 +193,11 @@ def stream_dedup_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         }
 
-    try:
+    with stream_dirs("stream_dedup") as d:
+        for tag in ("c0", "c1"):  # the SAME file, twice
+            link_data_files(f"{sf_dir}/events.parquet", d.landing, tag)
         deduped = (
-            _stream_events(spark, landing)
+            _stream_events(spark, d.landing)
             .select("event_id", "event_type")
             .dropDuplicates(["event_id"])
         )
@@ -229,8 +209,6 @@ def stream_dedup_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
         q.stop()
-    finally:
-        shutil.rmtree(landing, ignore_errors=True)
     schema = "event_type string, n_unique_events long"
     totals: dict[str, int] = {}
     for counts in per_batch.values():
@@ -261,31 +239,7 @@ _LATE_SQL = (
 
 
 def _late_flag():
-    return (
-        F.conv(
-            F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10
-        ).cast("bigint")
-        % _LATE_MOD
-        == 0
-    )
-
-
-def _link_into(landing: str, src_dir: str, prefix: str) -> None:
-    """Hard-link every data file of a Spark-written parquet dir into an
-    existing landing dir (the add-files-between-runs half of
-    `_landing`)."""
-    for k, f in enumerate(
-        sorted(
-            f
-            for f in os.listdir(src_dir)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-    ):
-        dst = os.path.join(landing, f"{prefix}_{k}.parquet")
-        try:
-            os.link(os.path.join(src_dir, f), dst)
-        except OSError:
-            shutil.copyfile(os.path.join(src_dir, f), dst)
+    return portable_hash32(F.col("event_id").cast("string")) % _LATE_MOD == 0
 
 
 @_register(
@@ -393,9 +347,6 @@ def stream_late_data_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "span with >=1 on-time row); the watermark oracle is "
             "undefined here"
         )
-    stage = tempfile.mkdtemp(prefix="stream_late_stage_")
-    landing = tempfile.mkdtemp(prefix="stream_late_landing_")
-    ckpt = tempfile.mkdtemp(prefix="stream_late_ckpt_")
     emitted: list = []
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -407,41 +358,30 @@ def stream_late_data_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).collect()
         )
 
-    def _run_round(schema) -> None:
-        agg = (
-            spark.readStream.schema(schema)
-            .parquet(landing)
-            .withWatermark("ts", _WM_DELAY)
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-        )
-        q = (
-            agg.writeStream.outputMode("append")
-            .foreachBatch(_sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
+    on_time = ev.filter(~F.col("late")).select("ts", "event_type")
+    late = ev.filter(F.col("late")).select("ts", "event_type")
+    with stream_dirs("stream_late") as d:
+        def _run_round(landing: str) -> None:
+            agg = (
+                spark.readStream.schema(on_time.schema)
+                .parquet(landing)
+                .withWatermark("ts", _WM_DELAY)
+                .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+                .agg(F.count(F.lit(1)).alias("n_events"))
+            )
+            q = (
+                agg.writeStream.outputMode("append")
+                .foreachBatch(_sink)
+                .option("checkpointLocation", d.ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            q.stop()
 
-    try:
-        on_dir = os.path.join(stage, "on_time")
-        late_dir = os.path.join(stage, "late")
-        ev.filter(~F.col("late")).select("ts", "event_type").coalesce(
-            1
-        ).write.parquet(on_dir)
-        ev.filter(F.col("late")).select("ts", "event_type").coalesce(
-            1
-        ).write.parquet(late_dir)
-        schema = spark.read.parquet(on_dir).schema
-        _link_into(landing, on_dir, "round1")
-        _run_round(schema)  # round 1: on-time rows, fresh checkpoint
-        _link_into(landing, late_dir, "round2")
-        _run_round(schema)  # round 2: late rows, RESTORED watermark/state
-    finally:
-        for d in (stage, landing, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
+        # round 1: on-time rows, fresh checkpoint; round 2: late rows,
+        # RESTORED watermark/state
+        overlap_two_rounds(d, on_time, late, "parquet", _run_round)
     schema_out = "hour_us long, event_type string, n_events long"
     rows = sorted(
         ((r["hour_us"], r["event_type"], r["n_events"]) for r in emitted),
@@ -502,59 +442,25 @@ def stream_kmv_event_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_kmv_cardinality,
     )
 
-    ev = T(spark, sf_dir, "events").select("event_id", "event_type", "user_id")
-    half = (
-        F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % 2
-    )
-    stage = tempfile.mkdtemp(prefix="kmv_stage_")
-    landing = tempfile.mkdtemp(prefix="kmv_landing_")
-    store = tempfile.mkdtemp(prefix="kmv_store_")
-    ckpt = tempfile.mkdtemp(prefix="kmv_ckpt_")
-    schema = "event_type string, user_id long"
-
-    def _stage_half(i: int) -> str:
-        out = os.path.join(stage, f"half{i}")
-        ev.filter(half == i).select("event_type", "user_id").coalesce(
-            1
-        ).write.json(out)
-        return out
-
-    def _feed_and_run(src: str, tag: str) -> None:
-        for k, f in enumerate(
-            sorted(
-                f
-                for f in os.listdir(src)
-                if f.endswith(".json") and not f.startswith((".", "_"))
-            )
-        ):
-            try:
-                os.link(os.path.join(src, f), os.path.join(landing, f"{tag}_{k}.json"))
-            except OSError:
-                shutil.copyfile(
-                    os.path.join(src, f), os.path.join(landing, f"{tag}_{k}.json")
-                )
-        q = stream_kmv_cardinality(
-            spark, landing, store, ckpt,
-            group_col="event_type", value_col="user_id",
-            schema=schema, k=_KMV_K,
-        )
-        q.awaitTermination()
-        q.stop()
-
+    ev = T(spark, sf_dir, "events")
+    r1, r2 = hash_halves(ev, "event_id", "event_type", "user_id")
     out_schema = "grp string, kmv_estimate long"
-    try:
-        # round 1 seeds kmv_v0; round 2 MERGES v0 + new. Round-2
-        # staging overlaps round 1's stream (guide §2.6).
-        overlap_two_rounds(_stage_half, _feed_and_run)
+    with stream_dirs("kmv") as d:
+        def _run(landing: str) -> None:
+            q = stream_kmv_cardinality(
+                spark, landing, d.store, d.ckpt,
+                group_col="event_type", value_col="user_id",
+                schema="event_type string, user_id long", k=_KMV_K,
+            )
+            q.awaitTermination()
+            q.stop()
+
+        # round 1 seeds kmv_v0; round 2 MERGES v0 + new
+        overlap_two_rounds(d, r1, r2, "json", _run)
         try:
-            rows = kmv_estimate_from_store(spark, store, k=_KMV_K).collect()
+            rows = kmv_estimate_from_store(spark, d.store, k=_KMV_K).collect()
         except ValueError:  # empty corpus: zero batches, no store
             return spark.createDataFrame([], out_schema)
-    finally:
-        for d in (stage, landing, store, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
     return spark.createDataFrame(
         [(r["grp"], r["kmv_estimate"]) for r in rows], out_schema
     )
@@ -602,47 +508,6 @@ _MG_SQL = f"""
     """
 
 
-def _stage_event_halves_json(spark, sf_dir: str, stage: str, cols):
-    """Write events split by md5(event_id)%2 into two JSON dirs — the
-    shared two-round feed for the sketch-store entries. The two half
-    writes are independent jobs, so they run overlapped (guide §2.6:
-    back-fill one job's single-task tail with the other's work)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    ev = T(spark, sf_dir, "events").select("event_id", *cols)
-
-    def _write(i: int) -> str:
-        out = os.path.join(stage, f"half{i}")
-        half = (
-            F.conv(
-                F.substring(F.md5(F.col("event_id").cast("string")), 1, 8),
-                16, 10,
-            ).cast("bigint")
-            % 2
-        )
-        ev.filter(half == i).select(*cols).coalesce(1).write.json(out)
-        return out
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        return list(pool.map(_write, (0, 1)))
-
-
-def _link_json(src: str, landing: str, tag: str) -> None:
-    for k, f in enumerate(
-        sorted(
-            f
-            for f in os.listdir(src)
-            if f.endswith(".json") and not f.startswith((".", "_"))
-        )
-    ):
-        try:
-            os.link(os.path.join(src, f), os.path.join(landing, f"{tag}_{k}.json"))
-        except OSError:
-            shutil.copyfile(
-                os.path.join(src, f), os.path.join(landing, f"{tag}_{k}.json")
-            )
-
-
 @_register("stream_mg_heavy_users", _MG_SQL)
 @stream_scoped
 def stream_mg_heavy_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -669,29 +534,25 @@ def stream_mg_heavy_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_heavy_hitters,
     )
 
-    stage = tempfile.mkdtemp(prefix="mg_stage_")
-    landing = tempfile.mkdtemp(prefix="mg_landing_")
-    store = tempfile.mkdtemp(prefix="mg_store_")
-    ckpt = tempfile.mkdtemp(prefix="mg_ckpt_")
+    ev = T(spark, sf_dir, "events")
+    r1, r2 = hash_halves(ev, "event_id", "user_id")
     out_schema = "key long, est_count long, max_err long"
-    try:
-        halves = _stage_event_halves_json(spark, sf_dir, stage, ["user_id"])
-        for i, src in enumerate(halves):
-            _link_json(src, landing, f"r{i}")
+    with stream_dirs("mg") as d:
+        def _run(landing: str) -> None:
             q = stream_heavy_hitters(
-                spark, landing, store, ckpt,
+                spark, landing, d.store, d.ckpt,
                 key_col="user_id", schema="user_id long",
                 capacity=_MG_CAP,
             )
             q.awaitTermination()
             q.stop()
+
+        # MG merge is order-defined: half 0 must be batch 0
+        overlap_two_rounds(d, r1, r2, "json", _run)
         try:
-            rows = heavy_hitters_from_store(spark, store).collect()
+            rows = heavy_hitters_from_store(spark, d.store).collect()
         except ValueError:  # empty corpus: zero batches, no store
             return spark.createDataFrame([], out_schema)
-    finally:
-        for d in (stage, landing, store, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
     return spark.createDataFrame(
         [(r["key"], r["est_count"], r["max_err"]) for r in rows], out_schema
     )
@@ -740,7 +601,6 @@ def stream_interval_join_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.timestamp_micros(ntz_epoch_us(F.col("ts"))).alias("ts"),
         "event_type",
     )
-    stage = tempfile.mkdtemp(prefix="ij_stage_")
     acc: dict[tuple[int, int], tuple[int, int]] = {}
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -756,20 +616,14 @@ def stream_interval_join_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             # keyed by (batch, user): a retried batch overwrites itself
             acc[(int(batch_id), r["user_id"])] = (int(r["n"]), int(r["lag"]))
 
-    try:
-        cdir = os.path.join(stage, "clicks")
-        edir = os.path.join(stage, "errors")
-        ev.filter(F.col("event_type") == "click").select(
-            "user_id", "ts"
-        ).coalesce(1).write.parquet(cdir)
-        ev.filter(F.col("event_type") == "error").select(
-            "user_id", "ts"
-        ).coalesce(1).write.parquet(edir)
-        schema = spark.read.parquet(cdir).schema
-        clicks = spark.readStream.schema(schema).parquet(cdir)
-        errors = spark.readStream.schema(schema).parquet(edir)
+    with stream_dirs("ij") as d:
+        sides = []
+        for kind in ("click", "error"):  # one staged file per side
+            side = ev.filter(F.col("event_type") == kind).select("user_id", "ts")
+            out = stage_round(side, os.path.join(d.stage, kind), "parquet")
+            sides.append(spark.readStream.schema(side.schema).parquet(out))
         j = stream_interval_join(
-            clicks, errors, watermark="10 minutes", window="30 minutes"
+            *sides, watermark="10 minutes", window="30 minutes"
         )
         q = (
             j.writeStream.outputMode("append")
@@ -779,8 +633,6 @@ def stream_interval_join_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
         q.stop()
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
     totals: dict[int, list[int]] = {}
     for (_b, uid), (n, lag) in acc.items():
         t = totals.setdefault(uid, [0, 0])
@@ -821,31 +673,24 @@ def stream_hll_event_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_hll_cardinality,
     )
 
-    stage = tempfile.mkdtemp(prefix="hll_stage_")
-    landing = tempfile.mkdtemp(prefix="hll_landing_")
-    store = tempfile.mkdtemp(prefix="hll_store_")
-    ckpt = tempfile.mkdtemp(prefix="hll_ckpt_")
+    ev = T(spark, sf_dir, "events")
+    r1, r2 = hash_halves(ev, "event_id", "event_type", "user_id")
     out_schema = "grp string, v_empty long, z_scaled long, hll_estimate double"
-    try:
-        halves = _stage_event_halves_json(
-            spark, sf_dir, stage, ["event_type", "user_id"]
-        )
-        for i, src in enumerate(halves):
-            _link_json(src, landing, f"r{i}")
+    with stream_dirs("hll") as d:
+        def _run(landing: str) -> None:
             q = stream_hll_cardinality(
-                spark, landing, store, ckpt,
+                spark, landing, d.store, d.ckpt,
                 group_col="event_type", value_col="user_id",
                 schema="event_type string, user_id long",
             )
             q.awaitTermination()
             q.stop()
+
+        overlap_two_rounds(d, r1, r2, "json", _run)
         try:
-            rows = hll_estimate_from_store(spark, store).collect()
+            rows = hll_estimate_from_store(spark, d.store).collect()
         except ValueError:  # empty corpus: zero batches, no store
             return spark.createDataFrame([], out_schema)
-    finally:
-        for d in (stage, landing, store, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
     return spark.createDataFrame(
         [(r["grp"], r["v_empty"], r["z_scaled"], r["hll_estimate"]) for r in rows],
         out_schema,
@@ -905,25 +750,21 @@ def stream_type_drift_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
         type_drift_alerts,
     )
 
-    stage = tempfile.mkdtemp(prefix="drift_stage_")
-    landing = tempfile.mkdtemp(prefix="drift_landing_")
-    store = tempfile.mkdtemp(prefix="drift_store_")
-    ckpt = tempfile.mkdtemp(prefix="drift_ckpt_")
+    ev = T(spark, sf_dir, "events")
+    r1, r2 = hash_halves(ev, "event_id", "event_type")
     out_schema = "batch_id long, n_rows long, drift_ppm long"
-    try:
-        halves = _stage_event_halves_json(spark, sf_dir, stage, ["event_type"])
-        for i, src in enumerate(halves):
-            _link_json(src, landing, f"r{i}")
+    with stream_dirs("drift") as d:
+        def _run(landing: str) -> None:
             q = stream_type_drift(
-                spark, landing, store, ckpt,
+                spark, landing, d.store, d.ckpt,
                 key_col="event_type", schema="event_type string",
             )
             q.awaitTermination()
             q.stop()
-        rows = type_drift_alerts(spark, store).collect()
-    finally:
-        for d in (stage, landing, store, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
+
+        # round 1 seeds the baseline, round 2 raises the alert
+        overlap_two_rounds(d, r1, r2, "json", _run)
+        rows = type_drift_alerts(spark, d.store).collect()
     return spark.createDataFrame(
         [(r["batch_id"], r["n_rows"], r["drift_ppm"]) for r in rows], out_schema
     )
@@ -1043,7 +884,8 @@ def _run_session_rounds(spark: SparkSession, ev, cutoff: int, hi: int,
                         native: bool):
     """Stage the time-split rounds and drive the sessionizer (stateful
     pandas or native session_window) through two availableNow runs
-    against ONE checkpoint; returns the emitted rows as an ordered,
+    against ONE checkpoint (one run when the cutoff is the last event
+    time); returns the emitted rows as an ordered,
     localCheckpointed DataFrame (user_id, start_us, end_us, n_events)
     — or None when zero micro-batches ran. Retry-idempotent: each
     batch overwrites its own batch=<id> parquet dir in the sink."""
@@ -1052,91 +894,54 @@ def _run_session_rounds(spark: SparkSession, ev, cutoff: int, hi: int,
         sessionize_native,
     )
 
-    stage = tempfile.mkdtemp(prefix="sess_stage_")
-    landing = tempfile.mkdtemp(prefix="sess_landing_")
-    ckpt = tempfile.mkdtemp(prefix="sess_ckpt_")
-    sink_dir = tempfile.mkdtemp(prefix="sess_sink_")
+    cols = ["ts", "user_id", "value"]
+    r1 = ev.filter(F.col("t_us") <= cutoff).select(*cols)
+    r2 = ev.filter(F.col("t_us") > cutoff).select(*cols) if cutoff < hi else None
+    with stream_dirs("sess") as d:
+        def _sink(batch_df: DataFrame, batch_id: int) -> None:
+            # Parquet per batch id (overwrite → retry-idempotent), NOT a
+            # driver collect: the emitted set is row-scale (one row per
+            # closed session), so localizing it through Python tuples
+            # paid two full JVM↔Python marshallings per round (guide
+            # §5). The rows stay in executor space end to end.
+            out = batch_df.select(
+                "user_id",
+                F.unix_micros("session_start").alias("start_us"),
+                (
+                    F.unix_micros("session_end") - F.lit(_SESS_GAP_US)
+                    if native
+                    else F.unix_micros("session_end")
+                ).alias("end_us"),
+                "n_events",
+            )
+            out.write.mode("overwrite").parquet(
+                os.path.join(d.store, f"batch={int(batch_id)}")
+            )
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        # Parquet per batch id (overwrite → retry-idempotent), NOT a
-        # driver collect: the emitted set is row-scale (one row per
-        # closed session), so localizing it through Python tuples paid
-        # two full JVM↔Python marshallings per round (guide §5). The
-        # rows stay in executor space end to end.
-        out = batch_df.select(
-            "user_id",
-            F.unix_micros("session_start").alias("start_us"),
-            (
-                F.unix_micros("session_end") - F.lit(_SESS_GAP_US)
-                if native
-                else F.unix_micros("session_end")
-            ).alias("end_us"),
-            "n_events",
-        )
-        out.write.mode("overwrite").parquet(
-            os.path.join(sink_dir, f"batch={int(batch_id)}")
-        )
+        def _run(landing: str) -> None:
+            stream = spark.readStream.schema(r1.schema).parquet(landing)
+            op = sessionize_native if native else sessionize
+            q = (
+                op(stream, watermark="10 minutes")
+                .writeStream.outputMode("append")
+                .foreachBatch(_sink)
+                .option("checkpointLocation", d.ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            q.stop()
 
-    def _run_round(schema) -> None:
-        stream = spark.readStream.schema(schema).parquet(landing)
-        op = sessionize_native if native else sessionize
-        q = (
-            op(stream, watermark="10 minutes")
-            .writeStream.outputMode("append")
-            .foreachBatch(_sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
-
-    try:
-        cols = ["ts", "user_id", "value"]
-        r1 = os.path.join(stage, "r1")
-        r2 = os.path.join(stage, "r2")
-        # Round-2 staging is independent of round 1 — overlap it with
-        # round 1's staging AND stream run (guide §2.6), linking only
-        # after both complete (same protocol as overlap_two_rounds).
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _stage_r2() -> None:
-            ev.filter(F.col("t_us") > cutoff).select(*cols).coalesce(
-                1
-            ).write.parquet(r2)
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            fut = pool.submit(_stage_r2) if cutoff < hi else None
-            ev.filter(F.col("t_us") <= cutoff).select(*cols).coalesce(
-                1
-            ).write.parquet(r1)
-            schema = spark.read.parquet(r1).schema
-            _link_into(landing, r1, "round1")
-            try:
-                _run_round(schema)
-            except BaseException as exc:
-                err = fut.exception() if fut is not None else None
-                if err is not None and err is not exc:
-                    raise exc from err
-                raise
-            if fut is not None:
-                fut.result()
-        if cutoff < hi:
-            _link_into(landing, r2, "round2")
-            _run_round(schema)
+        overlap_two_rounds(d, r1, r2, "parquet", _run)
         try:
-            emitted = (
-                spark.read.parquet(sink_dir)
+            return (
+                spark.read.parquet(d.store)
                 .select("user_id", "start_us", "end_us", "n_events")
                 .orderBy("user_id", "start_us", "end_us", "n_events")
-                .localCheckpoint(eager=True)  # detach before sink_dir dies
+                .localCheckpoint(eager=True)  # detach before the dir dies
             )
         except AnalysisException:  # zero batches wrote (empty mirror)
-            emitted = None
-    finally:
-        for d in (stage, landing, ckpt, sink_dir):
-            shutil.rmtree(d, ignore_errors=True)
-    return emitted
+            return None
 
 
 _SESS_SCHEMA_OUT = "user_id long, start_us long, end_us long, n_events long"
@@ -1253,9 +1058,9 @@ def stream_transition_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     if lo is None:
         return spark.createDataFrame([], out_schema)
     cutoff = (lo + hi) // 2
-    stage = tempfile.mkdtemp(prefix="trans_stage_")
-    landing = tempfile.mkdtemp(prefix="trans_landing_")
-    ckpt = tempfile.mkdtemp(prefix="trans_ckpt_")
+    cols = ["event_id", "ts", "user_id", "event_type"]
+    r1 = ev.filter(F.col("t_us") <= cutoff).select(*cols)
+    r2 = ev.filter(F.col("t_us") > cutoff).select(*cols) if cutoff < hi else None
     acc: dict = {}
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -1266,56 +1071,23 @@ def stream_transition_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         }
 
-    def _run_round(schema) -> None:
-        q = (
-            stream_transition_counts(
-                spark.readStream.schema(schema).parquet(landing),
-                watermark="10 minutes",
+    with stream_dirs("trans") as d:
+        def _run(landing: str) -> None:
+            q = (
+                stream_transition_counts(
+                    spark.readStream.schema(r1.schema).parquet(landing),
+                    watermark="10 minutes",
+                )
+                .writeStream.outputMode("append")
+                .foreachBatch(_sink)
+                .option("checkpointLocation", d.ckpt)
+                .trigger(availableNow=True)
+                .start()
             )
-            .writeStream.outputMode("append")
-            .foreachBatch(_sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
+            q.awaitTermination()
+            q.stop()
 
-    try:
-        cols = ["event_id", "ts", "user_id", "event_type"]
-        r1 = os.path.join(stage, "r1")
-        r2 = os.path.join(stage, "r2")
-        # Overlap round-2 staging with round 1 (guide §2.6) — same
-        # protocol and error chaining as _run_session_rounds.
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _stage_r2() -> None:
-            ev.filter(F.col("t_us") > cutoff).select(*cols).coalesce(
-                1
-            ).write.parquet(r2)
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            fut = pool.submit(_stage_r2) if cutoff < hi else None
-            ev.filter(F.col("t_us") <= cutoff).select(*cols).coalesce(
-                1
-            ).write.parquet(r1)
-            schema = spark.read.parquet(r1).schema
-            _link_into(landing, r1, "round1")
-            try:
-                _run_round(schema)
-            except BaseException as exc:
-                err = fut.exception() if fut is not None else None
-                if err is not None and err is not exc:
-                    raise exc from err
-                raise
-            if fut is not None:
-                fut.result()
-        if cutoff < hi:
-            _link_into(landing, r2, "round2")
-            _run_round(schema)
-    finally:
-        for d in (stage, landing, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
+        overlap_two_rounds(d, r1, r2, "parquet", _run)
     totals: dict = {}
     for counts in acc.values():
         for k, n in counts.items():
@@ -1369,63 +1141,30 @@ def stream_quantile_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_bottomk_sample,
     )
 
-    ev = T(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    half = (
-        F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % 2
-    )
-    stage = tempfile.mkdtemp(prefix="qs_stage_")
-    landing = tempfile.mkdtemp(prefix="qs_landing_")
-    store = tempfile.mkdtemp(prefix="qs_store_")
-    ckpt = tempfile.mkdtemp(prefix="qs_ckpt_")
-    schema = "event_type string, event_id long, value double"
-
-    def _stage_half(i: int) -> str:
-        out = os.path.join(stage, f"half{i}")
-        ev.filter(half == i).select("event_type", "event_id", "value").coalesce(
-            1
-        ).write.json(out)
-        return out
-
-    def _feed_and_run(src: str, tag: str) -> None:
-        for k, f in enumerate(
-            sorted(
-                f
-                for f in os.listdir(src)
-                if f.endswith(".json") and not f.startswith((".", "_"))
-            )
-        ):
-            try:
-                os.link(os.path.join(src, f), os.path.join(landing, f"{tag}_{k}.json"))
-            except OSError:
-                shutil.copyfile(
-                    os.path.join(src, f), os.path.join(landing, f"{tag}_{k}.json")
-                )
-        q = stream_bottomk_sample(
-            spark, landing, store, ckpt,
-            group_col="event_type", key_col="event_id", value_col="value",
-            schema=schema, k=_QS_K,
-        )
-        q.awaitTermination()
-        q.stop()
-
+    ev = T(spark, sf_dir, "events")
+    r1, r2 = hash_halves(ev, "event_id", "event_type", "event_id", "value")
     out_schema = "grp string, n_sample long, " + ", ".join(
         f"p{p} long" for p in _QS_PCTS
     )
-    try:
-        # round 1 seeds qs_v0; round 2 MERGES v0 + new. Round-2
-        # staging overlaps round 1's stream (guide §2.6).
-        overlap_two_rounds(_stage_half, _feed_and_run)
+    with stream_dirs("qs") as d:
+        def _run(landing: str) -> None:
+            q = stream_bottomk_sample(
+                spark, landing, d.store, d.ckpt,
+                group_col="event_type", key_col="event_id", value_col="value",
+                schema="event_type string, event_id long, value double",
+                k=_QS_K,
+            )
+            q.awaitTermination()
+            q.stop()
+
+        # round 1 seeds qs_v0; round 2 MERGES v0 + new
+        overlap_two_rounds(d, r1, r2, "json", _run)
         try:
             rows = quantiles_from_store(
-                spark, store, _QS_PCTS, value_scale=_QS_SCALE
+                spark, d.store, _QS_PCTS, value_scale=_QS_SCALE
             ).collect()
         except ValueError:  # empty corpus: zero batches, no store
             return spark.createDataFrame([], out_schema)
-    finally:
-        for d in (stage, landing, store, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
     return spark.createDataFrame(
         [tuple(r) for r in rows], out_schema
     )
@@ -1493,55 +1232,23 @@ def stream_ivf_ingest_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_schema = "cell int, n_vectors long, vecid_sum long"
     if not seeds:  # empty corpus: no centroids, stable-schema empty
         return spark.createDataFrame([], out_schema)
-    half = (
-        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % 2
-    )
-    stage = tempfile.mkdtemp(prefix="ivf_stage_")
-    landing = tempfile.mkdtemp(prefix="ivf_landing_")
-    store = tempfile.mkdtemp(prefix="ivf_store_")
-    ckpt = tempfile.mkdtemp(prefix="ivf_ckpt_")
-    schema = "vec_id long, embedding array<double>"
-
-    def _stage_half(i: int) -> str:
-        out = os.path.join(stage, f"half{i}")
-        emb.filter(half == i).coalesce(1).write.json(out)
-        return out
-
-    def _feed_and_run(src: str, tag: str) -> None:
-        for k, f in enumerate(
-            sorted(
-                f
-                for f in os.listdir(src)
-                if f.endswith(".json") and not f.startswith((".", "_"))
+    r1, r2 = hash_halves(emb, "vec_id")
+    with stream_dirs("ivf") as d:
+        def _run(landing: str) -> None:
+            q = stream_ivf_ingest(
+                spark, landing, d.store, d.ckpt,
+                id_col="vec_id", vec_col="embedding",
+                centroids=seeds, schema="vec_id long, embedding array<double>",
             )
-        ):
-            try:
-                os.link(os.path.join(src, f), os.path.join(landing, f"{tag}_{k}.json"))
-            except OSError:
-                shutil.copyfile(
-                    os.path.join(src, f), os.path.join(landing, f"{tag}_{k}.json")
-                )
-        q = stream_ivf_ingest(
-            spark, landing, store, ckpt,
-            id_col="vec_id", vec_col="embedding",
-            centroids=seeds, schema=schema,
-        )
-        q.awaitTermination()
-        q.stop()
+            q.awaitTermination()
+            q.stop()
 
-    try:
-        # round 1 shards ivf_b0; round 2 appends ivf_b1. Round-2
-        # staging overlaps round 1's stream (guide §2.6).
-        overlap_two_rounds(_stage_half, _feed_and_run)
+        # round 1 shards ivf_b0; round 2 appends ivf_b1
+        overlap_two_rounds(d, r1, r2, "json", _run)
         try:
-            rows = ivf_cells_from_store(spark, store).collect()
+            rows = ivf_cells_from_store(spark, d.store).collect()
         except ValueError:  # zero batches (shouldn't happen: seeds exist)
             return spark.createDataFrame([], out_schema)
-    finally:
-        for d in (stage, landing, store, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
     return spark.createDataFrame([tuple(r) for r in rows], out_schema)
 
 
@@ -1594,53 +1301,22 @@ def stream_expectations_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
             "o_orderpriority"]
     o = T(spark, sf_dir, "orders").select(*cols)
-    half = (
-        F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % 2
-    )
-    stage = tempfile.mkdtemp(prefix="qx_stage_")
-    landing = tempfile.mkdtemp(prefix="qx_landing_")
-    store = tempfile.mkdtemp(prefix="qx_store_")
-    ckpt = tempfile.mkdtemp(prefix="qx_ckpt_")
+    r1, r2 = hash_halves(o, "o_orderkey")
     schema = ("o_orderkey long, o_custkey long, o_orderstatus string, "
               "o_totalprice double, o_orderpriority string")
-
-    def _stage_half(i: int) -> str:
-        out = os.path.join(stage, f"half{i}")
-        o.filter(half == i).coalesce(1).write.json(out)
-        return out
-
-    def _feed_and_run(src: str, tag: str) -> None:
-        for k, f in enumerate(
-            sorted(
-                f
-                for f in os.listdir(src)
-                if f.endswith(".json") and not f.startswith((".", "_"))
-            )
-        ):
-            try:
-                os.link(os.path.join(src, f), os.path.join(landing, f"{tag}_{k}.json"))
-            except OSError:
-                shutil.copyfile(
-                    os.path.join(src, f), os.path.join(landing, f"{tag}_{k}.json")
-                )
-        q = stream_expectations(spark, landing, store, ckpt, suite, schema)
-        q.awaitTermination()
-        q.stop()
-
     out_schema = "check_name string, metric long, passed int"
-    try:
-        # round 1 seeds qx_v0; round 2 MERGES v0 + new. Round-2
-        # staging overlaps round 1's stream (guide §2.6).
-        overlap_two_rounds(_stage_half, _feed_and_run)
+    with stream_dirs("qx") as d:
+        def _run(landing: str) -> None:
+            q = stream_expectations(spark, landing, d.store, d.ckpt, suite, schema)
+            q.awaitTermination()
+            q.stop()
+
+        # round 1 seeds qx_v0; round 2 MERGES v0 + new
+        overlap_two_rounds(d, r1, r2, "json", _run)
         try:
-            rows = expectations_from_store(spark, store, suite).collect()
+            rows = expectations_from_store(spark, d.store, suite).collect()
         except ValueError:  # empty corpus: zero batches, no store
             return spark.createDataFrame([], out_schema)
-    finally:
-        for d in (stage, landing, store, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
     return spark.createDataFrame([tuple(r) for r in rows], out_schema)
 
 
@@ -1683,13 +1359,13 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's crosswalk enrichment joins (src/database.py drift
     report) in streaming form."""
     name = _mem_name("stream_enrich")
-    landing = _landing(f"{sf_dir}/events.parquet", 1)
     dim = (
         T(spark, sf_dir, "customer")
         .select(F.col("c_custkey"), F.col("c_mktsegment").alias("segment"))
     )
-    try:
-        joined = _stream_events(spark, landing).join(
+    with stream_dirs("stream_enrich") as d:
+        link_data_files(f"{sf_dir}/events.parquet", d.landing, "c0")
+        joined = _stream_events(spark, d.landing).join(
             dim, F.col("user_id") == F.col("c_custkey"), "inner"
         )
         agg = joined.groupBy("segment", "event_type").agg(
@@ -1707,8 +1383,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
         q.stop()
-    finally:
-        shutil.rmtree(landing, ignore_errors=True)
     schema = "segment string, event_type string, n_events long, sum_cents long"
     if not spark.catalog.tableExists(name):  # zero micro-batches ran
         return spark.createDataFrame([], schema)

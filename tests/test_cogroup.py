@@ -6,6 +6,8 @@ depend on how keys hash into kernel invocations)."""
 
 from __future__ import annotations
 
+import pytest
+
 from power_generation_etl_spark.operators.grouped import (
     cogroup_activity,
     sequence_profile,
@@ -143,3 +145,14 @@ def test_hot_key_routing_identical_cogroup(spark):
     base = run(0)
     assert base == run(1)  # every key hot (combined-rows counting)
     assert base == run(3)  # key 1 hot (2 orders + 3 events), others cold
+
+
+@pytest.mark.parametrize("raw", ["abc", "inf", "-inf"])
+def test_hot_key_threshold_env_rejects_non_finite(monkeypatch, raw):
+    """A malformed or non-finite SPARK_ETL_HOTKEY_THRESHOLD fails with
+    the descriptive ValueError, not a bare OverflowError from int()."""
+    from power_generation_etl_spark.operators.grouped import _hot_threshold
+
+    monkeypatch.setenv("SPARK_ETL_HOTKEY_THRESHOLD", raw)
+    with pytest.raises(ValueError, match="SPARK_ETL_HOTKEY_THRESHOLD"):
+        _hot_threshold(None)

@@ -11,13 +11,22 @@ from __future__ import annotations
 
 import hashlib
 import os
+import threading
+import time
+import warnings
 
 import pytest
 from pyspark.sql import functions as F
 
 from power_generation_etl_spark.operators import multimodal as mm
 from power_generation_etl_spark.plans import media_queries as mq
+from power_generation_etl_spark.plans import queries
 from power_generation_etl_spark.plans import streaming_queries as sq
+from power_generation_etl_spark.plans.queries import (
+    link_data_files,
+    overlap_two_rounds,
+    stream_dirs,
+)
 
 
 def _md5_bytes(text: str, suffix: str) -> bytes:
@@ -165,18 +174,13 @@ class TestStreamingPlumbing:
     def test_landing_single_file(self, tmp_path):
         src = tmp_path / "one.parquet"
         src.write_bytes(b"x" * 10)
-        landing = sq._landing(str(src), 2)
-        try:
-            names = sorted(os.listdir(landing))
-            assert len(names) == 2
-            assert all(
-                (os.path.getsize(os.path.join(landing, n)) == 10)
-                for n in names
-            )
-        finally:
-            import shutil
-
-            shutil.rmtree(landing, ignore_errors=True)
+        landing = tmp_path / "landing"
+        landing.mkdir()
+        for tag in ("c0", "c1"):
+            link_data_files(str(src), str(landing), tag)
+        names = sorted(os.listdir(landing))
+        assert names == ["c0_0.parquet", "c1_0.parquet"]
+        assert all(os.path.getsize(landing / n) == 10 for n in names)
 
     def test_landing_directory_source_links_parts(self, tmp_path):
         src = tmp_path / "tbl.parquet"
@@ -184,14 +188,16 @@ class TestStreamingPlumbing:
         (src / "part-0.parquet").write_bytes(b"a")
         (src / "part-1.parquet").write_bytes(b"bb")
         (src / "_SUCCESS").write_bytes(b"")  # must be skipped
-        landing = sq._landing(str(src), 2)
-        try:
-            names = sorted(os.listdir(landing))
-            assert len(names) == 4  # 2 parts × 2 copies, no _SUCCESS
-        finally:
-            import shutil
-
-            shutil.rmtree(landing, ignore_errors=True)
+        (src / ".part-0.parquet.crc").write_bytes(b"")  # must be skipped
+        landing = tmp_path / "landing"
+        landing.mkdir()
+        for tag in ("c0", "c1"):
+            link_data_files(str(src), str(landing), tag)
+        names = sorted(os.listdir(landing))
+        # 2 parts × 2 copies, no _SUCCESS / .crc
+        assert names == [
+            "c0_0.parquet", "c0_1.parquet", "c1_0.parquet", "c1_1.parquet"
+        ]
 
     def test_dedup_counts_match_single_copy(self, spark, sf_dir):
         """The dedup entry's whole point: two linked copies stream in,
@@ -205,6 +211,115 @@ class TestStreamingPlumbing:
         )
         expect = {r["event_type"]: r["count"] for r in base.collect()}
         assert got == expect
+
+
+class TestTwoRoundProtocol:
+    """`overlap_two_rounds` with its staging write faked (module-global
+    `queries.stage_round` patched) and a fake `run(landing)`: the
+    protocol's ordering, error chaining, skip and thread context."""
+
+    @staticmethod
+    def _stage(events, fail=None, delay=()):
+        def stage(df, out, fmt):
+            rnd = os.path.basename(out)  # "r1" / "r2"
+            if rnd in delay:
+                time.sleep(0.5)
+            if rnd == fail:
+                raise RuntimeError(f"staging {rnd} failed")
+            os.mkdir(out)
+            for name in ("part-0.json", "_SUCCESS"):
+                open(os.path.join(out, name), "w").close()
+            events.append(("staged", rnd))
+            return out
+
+        return stage
+
+    def test_round1_error_chains_round2_staging_error(self, spark, monkeypatch):
+        monkeypatch.setattr(queries, "stage_round", self._stage([], fail="r2"))
+
+        def run(landing):
+            raise ValueError("round 1 failed")
+
+        with stream_dirs("test_two_round") as d:
+            with pytest.raises(ValueError) as ei:
+                overlap_two_rounds(d, spark.range(1), spark.range(1), "json", run)
+        assert isinstance(ei.value.__cause__, RuntimeError)
+        assert "staging r2 failed" in str(ei.value.__cause__)
+
+    @pytest.mark.parametrize("slow", ["stage_r2", "run_r1"])
+    def test_round2_waits_for_round1_and_its_staging(
+        self, spark, monkeypatch, slow
+    ):
+        events = []
+        monkeypatch.setattr(
+            queries, "stage_round",
+            self._stage(events, delay=("r2",) if slow == "stage_r2" else ()),
+        )
+
+        def run(landing):
+            if slow == "run_r1" and not any(e[0] == "run" for e in events):
+                time.sleep(0.5)  # round-2 staging finishes meanwhile
+            events.append(("run", sorted(os.listdir(landing))))
+
+        with stream_dirs("test_two_round") as d:
+            overlap_two_rounds(d, spark.range(1), spark.range(1), "json", run)
+        runs = [e for e in events if e[0] == "run"]
+        assert runs == [
+            ("run", ["r1_0.json"]),
+            ("run", ["r1_0.json", "r2_0.json"]),
+        ]
+        assert events.index(("staged", "r2")) < events.index(runs[1])
+
+    def test_absent_round2_runs_exactly_one_round(self, spark, monkeypatch):
+        events = []
+        monkeypatch.setattr(queries, "stage_round", self._stage(events))
+        with stream_dirs("test_two_round") as d:
+            overlap_two_rounds(
+                d, spark.range(1), None, "json",
+                lambda landing: events.append(("run", os.listdir(landing))),
+            )
+        assert events == [("staged", "r1"), ("run", ["r1_0.json"])]
+
+    def test_staging_thread_inherits_job_group_and_tags(
+        self, spark, monkeypatch
+    ):
+        seen = {}
+        stage = self._stage([])
+
+        def spy(df, out, fmt):
+            if out.endswith("r2"):
+                seen["thread"] = threading.get_ident()
+                seen["group"] = spark.sparkContext.getLocalProperty(
+                    "spark.jobGroup.id"
+                )
+                seen["tags"] = spark.getTags()
+            return stage(df, out, fmt)
+
+        monkeypatch.setattr(queries, "stage_round", spy)
+        spark.sparkContext.setJobGroup("two-round-group", "protocol test")
+        spark.addTag("two-round-tag")
+        try:
+            with warnings.catch_warnings(record=True) as caught:
+                warnings.simplefilter("always")
+                with stream_dirs("test_two_round") as d:
+                    overlap_two_rounds(
+                        d, spark.range(1), spark.range(1), "json",
+                        lambda landing: None,
+                    )
+        finally:
+            spark.removeTag("two-round-tag")
+            spark.sparkContext._jsc.clearJobGroup()
+        assert seen["thread"] != threading.get_ident()
+        assert seen["group"] == "two-round-group"
+        assert "two-round-tag" in seen["tags"]
+        assert not [w for w in caught if issubclass(w.category, UserWarning)]
+
+    def test_stream_dirs_removed_when_entry_raises(self):
+        with pytest.raises(RuntimeError):
+            with stream_dirs("test_two_round") as d:
+                assert all(os.path.isdir(p) for p in d)
+                raise RuntimeError("entry failed")
+        assert not any(os.path.exists(p) for p in d)
 
 
 class TestZorderEntry:

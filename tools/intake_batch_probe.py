@@ -11,9 +11,7 @@ from __future__ import annotations
 
 import argparse
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -27,11 +25,12 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from power_generation_etl_spark.operators import minhash as mh
-    from power_generation_etl_spark.plans.intake_queries import (
-        _doc_rounds,
-        _stage_json,
+    from power_generation_etl_spark.plans.intake_queries import _doc_rounds
+    from power_generation_etl_spark.plans.queries import (
+        stage_round,
+        stream_dirs,
+        stream_parallelism_scope,
     )
-    from power_generation_etl_spark.plans.queries import stream_parallelism_scope
     from power_generation_etl_spark.session import get_spark
     from power_generation_etl_spark.streaming.ingest import DOC_STREAM_SCHEMA
 
@@ -41,12 +40,6 @@ def main() -> None:
     k, n, n_bands, seed, threshold = 64, 3, 16, 42, 0.5
     sig_cols = [f"m{i}" for i in range(k)]
 
-    stage = tempfile.mkdtemp(prefix="probe_nb_stage_")
-    out_dir = os.path.join(stage, "out")
-    store_dir = os.path.join(stage, "store")
-    sig_path = os.path.join(store_dir, "sig")
-    band_path = os.path.join(store_dir, "bands")
-
     marks: list[tuple[str, float]] = []
 
     def timed(label: str, fn):
@@ -55,10 +48,14 @@ def main() -> None:
         marks.append((label, time.perf_counter() - t0))
         return r
 
-    with stream_parallelism_scope(spark, args.sf):
+    with stream_parallelism_scope(spark, args.sf), stream_dirs("probe_nb") as d:
+        stage = d.stage
+        out_dir = os.path.join(d.store, "out")
+        sig_path = os.path.join(d.store, "sig")
+        band_path = os.path.join(d.store, "bands")
         r1, r2 = _doc_rounds(spark, args.sf)
-        timed("stage_r1_json", lambda: _stage_json(r1, os.path.join(stage, "r1")))
-        timed("stage_r2_json", lambda: _stage_json(r2, os.path.join(stage, "r2")))
+        timed("stage_r1_json", lambda: stage_round(r1, f"{stage}/r1", "json"))
+        timed("stage_r2_json", lambda: stage_round(r2, f"{stage}/r2", "json"))
 
         for batch_id, rdir in ((0, "r1"), (1, "r2")):
             tag = f"b{batch_id}"
@@ -152,7 +149,6 @@ def main() -> None:
             "final_read",
             lambda: spark.read.parquet(out_dir).select("doc_id").count(),
         )
-    shutil.rmtree(stage, ignore_errors=True)
     print(f"rows={n_out}")
     for label, dt in marks:
         print(f"{label:24s} {dt:7.3f}s")

@@ -1,8 +1,9 @@
-"""Phase-timing probe for the two-round streaming-intake entries
-(r12 optimization round): replicates stream_intake_neardup_docs'
-body with timers around each phase (staging, per-round stream run,
-final read) and per-phase Spark job counts, so the fixed-cost attack
-(VERDICT r11 item 1) targets the phase that actually holds the time.
+"""Phase-timing probe for the two-round streaming-intake entries:
+runs stream_intake_neardup_docs' query through the shared two-round
+scaffold (`plans/queries.py::overlap_two_rounds`) with timers around
+each phase (staging, per-round stream run, final read) and per-phase
+Spark job counts, so a fixed-cost attack targets the phase that
+actually holds the time.
 
     python tools/stream_intake_probe.py [--sf DIR]
 """
@@ -11,11 +12,8 @@ from __future__ import annotations
 
 import argparse
 import os
-import shutil
 import sys
-import tempfile
 import time
-from concurrent.futures import ThreadPoolExecutor
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -25,14 +23,12 @@ def main() -> None:
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-
-    from power_generation_etl_spark.plans.intake_queries import (
-        _doc_rounds,
-        _link_round,
-        _stage_json,
+    from power_generation_etl_spark.plans.intake_queries import _doc_rounds
+    from power_generation_etl_spark.plans.queries import (
+        overlap_two_rounds,
+        stream_dirs,
+        stream_parallelism_scope,
     )
-    from power_generation_etl_spark.plans.queries import stream_parallelism_scope
     from power_generation_etl_spark.session import get_spark
     from power_generation_etl_spark.streaming.ingest import stream_neardup_intake
 
@@ -47,55 +43,39 @@ def main() -> None:
         return max(ids) if ids else -1
 
     marks: list[tuple[str, float, int]] = []
+    clock = [time.perf_counter(), jobs()]
 
-    def mark(label: str, t0: float, j0: int) -> None:
-        marks.append((label, time.perf_counter() - t0, jobs() - j0))
+    def lap(label: str) -> None:
+        """Close the phase open since the last lap under ``label``."""
+        now, j = time.perf_counter(), jobs()
+        marks.append((label, now - clock[0], j - clock[1]))
+        clock[:] = [now, j]
+
+    waits = iter(["stage_r1(+r2 bg)", "stage_r2_wait"])
 
     with stream_parallelism_scope(spark, args.sf):
-        t_all = time.perf_counter()
-        j_all = jobs()
+        t_all, j_all = clock
         r1, r2 = _doc_rounds(spark, args.sf)
-        stage = tempfile.mkdtemp(prefix="probe_nd_stage_")
-        landing = tempfile.mkdtemp(prefix="probe_nd_landing_")
-        out = os.path.join(stage, "out")
-        ckpt = os.path.join(stage, "ckpt")
-        store = os.path.join(stage, "store")
+        with stream_dirs("probe_nd") as d:
+            out = os.path.join(d.store, "out")
 
-        def _run() -> None:
-            q = stream_neardup_intake(
-                spark, landing, out, ckpt, store,
-                threshold=0.5, n=3, k=64, n_bands=16, seed=42,
-                bucket_cap=None,
-            )
-            q.awaitTermination()
-            q.stop()
+            def run(landing: str) -> None:
+                lap(next(waits))  # staging (+ linking) before this round
+                q = stream_neardup_intake(
+                    spark, landing, out, d.ckpt, os.path.join(d.store, "sig"),
+                    threshold=0.5, n=3, k=64, n_bands=16, seed=42,
+                    bucket_cap=None,
+                )
+                q.awaitTermination()
+                q.stop()
+                lap(f"round{len(marks) // 2 + 1}_stream")
 
-        try:
-            t0, j0 = time.perf_counter(), jobs()
-            with ThreadPoolExecutor(max_workers=1) as pool:
-                fut = pool.submit(_stage_json, r2, os.path.join(stage, "r2"))
-                _stage_json(r1, os.path.join(stage, "r1"))
-                _link_round(os.path.join(stage, "r1"), landing, "r1")
-                mark("stage_r1(+r2 bg)", t0, j0)
-                t0, j0 = time.perf_counter(), jobs()
-                _run()
-                mark("round1_stream", t0, j0)
-                t0, j0 = time.perf_counter(), jobs()
-                fut.result()
-                mark("stage_r2_wait", t0, j0)
-            t0, j0 = time.perf_counter(), jobs()
-            _link_round(os.path.join(stage, "r2"), landing, "r2")
-            _run()
-            mark("round2_stream", t0, j0)
-            t0, j0 = time.perf_counter(), jobs()
+            overlap_two_rounds(d, r1, r2, "json", run)
             rows = sorted(
                 r["doc_id"]
                 for r in spark.read.parquet(out).select("doc_id").collect()
             )
-            mark("final_read", t0, j0)
-        finally:
-            for d in (stage, landing):
-                shutil.rmtree(d, ignore_errors=True)
+            lap("final_read")
         total = time.perf_counter() - t_all
         totj = jobs() - j_all
     print(f"rows={len(rows)}")
