@@ -28,7 +28,13 @@ from power_generation_etl_spark.schemas import (
 )
 from power_generation_etl_spark.sources.jsonl import load_and_validate
 from power_generation_etl_spark.store import TableStore
-from power_generation_etl_spark.validation import FILE_COL, ORDER_COL, ValidationReport, strict_gate
+from power_generation_etl_spark.validation import (
+    FILE_COL,
+    ORDER_COL,
+    LoadStats,
+    ValidationReport,
+    strict_gate,
+)
 
 # Drift-check configuration: (source_system, raw_table, raw_key, crosswalk_key)
 # (reference src/check_crosswalk_drift.py:28-38).
@@ -159,14 +165,12 @@ class Engine:
                 elif not os.path.exists(local):
                     return LoadResult(False, 0, 0, None, run_id=None)
         run_id = run_id or str(uuid.uuid4())
-        valid, report = load_and_validate(self.spark, source, path, run_id=run_id)
+        stats = LoadStats()
+        valid, report = load_and_validate(self.spark, source, path, run_id=run_id, stats=stats)
         # Lineage uses the run id carried by the data when present
         # (reference src/database.py:627-630 first_run_id capture).
-        from power_generation_etl_spark.sources.jsonl import peek_first_record
-
-        first = peek_first_record(self.spark, path)
-        if isinstance(first.get("extraction_run_id"), str):
-            run_id = first["extraction_run_id"]
+        if isinstance(stats.first_record.get("extraction_run_id"), str):
+            run_id = stats.first_record["extraction_run_id"]
         if strict:
             strict_gate(report)
 
@@ -183,16 +187,17 @@ class Engine:
         )
         if self.store.exists(schema.table):
             # Partition-pruned target read: only the batch's months are
-            # even listed, so the anti-join scans O(batch months).
-            bounds = batch.agg(
-                F.min("timestamp_ms").alias("lo"), F.max("timestamp_ms").alias("hi")
-            ).head()
+            # even listed, so the anti-join scans O(batch months). The
+            # validation pass already knows the valid rows' bounds; the
+            # stored key includes timestamp_ms, so the deduped batch has
+            # the same ones.
+            bounds = (stats.ts_lo, stats.ts_hi)
             existing = (
-                self.store.read_range(schema.table, bounds["lo"], bounds["hi"])
-                if bounds["lo"] is not None
+                self.store.read_range(schema.table, *bounds)
+                if stats.ts_lo is not None
                 else self.store.read(schema.table)
             )
-            new_rows = anti_join_new_rows(batch, existing, schema)
+            new_rows = anti_join_new_rows(batch, existing, schema, bounds=bounds)
         else:
             new_rows = batch
         new_rows = new_rows.persist()
@@ -252,14 +257,14 @@ class Engine:
             return
         existing = self.store.read("extraction_metadata")
         run_id = full["extraction_run_id"]
-        match = existing.filter(F.col("extraction_run_id") == run_id)
-        if match.isEmpty():
+        match = existing.filter(F.col("extraction_run_id") == run_id).head()
+        if match is None:
             self.store.append("extraction_metadata", new)
             return
         # Conflict: update the 6 updatable columns, keep the original
         # extraction_timestamp / config_snapshot / source_urls.
         kept = existing.filter(F.col("extraction_run_id") != run_id)
-        merged_row = match.head().asDict()
+        merged_row = match.asDict()
         for c in self._CONFLICT_UPDATE_COLS:
             merged_row[c] = full[c]
         merged = self.spark.createDataFrame(

@@ -56,17 +56,26 @@ def resume_from(engine, source: str) -> date:
     return latest + timedelta(days=1)
 
 
+def _date_override(name: str) -> date | None:
+    """An ISO-date env override; unset or empty string → None."""
+    raw = os.environ.get(name)
+    if not raw:
+        return None
+    try:
+        return date.fromisoformat(raw)
+    except ValueError:
+        raise ValueError(f"{name}={raw!r} is not an ISO date (YYYY-MM-DD)") from None
+
+
 def window_start(engine, source: str) -> date:
     """I2: START_OVERRIDE env var wins; empty string (GHA's unset
     workflow_dispatch input) falls through to watermark resume."""
-    override = os.environ.get("START_OVERRIDE")
-    return date.fromisoformat(override) if override else resume_from(engine, source)
+    return _date_override("START_OVERRIDE") or resume_from(engine, source)
 
 
 def window_end(today: date) -> date:
     """I2: END_OVERRIDE env var wins; empty string falls through."""
-    override = os.environ.get("END_OVERRIDE")
-    return date.fromisoformat(override) if override else today
+    return _date_override("END_OVERRIDE") or today
 
 
 def window_months(start: date, end: date) -> int:

@@ -29,7 +29,11 @@ def natural_key_cols(schema: SourceSchema, df: DataFrame) -> list[Column]:
 
 
 def anti_join_new_rows(
-    batch: DataFrame, existing: DataFrame, schema: SourceSchema
+    batch: DataFrame,
+    existing: DataFrame,
+    schema: SourceSchema,
+    *,
+    bounds: tuple[int | None, int | None] | None = None,
 ) -> DataFrame:
     """Rows of `batch` whose natural key does not already exist
     (reference `INSERT … ON CONFLICT DO NOTHING`, src/database.py:288-294).
@@ -38,14 +42,18 @@ def anti_join_new_rows(
     timestamp range before the join (partition/row-group pruning on the
     `timestamp_ms` min/max), and only key columns are projected, so the
     shuffle carries keys — not whole rows — of the target table.
+    ``bounds`` is a known (lo, hi) covering the batch's `timestamp_ms`
+    (lo None: no bound); without it one aggregation computes them.
     """
-    bounds = batch.agg(
-        F.min("timestamp_ms").alias("lo"), F.max("timestamp_ms").alias("hi")
-    ).head()
-    if bounds["lo"] is not None and "timestamp_ms" in existing.columns:
+    if bounds is None:
+        row = batch.agg(
+            F.min("timestamp_ms").alias("lo"), F.max("timestamp_ms").alias("hi")
+        ).head()
+        bounds = (row["lo"], row["hi"])
+    lo, hi = bounds
+    if lo is not None and "timestamp_ms" in existing.columns:
         existing = existing.filter(
-            (F.col("timestamp_ms") >= bounds["lo"])
-            & (F.col("timestamp_ms") <= bounds["hi"])
+            (F.col("timestamp_ms") >= lo) & (F.col("timestamp_ms") <= hi)
         )
     key_names = [f"_k_{k}" for k in schema.natural_key]
     b = batch.select(batch["*"], *natural_key_cols(schema, batch))

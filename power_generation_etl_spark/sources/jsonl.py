@@ -7,14 +7,17 @@ Ordering: first-wins dedup (D1) is order-sensitive, so the scan must
 expose the exact file line order — as a *splittable* read, or a 100×
 single-file drop serializes the parse on one task and must fit in one
 task's memory. ``spark.read.text`` splits files at
-``spark.sql.files.maxPartitionBytes``; scan partitions enumerate each
-file's splits in ascending offset order (equal-size splits keep their
-relative order through Spark's size-descending stable sort, and the
-smaller tail split of a file sorts after its full splits), so
-``(spark_partition_id, monotonically_increasing_id)`` ascends with the
-file's line order. A tiny per-(file, split) count aggregate turns that
-into the dense 0-based record index the reference's ``enumerate``
-produces — no single task ever holds more than one split.
+``spark.sql.files.maxPartitionBytes``; each split's lines are read in
+file order, one split after another, inside one scan partition. So a
+``monotonically_increasing_id`` taken after the blank-line filter is
+dense and ascending within each split, and a tiny per-(file, split)
+aggregate (line count and first id) turns it into the dense 0-based
+record index the reference's ``enumerate`` produces — the lines are
+never shuffled, and a multi-GB file still parses across many tasks.
+
+Loads: each source's parse, fixup and validation expressions are built
+once per session (``validation.session_exprs``); a load adds its run id
+and clock as literal columns and pays one validation pass.
 """
 
 from __future__ import annotations
@@ -22,9 +25,8 @@ from __future__ import annotations
 import json
 import time
 import uuid
-from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from power_generation_etl_spark.schemas import SOURCES, SourceSchema
@@ -32,8 +34,10 @@ from power_generation_etl_spark.validation import (
     ORDER_COL,
     SKIP_COL,
     VARIANT_COL,
+    LoadStats,
     ValidationReport,
     parse_fields,
+    session_exprs,
     typ_col,
     validate,
 )
@@ -77,47 +81,51 @@ def read_jsonl_lines(spark: SparkSession, path: str | list[str]) -> DataFrame:
     ``enumerate`` over stripped lines.
 
     Splittable (see module docstring): a multi-GB file parses across
-    many tasks. The dense index is built from (a) a per-(file, split)
-    count aggregate — at most one row per scan split, so the prefix-sum
-    window is negligible — and (b) a row_number within each (file,
-    split), whose partitions are bounded by maxPartitionBytes rather
-    than by file size.
+    many tasks. Each non-blank line gets a ``monotonically_increasing_id``
+    *after* the blank-line filter; one aggregate over (file, split) —
+    at most one row per scan split — gives each split's line count and
+    minimum id, a prefix sum over a file's splits gives each split's
+    offset, and ``_order = offset + id - min_id``. The lines themselves
+    are never shuffled or sorted.
+
+    Correctness condition: a split's rows are contiguous inside its scan
+    partition (a partition reads its splits one after another, each in
+    file order), so within a split the ids are consecutive. Several
+    splits — of one file or of several files — may share a partition.
 
     Split order comes from the contractual ``_metadata.file_block_start``
     hidden column (the split's byte offset within the file, Spark
     3.5+), NOT from ``spark_partition_id`` — partition ids depend on
-    undocumented bin-packing internals (size-descending split sort, one
-    split per partition), while byte offsets ARE line order for a text
-    source. Within a split, rows are read sequentially, so
-    ``monotonically_increasing_id`` is ordered; two splits packed into
-    one task partition stay distinguishable by their block start.
+    undocumented bin-packing internals, while byte offsets ARE line
+    order for a text source.
     """
     from pyspark.sql.window import Window
 
     lines = (
         spark.read.text(path)
+        .filter(F.length(F.trim("value")) > 0)
         .select(
             F.input_file_name().alias("_file"),
             F.col("_metadata.file_block_start").alias("_bs"),
             F.monotonically_increasing_id().alias("_mid"),
             F.col("value").alias("line"),
         )
-        .filter(F.length(F.trim("line")) > 0)
     )
-    counts = lines.groupBy("_file", "_bs").agg(F.count(F.lit(1)).alias("_n"))
+    splits = lines.groupBy("_file", "_bs").agg(
+        F.count(F.lit(1)).alias("_n"), F.min("_mid").alias("_min_mid")
+    )
     w_off = (
         Window.partitionBy("_file")
         .orderBy("_bs")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    offsets = counts.select(
-        "_file", "_bs", F.coalesce(F.sum("_n").over(w_off), F.lit(0)).alias("_off")
-    )
-    w_rank = Window.partitionBy("_file", "_bs").orderBy("_mid")
-    return lines.join(F.broadcast(offsets), ["_file", "_bs"]).select(
+    offsets = splits.select(
         "_file",
-        (F.row_number().over(w_rank) - 1 + F.col("_off")).alias(ORDER_COL),
-        "line",
+        "_bs",
+        (F.coalesce(F.sum("_n").over(w_off), F.lit(0)) - F.col("_min_mid")).alias("_off"),
+    )
+    return lines.join(F.broadcast(offsets), ["_file", "_bs"]).select(
+        "_file", (F.col("_mid") + F.col("_off")).alias(ORDER_COL), "line"
     )
 
 
@@ -194,96 +202,88 @@ def peek_first_record(spark: SparkSession, path: str | list[str]) -> dict:
         return {}
 
 
-@dataclass
-class LoadContext:
-    run_id: str
-    created_at_ms: int
-    first_record: dict
+# Per-load literal columns the cached fixup expressions read.
+RUN_ID_COL = "_run_id"
+CREATED_COL = "_created_at_ms"
+
+# A fixup is a list of stages applied in order, one ``withColumns`` each;
+# every expression of a stage reads the previous stage's output.
+Stages = list[dict[str, Column]]
 
 
-def _inject(df: DataFrame, fname: str, value, vtyp: str, only_missing: bool = True) -> DataFrame:
+def _inject(fname: str, value: Column, vtyp: str, only_missing: bool = True) -> dict[str, Column]:
     """Set field + its JSON-type marker; either fill-missing or overwrite."""
-    lit = F.lit(value)
     if only_missing:
-        df = df.withColumn(fname, F.coalesce(F.col(fname), lit)).withColumn(
-            typ_col(fname), F.coalesce(F.col(typ_col(fname)), F.lit(vtyp))
-        )
-    else:
-        df = df.withColumn(fname, lit).withColumn(typ_col(fname), F.lit(vtyp))
-    return df
+        return {
+            fname: F.coalesce(F.col(fname), value),
+            typ_col(fname): F.coalesce(F.col(typ_col(fname)), F.lit(vtyp)),
+        }
+    return {fname: value, typ_col(fname): F.lit(vtyp)}
 
 
-def _inject_metadata_first_record_gated(df: DataFrame, ctx: LoadContext) -> DataFrame:
+def _inject_metadata_first_record_gated(missing: tuple[str, ...]) -> dict[str, Column]:
     """EIA/ONS/OE/OE-facility/OCCTO/Chile pattern (reference
     src/database.py:961-974 etc.): if the *first* record lacks the field,
-    set it on every record."""
-    if "extraction_run_id" not in ctx.first_record:
-        df = _inject(df, "extraction_run_id", ctx.run_id, "STRING", only_missing=False)
-    if "created_at_ms" not in ctx.first_record:
-        df = _inject(df, "created_at_ms", ctx.created_at_ms, "BIGINT", only_missing=False)
-    return df
+    set it on every record. ``missing`` names the metadata fields the
+    first record lacks."""
+    out = {}
+    if "extraction_run_id" in missing:
+        out |= _inject("extraction_run_id", F.col(RUN_ID_COL), "STRING", only_missing=False)
+    if "created_at_ms" in missing:
+        out |= _inject("created_at_ms", F.col(CREATED_COL), "BIGINT", only_missing=False)
+    return out
 
 
-def _fixup_npp(df: DataFrame, ctx: LoadContext) -> DataFrame:
+def _fixup_npp(missing: tuple[str, ...]) -> Stages:
     """Reference src/database.py:480-499: per-record harmonized/legacy split."""
     harmonized = F.col(typ_col("extraction_run_id")).isNotNull() & F.col(
         typ_col("timestamp_ms")
     ).isNotNull()
     # Harmonized: fill created_at if missing. Legacy: overwrite run
-    # metadata, convert epoch-seconds `date` → timestamp_ms.
+    # metadata, convert epoch-seconds `date` → timestamp_ms. The second
+    # stage reads the first stage's run-id marker, which is never null
+    # by then, so there `harmonized` keys on the timestamp marker alone.
     legacy_ts = F.expr(f"try_variant_get({VARIANT_COL}, '$.date', 'double')")
-    df = (
-        df.withColumn(
-            "extraction_run_id",
-            F.when(harmonized, F.col("extraction_run_id")).otherwise(F.lit(ctx.run_id)),
-        )
-        .withColumn(
-            typ_col("extraction_run_id"),
-            F.when(harmonized, F.col(typ_col("extraction_run_id"))).otherwise(
-                F.lit("STRING")
-            ),
-        )
-        .withColumn(
-            "created_at_ms",
-            F.when(
-                harmonized, F.coalesce(F.col("created_at_ms"), F.lit(ctx.created_at_ms))
-            ).otherwise(F.lit(ctx.created_at_ms)),
-        )
-        .withColumn(
-            typ_col("created_at_ms"),
-            F.when(
-                harmonized, F.coalesce(F.col(typ_col("created_at_ms")), F.lit("BIGINT"))
-            ).otherwise(F.lit("BIGINT")),
-        )
-        .withColumn(
-            "timestamp_ms",
-            F.when(harmonized, F.col("timestamp_ms")).otherwise(
-                (legacy_ts * 1000).cast("long")
-            ),
-        )
-        .withColumn(
-            typ_col("timestamp_ms"),
-            F.when(harmonized, F.col(typ_col("timestamp_ms"))).otherwise(
-                F.when(legacy_ts.isNotNull(), F.lit("BIGINT"))
-            ),
-        )
-    )
-    return df
+    run_id = {
+        "extraction_run_id": F.when(harmonized, F.col("extraction_run_id")).otherwise(
+            F.col(RUN_ID_COL)
+        ),
+        typ_col("extraction_run_id"): F.when(
+            harmonized, F.col(typ_col("extraction_run_id"))
+        ).otherwise(F.lit("STRING")),
+    }
+    rest = {
+        "created_at_ms": F.when(
+            harmonized, F.coalesce(F.col("created_at_ms"), F.col(CREATED_COL))
+        ).otherwise(F.col(CREATED_COL)),
+        typ_col("created_at_ms"): F.when(
+            harmonized, F.coalesce(F.col(typ_col("created_at_ms")), F.lit("BIGINT"))
+        ).otherwise(F.lit("BIGINT")),
+        "timestamp_ms": F.when(harmonized, F.col("timestamp_ms")).otherwise(
+            (legacy_ts * 1000).cast("long")
+        ),
+        typ_col("timestamp_ms"): F.when(harmonized, F.col(typ_col("timestamp_ms"))).otherwise(
+            F.when(legacy_ts.isNotNull(), F.lit("BIGINT"))
+        ),
+    }
+    return [run_id, rest]
 
 
-def _fixup_entsoe(df: DataFrame, ctx: LoadContext) -> DataFrame:
+def _fixup_entsoe(missing: tuple[str, ...]) -> Stages:
     """Reference src/database.py:621-682: per-record metadata injection,
     string-timestamp parse (naive treated as UTC, unparseable/null →
     record skipped with warning), PSR→fuel_type remap, plant-name
     suffix strip."""
-    df = _inject(df, "extraction_run_id", ctx.run_id, "STRING")
-    df = _inject(df, "created_at_ms", ctx.created_at_ms, "BIGINT")
     # A *missing* plant_name becomes '' (reference record.get('plant_name','')
     # + unconditional reassignment, src/database.py:672-682), so it fails
     # validation as "must be non-empty string", not "missing required
     # field". An explicit JSON null keeps its VOID type marker and still
     # fails the type check — `_inject` only fills a NULL (absent) marker.
-    df = _inject(df, "plant_name", "", "STRING")
+    inject = (
+        _inject("extraction_run_id", F.col(RUN_ID_COL), "STRING")
+        | _inject("created_at_ms", F.col(CREATED_COL), "BIGINT")
+        | _inject("plant_name", F.lit(""), "STRING")
+    )
 
     t = F.col(typ_col("timestamp_ms"))
     raw_str = F.expr(f"try_variant_get({VARIANT_COL}, '$.timestamp_ms', 'string')")
@@ -295,50 +295,37 @@ def _fixup_entsoe(df: DataFrame, ctx: LoadContext) -> DataFrame:
         f"try_variant_get({VARIANT_COL}, '$.timestamp_ms', 'double')"
     ).cast("long")
 
-    df = (
-        df.withColumn(
-            SKIP_COL,
-            F.when(is_string_ts & parsed.isNull(), F.lit("unparseable timestamp")).when(
-                t == "VOID", F.lit("null timestamp")
-            ),
-        )
-        .withColumn(
-            "timestamp_ms",
-            F.when(is_string_ts, parsed_ms)
-            .when(is_numeric_ts, numeric_ms)
-            .otherwise(F.col("timestamp_ms")),
-        )
-        .withColumn(
-            typ_col("timestamp_ms"),
-            F.when(is_string_ts & parsed.isNotNull(), F.lit("BIGINT"))
-            .when(is_numeric_ts, F.lit("BIGINT"))
-            .otherwise(t),
-        )
-    )
-
     # PSR remap (F3) + suffix strip (F4) via the shared helpers.
     psr_map = F.create_map(*[F.lit(x) for kv in PSR_TO_FUEL_TYPE.items() for x in kv])
     mapped = psr_map[F.col("psr_type")]
-    df = df.withColumn(
-        "fuel_type", psr_fuel_expr(F.col("psr_type"), F.col("fuel_type"))
-    ).withColumn(
-        typ_col("fuel_type"),
-        F.when(mapped.isNotNull(), F.lit("STRING")).otherwise(F.col(typ_col("fuel_type"))),
-    )
-    return df.withColumn(
-        "plant_name", strip_plant_suffixes_expr(F.col("plant_name"))
-    )
+    fix = {
+        SKIP_COL: F.when(is_string_ts & parsed.isNull(), F.lit("unparseable timestamp")).when(
+            t == "VOID", F.lit("null timestamp")
+        ),
+        "timestamp_ms": F.when(is_string_ts, parsed_ms)
+        .when(is_numeric_ts, numeric_ms)
+        .otherwise(F.col("timestamp_ms")),
+        typ_col("timestamp_ms"): F.when(is_string_ts & parsed.isNotNull(), F.lit("BIGINT"))
+        .when(is_numeric_ts, F.lit("BIGINT"))
+        .otherwise(t),
+        "fuel_type": psr_fuel_expr(F.col("psr_type"), F.col("fuel_type")),
+        typ_col("fuel_type"): F.when(mapped.isNotNull(), F.lit("STRING")).otherwise(
+            F.col(typ_col("fuel_type"))
+        ),
+        "plant_name": strip_plant_suffixes_expr(F.col("plant_name")),
+    }
+    return [inject, fix]
 
 
-def _fixup_eia(df: DataFrame, ctx: LoadContext) -> DataFrame:
+def _fixup_eia(missing: tuple[str, ...]) -> Stages:
     """Reference src/database.py:961-988: first-record-gated metadata
     injection; utility_id/plant_code/generator_id stringified *before*
     validation (so a numeric id validates and dedups as its string)."""
-    df = _inject_metadata_first_record_gated(df, ctx)
     # `str()` is applied to ANY present non-string value (reference
     # src/database.py:975-983 checks only `not isinstance(v, str)`), so
     # an explicit null becomes the literal 'None' and a bool becomes
     # 'True'/'False' — faithful, if surprising.
+    ids = {}
     for fname in ("utility_id", "plant_code", "generator_id"):
         t = F.col(typ_col(fname))
         v = F.col(fname)
@@ -347,13 +334,12 @@ def _fixup_eia(df: DataFrame, ctx: LoadContext) -> DataFrame:
             .when(t == "BOOLEAN", F.initcap(v))
             .otherwise(v)
         )
-        df = df.withColumn(fname, F.when(t.isNull(), v).otherwise(pyified)).withColumn(
-            typ_col(fname), F.when(t.isNull(), t).otherwise(F.lit("STRING"))
-        )
-    return df
+        ids[fname] = F.when(t.isNull(), v).otherwise(pyified)
+        ids[typ_col(fname)] = F.when(t.isNull(), t).otherwise(F.lit("STRING"))
+    return [_inject_metadata_first_record_gated(missing) | ids]
 
 
-def _fixup_chile(df: DataFrame, ctx: LoadContext) -> DataFrame:
+def _fixup_chile(missing: tuple[str, ...]) -> Stages:
     """Reference src/database.py:1629-1640: legacy plant_id →
     chile_plant_id rename, then first-record-gated injection."""
     legacy = F.expr(f"try_variant_get({VARIANT_COL}, '$.plant_id', 'string')")
@@ -361,23 +347,29 @@ def _fixup_chile(df: DataFrame, ctx: LoadContext) -> DataFrame:
         f"schema_of_variant(try_variant_get({VARIANT_COL}, '$.plant_id'))"
     )
     take_legacy = F.col(typ_col("chile_plant_id")).isNull() & legacy_typ.isNotNull()
-    df = df.withColumn(
-        "chile_plant_id", F.when(take_legacy, legacy).otherwise(F.col("chile_plant_id"))
-    ).withColumn(
-        typ_col("chile_plant_id"),
-        F.when(take_legacy, legacy_typ).otherwise(F.col(typ_col("chile_plant_id"))),
-    )
-    return _inject_metadata_first_record_gated(df, ctx)
+    rename = {
+        "chile_plant_id": F.when(take_legacy, legacy).otherwise(F.col("chile_plant_id")),
+        typ_col("chile_plant_id"): F.when(take_legacy, legacy_typ).otherwise(
+            F.col(typ_col("chile_plant_id"))
+        ),
+    }
+    return [rename | _inject_metadata_first_record_gated(missing)]
 
 
+def _fixup_gated(missing: tuple[str, ...]) -> Stages:
+    return [_inject_metadata_first_record_gated(missing)]
+
+
+# source → fixup builder; each takes the metadata fields the first
+# record lacks (only the first-record-gated sources use them).
 _FIXUPS = {
     "npp": _fixup_npp,
     "entsoe": _fixup_entsoe,
     "eia": _fixup_eia,
-    "ons": _inject_metadata_first_record_gated,
-    "oe": _inject_metadata_first_record_gated,
-    "oe_facility": _inject_metadata_first_record_gated,
-    "occto": _inject_metadata_first_record_gated,
+    "ons": _fixup_gated,
+    "oe": _fixup_gated,
+    "oe_facility": _fixup_gated,
+    "occto": _fixup_gated,
     "chile": _fixup_chile,
 }
 
@@ -388,19 +380,30 @@ def load_and_validate(
     path: str | list[str],
     run_id: str | None = None,
     now_ms: int | None = None,
+    *,
+    stats: LoadStats | None = None,
 ) -> tuple[DataFrame, ValidationReport]:
     """Full pre-insert pipeline: scan → fixups → validate → first-wins
     dedup. Returns (valid typed DataFrame incl. _file/_order, report).
     A list of paths loads the whole batch in ONE pass; first-wins dedup
-    across files follows lexicographic path order."""
+    across files follows lexicographic path order. ``stats``, when
+    given, receives the file's first record and the valid rows'
+    ``timestamp_ms`` bounds."""
     schema: SourceSchema = SOURCES[source]
-    ctx = LoadContext(
-        run_id=run_id or str(uuid.uuid4()),
-        created_at_ms=now_ms if now_ms is not None else int(time.time() * 1000),
-        first_record=peek_first_record(spark, path),
+    stats = stats if stats is not None else LoadStats()
+    stats.first_record = peek_first_record(spark, path)
+    created_at_ms = now_ms if now_ms is not None else int(time.time() * 1000)
+    missing = tuple(
+        f for f in ("extraction_run_id", "created_at_ms") if f not in stats.first_record
     )
-    raw = read_jsonl_lines(spark, path)
-    parsed = parse_fields(raw, schema)
-    fixed = _FIXUPS[source](parsed, ctx)
+    stages = session_exprs(
+        spark, ("fixup", source, missing), lambda: _FIXUPS[source](missing)
+    )
+    df = parse_fields(read_jsonl_lines(spark, path), schema).withColumns(
+        {RUN_ID_COL: F.lit(run_id or str(uuid.uuid4())), CREATED_COL: F.lit(created_at_ms)}
+    )
+    for stage in stages:
+        if stage:
+            df = df.withColumns(stage)
     source_file = ", ".join(path) if isinstance(path, (list, tuple)) else path
-    return validate(fixed, schema, source_file=source_file, now_ms=ctx.created_at_ms)
+    return validate(df, schema, source_file=source_file, now_ms=created_at_ms, stats=stats)

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import contextlib
 import itertools
+import math
 import os
 import shutil
 import threading
@@ -31,9 +32,26 @@ from pyspark.sql import functions as F
 
 MONTH_COL = "_month"
 
-# How long a writer waits for a contended table lock before raising.
-# Generous default: a lock holder may be running a full merge shuffle.
-_LOCK_TIMEOUT_S = float(os.environ.get("SPARK_ETL_STORE_LOCK_TIMEOUT_S", "300"))
+_LOCK_TIMEOUT_ENV = "SPARK_ETL_STORE_LOCK_TIMEOUT_S"
+
+
+def _lock_timeout_s() -> float:
+    """How long a writer waits for a contended table lock before raising.
+    Generous default: a lock holder may be running a full merge shuffle."""
+    env = os.environ.get(_LOCK_TIMEOUT_ENV)
+    if env is None:
+        return 300.0
+    try:
+        v = float(env)
+    except ValueError:
+        v = math.nan
+    # nan would wait forever (no deadline comparison is ever true).
+    if not math.isfinite(v) or v < 0:
+        raise ValueError(
+            f"{_LOCK_TIMEOUT_ENV}={env!r} is not a finite, non-negative number "
+            "of seconds; set a wait like 300"
+        )
+    return v
 
 
 class TableStore:
@@ -77,7 +95,7 @@ class TableStore:
             return
         import fcntl
 
-        deadline = time.monotonic() + (_LOCK_TIMEOUT_S if timeout is None else timeout)
+        deadline = time.monotonic() + (_lock_timeout_s() if timeout is None else timeout)
         fd = os.open(self._lock_file(table), os.O_CREAT | os.O_RDWR, 0o644)
         try:
             while True:

@@ -17,11 +17,14 @@ reader speed at any scale.
 
 from __future__ import annotations
 
+import threading
 import time
+import weakref
 from dataclasses import dataclass, field as dc_field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from power_generation_etl_spark.schemas import US_STATE_CODES, UUID_RE, Field, SourceSchema
 
@@ -32,10 +35,32 @@ ORDER_COL = "_order"
 FILE_COL = "_file"
 VARIANT_COL = "_v"
 SKIP_COL = "_skip_reason"
+# Per-load literal column: the validation pass's clock.
+NOW_COL = "_now_ms"
 
 
 def typ_col(f: str) -> str:
     return f"_typ_{f}"
+
+
+_SESSION_EXPRS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_SESSION_EXPRS_LOCK = threading.Lock()
+
+
+def session_exprs(spark: SparkSession, key, build):
+    """``build()``'s Column expressions, built once per session and key.
+
+    Building a load's expressions takes hundreds of py4j calls, so they
+    are cached and shared by every load of the session. A cached
+    expression names its inputs with ``F.col`` (``df[name]`` binds one
+    plan's attribute ids) and reads per-load values (run id,
+    created_at_ms, now_ms) from literal columns each load adds to its
+    own frame; it never captures them."""
+    with _SESSION_EXPRS_LOCK:
+        cache = _SESSION_EXPRS.setdefault(spark, {})
+        if key not in cache:
+            cache[key] = build()
+        return cache[key]
 
 
 # --- JSON-type predicates over schema_of_variant output ---------------------
@@ -115,7 +140,7 @@ def _py_type_name(t: Column) -> Column:
     )
 
 
-def _rule_error(f: Field, value: Column, now_ms: int) -> Column | None:
+def _rule_error(f: Field, value: Column) -> Column | None:
     """Value-rule violation message (null = rule passed).
 
     Rules run only on required fields after the type check passes
@@ -126,7 +151,7 @@ def _rule_error(f: Field, value: Column, now_ms: int) -> Column | None:
     if f.rule == "uuid":
         bad, msg = ~value.rlike(UUID_RE), "invalid UUID format"
     elif f.rule == "positive_timestamp":
-        bad = (value <= 0) | (value > F.lit(now_ms + MAX_FUTURE_BUFFER_MS))
+        bad = (value <= 0) | (value > F.col(NOW_COL) + F.lit(MAX_FUTURE_BUFFER_MS))
         msg = "invalid timestamp (must be positive and not in future)"
     elif f.rule == "non_empty":
         bad, msg = F.length(F.trim(value)) == 0, "must be non-empty string"
@@ -176,17 +201,19 @@ class ValidationReport:
         }
 
 
-def parse_fields(raw: DataFrame, schema: SourceSchema, line_col: str = "line") -> DataFrame:
-    """Parse raw JSONL lines into (typed value, JSON type) column pairs.
+@dataclass
+class LoadStats:
+    """What one load's validation pass learns besides the report: the
+    valid rows' ``timestamp_ms`` bounds (None when no row is valid) and,
+    for a JSONL load, the first record of the file."""
 
-    One variant parse per record; per-field binary extraction after —
-    all JVM-side. ``_typ_<f>`` is NULL when the field is missing and
-    'VOID' when it is an explicit JSON null (a distinction Python's
-    ``record.get`` erases; validation reunifies them where parity
-    demands).
-    """
-    df = raw.withColumn(VARIANT_COL, F.try_parse_json(F.col(line_col)))
-    cols = [df["*"]]
+    ts_lo: int | None = None
+    ts_hi: int | None = None
+    first_record: dict = dc_field(default_factory=dict)
+
+
+def _parse_exprs(schema: SourceSchema, line_col: str) -> tuple[Column, list[Column]]:
+    cols = []
     for f in schema.fields:
         path = f"$.{f.name}"
         cols.append(
@@ -199,10 +226,25 @@ def parse_fields(raw: DataFrame, schema: SourceSchema, line_col: str = "line") -
                 f.name
             )
         )
-    return df.select(*cols)
+    return F.try_parse_json(F.col(line_col)), cols
 
 
-def _field_error(f: Field, df_typ: Column, value: Column, now_ms: int) -> Column:
+def parse_fields(raw: DataFrame, schema: SourceSchema, line_col: str = "line") -> DataFrame:
+    """Parse raw JSONL lines into (typed value, JSON type) column pairs.
+
+    One variant parse per record; per-field binary extraction after —
+    all JVM-side. ``_typ_<f>`` is NULL when the field is missing and
+    'VOID' when it is an explicit JSON null (a distinction Python's
+    ``record.get`` erases; validation reunifies them where parity
+    demands).
+    """
+    variant, cols = session_exprs(
+        raw.sparkSession, ("parse", schema, line_col), lambda: _parse_exprs(schema, line_col)
+    )
+    return raw.withColumn(VARIANT_COL, variant).select("*", *cols)
+
+
+def _field_error(f: Field, df_typ: Column, value: Column) -> Column:
     """Single-field error expression — at most one error per field, with
     the reference's precedence: missing → type → rule."""
     type_ok = _TYPE_OK[f.ftype](df_typ)
@@ -215,7 +257,7 @@ def _field_error(f: Field, df_typ: Column, value: Column, now_ms: int) -> Column
         err = F.when(df_typ.isNull(), F.lit(f"missing required field: {f.name}")).when(
             ~type_ok, type_err
         )
-        rule = _rule_error(f, value, now_ms)
+        rule = _rule_error(f, value)
         if rule is not None:
             err = err.otherwise(rule)
         return err
@@ -224,18 +266,18 @@ def _field_error(f: Field, df_typ: Column, value: Column, now_ms: int) -> Column
     # this enforces what the reference pushes down to DB CHECK
     # constraints (lat/lon); a null value never trips a rule.
     err = F.when(df_typ.isNotNull() & ~type_ok, type_err)
-    rule = _rule_error(f, value, now_ms)
+    rule = _rule_error(f, value)
     if rule is not None:
         err = err.otherwise(rule)
     return err
 
 
-def _dup_key_element(f: Field, df: DataFrame) -> Column:
+def _dup_key_element(f: Field) -> Column:
     """One duplicate-key component with Python tuple-equality semantics:
     numbers (and bools) compare by numeric value across int/float/bool;
     strings compare as strings; null/missing compare equal."""
-    t = df[typ_col(f.name)]
-    v = df[f.name]
+    t = F.col(typ_col(f.name))
+    v = F.col(f.name)
     kind = (
         F.when(t.isNull() | (t == "VOID"), "null")
         .when((t == "BIGINT") | (t == "DOUBLE") | t.startswith("DECIMAL") | (t == "BOOLEAN"), "num")
@@ -252,19 +294,112 @@ def _dup_key_element(f: Field, df: DataFrame) -> Column:
     return F.struct(kind.alias("k"), val.alias("v"))
 
 
+def _dup_val_repr(k: str) -> Column:
+    """One duplicate-key part as the Python tuple repr the reference
+    emits (f"... = {dup_key}"): strings quoted, None for null/missing,
+    True/False for bools, numbers bare."""
+    t, v = F.col(typ_col(k)), F.col(k).cast("string")
+    return (
+        F.when(t.isNull() | (t == "VOID"), F.lit("None"))
+        .when(t == "BOOLEAN", F.initcap(v))
+        .when(t == "STRING", F.concat(F.lit("'"), v, F.lit("'")))
+        .otherwise(v)
+    )
+
+
+@dataclass(frozen=True)
+class _ValidateExprs:
+    errors: Column
+    eligible_seen: Column
+    status: Column
+    # report pass: one row per error (one null-error row per clean record)
+    explode: list[Column]
+    error_type: Column
+    report_aggs: list[Column]
+
+
+def _validate_exprs(schema: SourceSchema, multi_file: bool) -> _ValidateExprs:
+    errors = F.array_compact(
+        F.array(*[_field_error(f, F.col(typ_col(f.name)), F.col(f.name)) for f in schema.fields])
+    )
+
+    # First-wins dedup among valid records only (reference
+    # src/validator.py:494-521): invalid records never claim a key, so a
+    # plain row_number over the partition would be wrong (an invalid row
+    # earlier in the file would steal rank 1). Instead count *eligible*
+    # rows up to and including the current one: the first eligible row in
+    # input order has a running count of exactly 1.
+    key = [_dup_key_element(schema.fields_by_name(k)) for k in schema.duplicate_key]
+    eligible = (F.size("_errors") == 0) & F.col(SKIP_COL).isNull()
+    # Multi-file batches: `_order` is per-file, so first-wins across
+    # files orders by (file, line) — lexicographic file order, matching
+    # the sorted order a sequential loader would process a directory in.
+    order_cols = [FILE_COL, ORDER_COL] if multi_file else [ORDER_COL]
+    w = (
+        Window.partitionBy(*key)
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    eligible_seen = F.sum(F.when(eligible, 1).otherwise(0)).over(w)
+    status = (
+        F.when(F.col(SKIP_COL).isNotNull(), F.lit("skipped"))
+        .when(F.size("_errors") > 0, F.lit("invalid"))
+        .when(F.col("_eligible_seen") > 1, F.lit("duplicate"))
+        .otherwise(F.lit("valid"))
+    )
+
+    # Error taxonomy: one entry per error; duplicates count under
+    # 'duplicate' (reference src/validator.py:500-516), the rest under
+    # the text before the first ':'.
+    dup_msg = F.concat(
+        F.lit(f"duplicate key: {tuple(schema.duplicate_key)} = ("),
+        F.concat_ws(", ", *[_dup_val_repr(k) for k in schema.duplicate_key]),
+        F.lit(")"),
+    )
+    errs = F.when(F.col("_status") == "duplicate", F.array(dup_msg)).when(
+        F.col("_status") == "invalid", F.col("_errors")
+    )
+    error = F.col("_error")
+    return _ValidateExprs(
+        errors=errors,
+        eligible_seen=eligible_seen,
+        status=status,
+        explode=[
+            F.col("_status"),
+            *[F.col(c) for c in order_cols],
+            F.col("timestamp_ms"),
+            F.posexplode_outer(errs).alias("_pos", "_error"),
+        ],
+        error_type=F.when(error.startswith("duplicate key"), F.lit("duplicate")).otherwise(
+            F.substring_index(error, ":", 1)
+        ),
+        report_aggs=[
+            F.count_if(F.coalesce(F.col("_pos"), F.lit(0)) == 0).alias("rows"),
+            F.count(error).alias("errors"),
+            F.min("timestamp_ms").alias("lo"),
+            F.max("timestamp_ms").alias("hi"),
+        ],
+    )
+
+
 def validate(
     parsed: DataFrame,
     schema: SourceSchema,
     source_file: str = "",
     now_ms: int | None = None,
+    *,
+    stats: LoadStats | None = None,
 ) -> tuple[DataFrame, ValidationReport]:
     """Validate + first-wins-dedup a parsed DataFrame.
 
-    Returns (valid typed rows in schema column order, report). The
-    split is computed in one cached pass: error-array projection →
-    dedup window over the duplicate key ordered by input order →
-    single aggregation for the report counts, plus a small collect for
-    the ≤10 sample errors.
+    Returns (valid typed rows in schema column order, report). The rows
+    are labelled in one cached pass: error-array projection → dedup
+    window over the duplicate key ordered by input order → status. One
+    aggregation over the errors (one row per error, one per clean row)
+    then yields the status counts, ``errors_by_type`` and the valid
+    rows' ``timestamp_ms`` bounds (into ``stats`` when given); the ≤10
+    sample errors take a second small collect, run only when some row
+    is invalid or duplicate.
 
     Scope note: dedup here is whole-file. The reference's ENTSOE loader
     dedups per 1000-record insert batch (src/database.py:684-704), so
@@ -274,119 +409,52 @@ def validate(
     scope is the stricter (and batch-size-independent) semantics.
     """
     now_ms = now_ms if now_ms is not None else int(time.time() * 1000)
-
-    errs = [
-        _field_error(f, parsed[typ_col(f.name)], parsed[f.name], now_ms)
-        for f in schema.fields
-    ]
-    df = parsed.withColumn("_errors", F.array_compact(F.array(*errs)))
-    if SKIP_COL not in df.columns:
-        df = df.withColumn(SKIP_COL, F.lit(None).cast("string"))
-
-    # First-wins dedup among valid records only (reference
-    # src/validator.py:494-521): invalid records never claim a key, so a
-    # plain row_number over the partition would be wrong (an invalid row
-    # earlier in the file would steal rank 1). Instead count *eligible*
-    # rows up to and including the current one: the first eligible row in
-    # input order has a running count of exactly 1.
-    from pyspark.sql.window import Window
-
-    key = [
-        _dup_key_element(schema.fields_by_name(k), df) for k in schema.duplicate_key
-    ]
-    eligible = (F.size("_errors") == 0) & F.col(SKIP_COL).isNull()
-    # Multi-file batches: `_order` is per-file, so first-wins across
-    # files orders by (file, line) — lexicographic file order, matching
-    # the sorted order a sequential loader would process a directory in.
-    order_cols = (
-        [FILE_COL, ORDER_COL] if FILE_COL in df.columns else [ORDER_COL]
+    columns = parsed.columns
+    multi_file = FILE_COL in columns
+    x = session_exprs(
+        parsed.sparkSession,
+        ("validate", schema, multi_file),
+        lambda: _validate_exprs(schema, multi_file),
     )
-    w = (
-        Window.partitionBy(*key)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    lits = {NOW_COL: F.lit(now_ms).cast("long")}
+    if SKIP_COL not in columns:
+        lits[SKIP_COL] = F.lit(None).cast("string")
+    df = (
+        parsed.withColumns(lits)
+        .withColumn("_errors", x.errors)
+        .withColumn("_eligible_seen", x.eligible_seen)
+        .withColumn("_status", x.status)
+        .persist()
     )
-    df = df.withColumn(
-        "_eligible_seen", F.sum(F.when(eligible, 1).otherwise(0)).over(w)
-    )
-    df = df.withColumn(
-        "_status",
-        F.when(F.col(SKIP_COL).isNotNull(), F.lit("skipped"))
-        .when(F.size("_errors") > 0, F.lit("invalid"))
-        .when(F.col("_eligible_seen") > 1, F.lit("duplicate"))
-        .otherwise(F.lit("valid")),
-    ).persist()
 
     # --- report -------------------------------------------------------------
-    counts = {
-        r["_status"]: r["n"]
-        for r in df.groupBy("_status").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    report = ValidationReport(
-        source_file=source_file,
-        total_count=sum(v for k, v in counts.items() if k != "skipped"),
-        valid_count=counts.get("valid", 0),
-        invalid_count=counts.get("invalid", 0),
-        duplicate_count=counts.get("duplicate", 0),
-    )
+    per_error = df.select(*x.explode).withColumn("error_type", x.error_type)
+    counts: dict[str, int] = {}
+    report = ValidationReport(source_file=source_file)
+    for r in per_error.groupBy("_status", "error_type").agg(*x.report_aggs).collect():
+        counts[r["_status"]] = counts.get(r["_status"], 0) + r["rows"]
+        if r["error_type"] is not None:
+            by_type = report.errors_by_type
+            by_type[r["error_type"]] = by_type.get(r["error_type"], 0) + r["errors"]
+        if r["_status"] == "valid" and stats is not None:
+            stats.ts_lo, stats.ts_hi = r["lo"], r["hi"]
+    report.total_count = sum(v for k, v in counts.items() if k != "skipped")
+    report.valid_count = counts.get("valid", 0)
+    report.invalid_count = counts.get("invalid", 0)
+    report.duplicate_count = counts.get("duplicate", 0)
     if counts.get("skipped"):
         report.warnings["skipped_records"] = counts["skipped"]
-
-    # Error taxonomy: one entry per error; duplicates count under
-    # 'duplicate' (reference src/validator.py:500-516). The key detail
-    # renders as the Python tuple repr the reference emits
-    # (f"... = {dup_key}"): strings quoted, None for null/missing,
-    # True/False for bools, numbers bare.
-    def _dup_val_repr(k: str) -> Column:
-        t, v = df[typ_col(k)], df[k].cast("string")
-        return (
-            F.when(t.isNull() | (t == "VOID"), F.lit("None"))
-            .when(t == "BOOLEAN", F.initcap(v))
-            .when(t == "STRING", F.concat(F.lit("'"), v, F.lit("'")))
-            .otherwise(v)
+    if report.invalid_count or report.duplicate_count:
+        sample = (
+            per_error.filter("_error IS NOT NULL")
+            .orderBy(ORDER_COL, *([FILE_COL] if multi_file else []), "_pos")
+            .limit(10)
+            .selectExpr(f"{ORDER_COL} AS record_index", "error_type", "_error AS details")
         )
-
-    dup_msg = F.concat(
-        F.lit(f"duplicate key: {tuple(schema.duplicate_key)} = ("),
-        F.concat_ws(", ", *[_dup_val_repr(k) for k in schema.duplicate_key]),
-        F.lit(")"),
-    )
-    errored = (
-        df.filter(F.col("_status").isin("invalid", "duplicate"))
-        .select(
-            F.col(ORDER_COL).alias("record_index"),
-            F.when(F.col("_status") == "duplicate", F.array(dup_msg)).otherwise(
-                F.col("_errors")
-            ).alias("errs"),
-        )
-        .select("record_index", F.explode("errs").alias("error"))
-        .withColumn(
-            "error_type",
-            F.when(
-                F.col("error").contains(":"), F.split(F.col("error"), ":").getItem(0)
-            ).otherwise(F.col("error")),
-        )
-        .withColumn(
-            "error_type",
-            F.when(F.col("error").startswith("duplicate key"), "duplicate").otherwise(
-                F.col("error_type")
-            ),
-        )
-    ).persist()
-    for r in errored.groupBy("error_type").agg(F.count(F.lit(1)).alias("n")).collect():
-        report.errors_by_type[r["error_type"]] = r["n"]
-    for r in errored.orderBy("record_index").limit(10).collect():
-        report.sample_errors.append(
-            {
-                "record_index": r["record_index"],
-                "error_type": r["error_type"],
-                "details": r["error"],
-            }
-        )
-    errored.unpersist()
+        report.sample_errors = [r.asDict() for r in sample.collect()]
 
     valid = df.filter(F.col("_status") == "valid").select(
-        *([FILE_COL] if FILE_COL in df.columns else []),
+        *([FILE_COL] if multi_file else []),
         ORDER_COL,
         *[f.name for f in schema.fields],
     )

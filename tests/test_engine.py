@@ -525,3 +525,93 @@ def test_sanity_gate_passes_and_fails(engine, spark):
         engine.sanity_gate(cw, [
             ("npp coal plants", "source_system = 'npp' AND fuel = 'coal'", 200),
         ])
+
+
+DAY = 86_400_000
+
+
+def _freeze_load_clock(monkeypatch, now_ms):
+    """Pin the clock a load reads for created_at_ms and the timestamp
+    rule (now_ms is whole seconds, so the float round trip is exact)."""
+    from types import SimpleNamespace
+
+    from power_generation_etl_spark.sources import jsonl
+
+    monkeypatch.setattr(jsonl, "time", SimpleNamespace(time=lambda: now_ms / 1000))
+
+
+def test_per_load_values_stay_with_their_load(engine, tmp_path, monkeypatch):
+    """One session caches each source's load expressions; every load
+    must still carry its own run id, created_at_ms and clock."""
+    import uuid
+
+    now1 = FEB + 40 * DAY
+    now2 = now1 + 10 * DAY
+    late = now1 + 5 * DAY  # past now1's 24 h buffer, within now2's
+
+    def bare(ts, plant):
+        rec = _entsoe(ts, plant, 1.0)
+        del rec["extraction_run_id"], rec["created_at_ms"]
+        return rec
+
+    runs = []
+    for k, now in enumerate((now1, now2)):
+        run_id = str(uuid.uuid4())
+        path = _write(tmp_path, [bare(JAN + k * 3_600_000, f"P{k}"), bare(late, "LATE")], f"e{k}.jsonl")
+        _freeze_load_clock(monkeypatch, now)
+        runs.append((run_id, engine.load_jsonl("entsoe", path, run_id=run_id)))
+    (r1, res1), (r2, res2) = runs
+    assert (res1.inserted, res1.report.invalid_count) == (1, 1)
+    assert (res2.inserted, res2.report.invalid_count) == (2, 0)
+    rows = {
+        r["plant_name"]: (r["extraction_run_id"], r["created_at_ms"])
+        for r in engine.table("entsoe_generation_data").collect()
+    }
+    assert rows == {"P0": (r1, now1), "P1": (r2, now2), "LATE": (r2, now2)}
+    meta = {
+        r["extraction_run_id"]: (r["total_records"], r["failed_count"], str(r["end_date"]))
+        for r in engine.table("extraction_metadata").collect()
+    }
+    assert meta == {r1: (2, 1, "2024-01-01"), r2: (2, 0, "2024-03-17")}
+
+
+def test_first_record_gating_follows_each_file(engine, tmp_path, monkeypatch):
+    """EIA injects run metadata on every record only when the file's
+    first record lacks it; the cached expressions must follow each
+    file's first record, not the first file the session saw."""
+    import uuid
+
+    def eia(ts, **meta):
+        return {
+            **meta,
+            "timestamp_ms": ts,
+            "utility_id": 123,
+            "plant_code": 456,
+            "generator_id": "G1",
+            "state": "CA",
+            "prime_mover": "ST",
+            "net_generation_mwh": 1.5,
+        }
+
+    carried, other, passed = (str(uuid.uuid4()) for _ in range(3))
+    _freeze_load_clock(monkeypatch, FEB)
+    with_meta = _write(tmp_path, [
+        eia(JAN, extraction_run_id=carried, created_at_ms=JAN),
+        eia(JAN + 3_600_000, extraction_run_id=carried, created_at_ms=JAN),
+    ], "eia0.jsonl")
+    without_meta = _write(tmp_path, [
+        eia(JAN + 2 * 3_600_000),
+        eia(JAN + 3 * 3_600_000, extraction_run_id=other, created_at_ms=JAN),
+    ], "eia1.jsonl")
+    assert engine.load_jsonl("eia", with_meta, run_id=passed).inserted == 2
+    assert engine.load_jsonl("eia", without_meta, run_id=passed).inserted == 2
+    rows = {
+        r["timestamp_ms"]: (r["extraction_run_id"], r["created_at_ms"])
+        for r in engine.table("eia_generation_data").collect()
+    }
+    assert rows == {
+        JAN: (carried, JAN),
+        JAN + 3_600_000: (carried, JAN),
+        JAN + 2 * 3_600_000: (passed, FEB),
+        JAN + 3 * 3_600_000: (passed, FEB),
+    }

@@ -43,7 +43,7 @@ class TestWindowStart:
 
     def test_malformed_override_raises(self, monkeypatch):
         monkeypatch.setenv("START_OVERRIDE", "not-a-date")
-        with pytest.raises(ValueError):
+        with pytest.raises(ValueError, match="START_OVERRIDE='not-a-date'"):
             inc.window_start(FakeEngine("2024-06-15"), "entsoe")
 
     def test_min_start_date_clamp(self, monkeypatch):
@@ -65,6 +65,11 @@ class TestWindowEnd:
     def test_empty_override_defaults_to_today(self, monkeypatch):
         monkeypatch.setenv("END_OVERRIDE", "")
         assert inc.window_end(date(2026, 5, 3)) == date(2026, 5, 3)
+
+    def test_malformed_override_raises(self, monkeypatch):
+        monkeypatch.setenv("END_OVERRIDE", "2025-13-01")
+        with pytest.raises(ValueError, match="END_OVERRIDE='2025-13-01'"):
+            inc.window_end(date(2026, 5, 3))
 
 
 class TestLongWindowWarning:

@@ -121,6 +121,19 @@ class TestWriterLock:
         release.set()
         t.join()
 
+    @pytest.mark.parametrize("value", ["abc", "nan", "inf", "-1"])
+    def test_malformed_lock_timeout_env_raises(self, spark, tmp_path, monkeypatch, value):
+        """A bad wait is reported by name when a writer takes a lock;
+        nan would otherwise wait forever and -1 time out at once."""
+        monkeypatch.setenv("SPARK_ETL_STORE_LOCK_TIMEOUT_S", value)
+        store = TableStore(spark, str(tmp_path / "wh6"))
+        with pytest.raises(ValueError, match=f"SPARK_ETL_STORE_LOCK_TIMEOUT_S={value!r}"):
+            with store._table_lock("t"):
+                pass
+        monkeypatch.setenv("SPARK_ETL_STORE_LOCK_TIMEOUT_S", "0.5")
+        with store._table_lock("t"):
+            pass
+
     def test_crashed_holder_releases_lock(self, spark, tmp_path):
         """flock dies with its holder: after a writer process exits
         without unlocking (simulated by a child that locks and _exits),

@@ -412,6 +412,46 @@ class TestSplittableOrderedReader:
         by_order = {r["_order"]: json.loads(r["line"])["i"] for r in rows}
         assert by_order == {i: i for i in range(3000)}
 
+    @pytest.fixture()
+    def packed_splits(self, spark):
+        keys = (
+            "spark.sql.files.maxPartitionBytes",
+            "spark.sql.files.openCostInBytes",
+            "spark.sql.files.minPartitionNum",
+        )
+        old = {k: spark.conf.get(k, None) for k in keys}
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(64 << 20))
+        spark.conf.set("spark.sql.files.openCostInBytes", "0")
+        spark.conf.set("spark.sql.files.minPartitionNum", "1")
+        yield
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+    def test_order_per_file_when_files_share_a_partition(self, spark, tmp_path, packed_splits):
+        from power_generation_etl_spark.sources.jsonl import read_jsonl_lines
+
+        sizes = {"a.jsonl": 40, "b.jsonl": 300, "c.jsonl": 7}
+        paths = []
+        for name, n in sizes.items():
+            p = tmp_path / name
+            with open(p, "w") as f:
+                for i in range(n):
+                    if i % 3 == 0:
+                        f.write("\n  \n")  # blank lines must not shift _order
+                    f.write(json.dumps({"f": name, "i": i}) + "\n")
+            paths.append(str(p))
+        assert spark.read.text(paths).rdd.getNumPartitions() < len(paths)
+        got: dict[str, list[tuple[int, int]]] = {}
+        for r in read_jsonl_lines(spark, paths).collect():
+            rec = json.loads(r["line"])
+            got.setdefault(rec["f"], []).append((r["_order"], rec["i"]))
+        assert {f: sorted(v) for f, v in got.items()} == {
+            name: [(i, i) for i in range(n)] for name, n in sizes.items()
+        }
+
     def test_first_wins_dedup_across_splits(self, spark, tmp_path, tiny_splits):
         # Duplicate keys landing in different scan splits: the earlier
         # line must win, exactly as the reference's sequential loop.
@@ -421,3 +461,41 @@ class TestSplittableOrderedReader:
         kept = {r["timestamp_ms"]: r["generation_mwh"] for r in valid.collect()}
         # first occurrence of each key is i = key index (i % 50 == i for i < 50)
         assert kept == {NOW - 1000 - i: float(i) for i in range(50)}
+
+
+def test_session_exprs_builds_once_under_contention():
+    """Concurrent first loads of one source share a single expression
+    build; every caller gets the same cached object."""
+    import sys
+    import threading
+
+    from power_generation_etl_spark.validation import session_exprs
+
+    class Session:  # stands in for a SparkSession: the cache only keys on it
+        pass
+
+    session, builds, results = Session(), [], []
+    start = threading.Barrier(16)
+
+    def build():
+        builds.append(1)
+        time.sleep(0.01)
+        return object()
+
+    def load():
+        start.wait(10)
+        results.append(session_exprs(session, ("k",), build))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=load) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(30)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(builds) == 1 and len(results) == 16
+    assert all(r is results[0] for r in results)
