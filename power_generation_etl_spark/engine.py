@@ -191,13 +191,12 @@ class Engine:
             # validation pass already knows the valid rows' bounds; the
             # stored key includes timestamp_ms, so the deduped batch has
             # the same ones.
-            bounds = (stats.ts_lo, stats.ts_hi)
             existing = (
-                self.store.read_range(schema.table, *bounds)
+                self.store.read_range(schema.table, stats.ts_lo, stats.ts_hi)
                 if stats.ts_lo is not None
                 else self.store.read(schema.table)
             )
-            new_rows = anti_join_new_rows(batch, existing, schema, bounds=bounds)
+            new_rows = anti_join_new_rows(batch, existing, schema)
         else:
             new_rows = batch
         new_rows = new_rows.persist()

@@ -29,32 +29,17 @@ def natural_key_cols(schema: SourceSchema, df: DataFrame) -> list[Column]:
 
 
 def anti_join_new_rows(
-    batch: DataFrame,
-    existing: DataFrame,
-    schema: SourceSchema,
-    *,
-    bounds: tuple[int | None, int | None] | None = None,
+    batch: DataFrame, existing: DataFrame, schema: SourceSchema
 ) -> DataFrame:
     """Rows of `batch` whose natural key does not already exist
     (reference `INSERT … ON CONFLICT DO NOTHING`, src/database.py:288-294).
 
-    Scale notes: the existing side is pre-filtered to the batch's
-    timestamp range before the join (partition/row-group pruning on the
-    `timestamp_ms` min/max), and only key columns are projected, so the
-    shuffle carries keys — not whole rows — of the target table.
-    ``bounds`` is a known (lo, hi) covering the batch's `timestamp_ms`
-    (lo None: no bound); without it one aggregation computes them.
+    Scale notes: only key columns of `existing` are projected, so the
+    shuffle carries keys — not whole rows — of the target table. Pass a
+    time-bounded `existing` (`TableStore.read_range` over the batch's
+    `timestamp_ms` range) so the target side is partition-pruned before
+    the join.
     """
-    if bounds is None:
-        row = batch.agg(
-            F.min("timestamp_ms").alias("lo"), F.max("timestamp_ms").alias("hi")
-        ).head()
-        bounds = (row["lo"], row["hi"])
-    lo, hi = bounds
-    if lo is not None and "timestamp_ms" in existing.columns:
-        existing = existing.filter(
-            (F.col("timestamp_ms") >= lo) & (F.col("timestamp_ms") <= hi)
-        )
     key_names = [f"_k_{k}" for k in schema.natural_key]
     b = batch.select(batch["*"], *natural_key_cols(schema, batch))
     e = existing.select(*natural_key_cols(schema, existing)).dropDuplicates(key_names)

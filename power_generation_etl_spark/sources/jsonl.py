@@ -92,6 +92,16 @@ def read_jsonl_lines(spark: SparkSession, path: str | list[str]) -> DataFrame:
     partition (a partition reads its splits one after another, each in
     file order), so within a split the ids are consecutive. Several
     splits — of one file or of several files — may share a partition.
+    Because the id encodes the partition index, the aggregate's scan of
+    ``lines`` and the join side's scan must also plan identical
+    partitions. They do: both read the one relation ``spark.read.text``
+    built (one cached file listing), so they cut the same splits
+    whenever their split size — ``maxPartitionBytes``,
+    ``openCostInBytes`` and the default parallelism — is the same, and
+    the packing of splits into partitions is a deterministic function of
+    those splits. The (file, split) join key already needs identical
+    splits; a parallelism change between the two scans (executors added
+    mid-query) would break both.
 
     Split order comes from the contractual ``_metadata.file_block_start``
     hidden column (the split's byte offset within the file, Spark
@@ -234,7 +244,7 @@ def _inject_metadata_first_record_gated(missing: tuple[str, ...]) -> dict[str, C
     return out
 
 
-def _fixup_npp(missing: tuple[str, ...]) -> Stages:
+def _fixup_npp() -> Stages:
     """Reference src/database.py:480-499: per-record harmonized/legacy split."""
     harmonized = F.col(typ_col("extraction_run_id")).isNotNull() & F.col(
         typ_col("timestamp_ms")
@@ -269,7 +279,7 @@ def _fixup_npp(missing: tuple[str, ...]) -> Stages:
     return [run_id, rest]
 
 
-def _fixup_entsoe(missing: tuple[str, ...]) -> Stages:
+def _fixup_entsoe() -> Stages:
     """Reference src/database.py:621-682: per-record metadata injection,
     string-timestamp parse (naive treated as UTC, unparseable/null →
     record skipped with warning), PSR→fuel_type remap, plant-name
@@ -360,11 +370,11 @@ def _fixup_gated(missing: tuple[str, ...]) -> Stages:
     return [_inject_metadata_first_record_gated(missing)]
 
 
-# source → fixup builder; each takes the metadata fields the first
-# record lacks (only the first-record-gated sources use them).
-_FIXUPS = {
-    "npp": _fixup_npp,
-    "entsoe": _fixup_entsoe,
+# source → fixup builder. npp and entsoe fill run metadata per record;
+# the first-record-gated builders take the metadata fields the file's
+# first record lacks, which is part of their cache key.
+_FIXUPS = {"npp": _fixup_npp, "entsoe": _fixup_entsoe}
+_GATED_FIXUPS = {
     "eia": _fixup_eia,
     "ons": _fixup_gated,
     "oe": _fixup_gated,
@@ -393,12 +403,15 @@ def load_and_validate(
     stats = stats if stats is not None else LoadStats()
     stats.first_record = peek_first_record(spark, path)
     created_at_ms = now_ms if now_ms is not None else int(time.time() * 1000)
-    missing = tuple(
-        f for f in ("extraction_run_id", "created_at_ms") if f not in stats.first_record
-    )
-    stages = session_exprs(
-        spark, ("fixup", source, missing), lambda: _FIXUPS[source](missing)
-    )
+    if source in _GATED_FIXUPS:
+        missing = tuple(
+            f for f in ("extraction_run_id", "created_at_ms") if f not in stats.first_record
+        )
+        stages = session_exprs(
+            spark, ("fixup", source, missing), lambda: _GATED_FIXUPS[source](missing)
+        )
+    else:
+        stages = session_exprs(spark, ("fixup", source), _FIXUPS[source])
     df = parse_fields(read_jsonl_lines(spark, path), schema).withColumns(
         {RUN_ID_COL: F.lit(run_id or str(uuid.uuid4())), CREATED_COL: F.lit(created_at_ms)}
     )

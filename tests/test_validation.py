@@ -212,6 +212,18 @@ class TestEntsoeValidation:
         valid, report = _load(spark, tmp_path, "entsoe", [self._entsoe()])
         assert valid.collect()[0]["fuel_type"] == "Solar"
 
+    def test_fixups_built_once_whatever_the_first_record(self, spark, tmp_path):
+        """ENTSOE fills run metadata per record, so whether the first
+        record carries it must not key a second fixup build."""
+        from power_generation_etl_spark.validation import _SESSION_EXPRS
+
+        for i, meta in enumerate([{}, {"extraction_run_id": ..., "created_at_ms": ...}]):
+            path = _write(tmp_path, [self._entsoe(**meta)], f"entsoe{i}.jsonl")
+            valid, _ = load_and_validate(spark, "entsoe", path, run_id=RUN_ID)
+            assert valid.count() == 1
+        keys = [k for k in _SESSION_EXPRS[spark] if k[:2] == ("fixup", "entsoe")]
+        assert keys == [("fixup", "entsoe")]
+
     def test_unknown_psr_keeps_fuel_type(self, spark, tmp_path):
         valid, report = _load(
             spark, tmp_path, "entsoe", [self._entsoe(psr_type="ZZ", fuel_type="Coal")]
