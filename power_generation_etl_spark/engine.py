@@ -171,39 +171,46 @@ class Engine:
         # (reference src/database.py:627-630 first_run_id capture).
         if isinstance(stats.first_record.get("extraction_run_id"), str):
             run_id = stats.first_record["extraction_run_id"]
-        if strict:
-            strict_gate(report)
+        # The labelled frame stays cached until the new rows are
+        # counted and appended; a month loop or an intake stream would
+        # otherwise keep every load's blocks until the ContextCleaner
+        # drops the DataFrame.
+        try:
+            if strict:
+                strict_gate(report)
 
-        # In-batch stored-key dedup before the anti-join: rows that are
-        # distinct under in-file duplicate-key semantics (null vs '') can
-        # still collide on the COALESCE('') stored natural key; the later
-        # row is dropped and counted as skipped_existing, matching the
-        # reference's single-statement ON CONFLICT DO NOTHING.
-        batch_order = (
-            [FILE_COL, ORDER_COL] if FILE_COL in valid.columns else [ORDER_COL]
-        )
-        batch = dedupe_batch_stored_key(valid, schema, batch_order).drop(
-            FILE_COL, ORDER_COL
-        )
-        if self.store.exists(schema.table):
-            # Partition-pruned target read: only the batch's months are
-            # even listed, so the anti-join scans O(batch months). The
-            # validation pass already knows the valid rows' bounds; the
-            # stored key includes timestamp_ms, so the deduped batch has
-            # the same ones.
-            existing = (
-                self.store.read_range(schema.table, stats.ts_lo, stats.ts_hi)
-                if stats.ts_lo is not None
-                else self.store.read(schema.table)
+            # In-batch stored-key dedup before the anti-join: rows that are
+            # distinct under in-file duplicate-key semantics (null vs '') can
+            # still collide on the COALESCE('') stored natural key; the later
+            # row is dropped and counted as skipped_existing, matching the
+            # reference's single-statement ON CONFLICT DO NOTHING.
+            batch_order = (
+                [FILE_COL, ORDER_COL] if FILE_COL in valid.columns else [ORDER_COL]
             )
-            new_rows = anti_join_new_rows(batch, existing, schema)
-        else:
-            new_rows = batch
-        new_rows = new_rows.persist()
-        inserted = new_rows.count()
-        if inserted:
-            self.store.append(schema.table, new_rows)
-        new_rows.unpersist()
+            batch = dedupe_batch_stored_key(valid, schema, batch_order).drop(
+                FILE_COL, ORDER_COL
+            )
+            if self.store.exists(schema.table):
+                # Partition-pruned target read: only the batch's months are
+                # even listed, so the anti-join scans O(batch months). The
+                # validation pass already knows the valid rows' bounds; the
+                # stored key includes timestamp_ms, so the deduped batch has
+                # the same ones.
+                existing = (
+                    self.store.read_range(schema.table, stats.ts_lo, stats.ts_hi)
+                    if stats.ts_lo is not None
+                    else self.store.read(schema.table)
+                )
+                new_rows = anti_join_new_rows(batch, existing, schema)
+            else:
+                new_rows = batch
+            new_rows = new_rows.persist()
+            inserted = new_rows.count()
+            if inserted:
+                self.store.append(schema.table, new_rows)
+            new_rows.unpersist()
+        finally:
+            stats.labelled.unpersist(blocking=False)
         skipped = report.valid_count - inserted
 
         if write_metadata:

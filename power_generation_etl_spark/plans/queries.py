@@ -33,10 +33,12 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from power_generation_etl_spark.operators import rank as rk
 from power_generation_etl_spark.operators.minhash import portable_hash32
+from power_generation_etl_spark.session import session_cached
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -287,9 +289,54 @@ def ntz_epoch_us(col) -> "F.Column":
     )
 
 
+def _data_files_signature(path: str) -> tuple | None:
+    """Names, sizes and mtimes of a parquet table's data files: the
+    file itself, or every file under a Spark-written directory except
+    ``.``/``_`` names (checksums, ``_SUCCESS``). None when the path is
+    not on the local filesystem."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return (st.st_size, st.st_mtime_ns)
+        sig = []
+        for root, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+            for f in files:
+                if not f.startswith((".", "_")):
+                    st = os.stat(os.path.join(root, f))
+                    sig.append((os.path.join(root, f), st.st_size, st.st_mtime_ns))
+        return tuple(sorted(sig))
+    except OSError:
+        return None
+
+
+def input_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema of the parquet table at ``path``, inferred (one Spark
+    job) once per session, absolute path and data-file signature: a
+    table rewritten at the same path is inferred again. Remote paths
+    are inferred on every call. Only for input tables; stores and
+    warehouses written in-session keep plain reads."""
+    def infer() -> StructType:
+        return spark.read.parquet(path).schema
+
+    sig = _data_files_signature(path)
+    if sig is None:
+        return infer()
+    return session_cached(spark, ("input_schema", os.path.abspath(path), sig), infer)
+
+
+def read_input(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the session's cached schema, so
+    only the first read of a table launches a schema-inference job.
+    Reads of one path stay ``sameSemantics`` (PlanMemo keys on that),
+    also with reads that inferred the schema themselves."""
+    return spark.read.schema(input_schema(spark, path)).parquet(path)
+
+
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one synthetic table. Parquet → vectorized columnar read with
-    predicate pushdown + column pruning handled by Catalyst.
+    """Scan one synthetic table (``read_input``). Parquet → vectorized
+    columnar read with predicate pushdown + column pruning handled by
+    Catalyst.
 
     ``events.ts`` is written as TIMESTAMP(NANOS), which Spark's reader
     rejects by default; read it as long nanos and convert to a proper
@@ -297,8 +344,8 @@ def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return ts_to_ntz(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        return ts_to_ntz(read_input(spark, f"{sf_dir}/{name}.parquet"))
+    return read_input(spark, f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------

@@ -22,6 +22,7 @@ from power_generation_etl_spark.operators import scoring as sc
 from power_generation_etl_spark.operators import sketch as sk
 from power_generation_etl_spark.plans.queries import T, _register
 from power_generation_etl_spark.plans.temporal_queries import T_events_us
+from power_generation_etl_spark.session import positive_int_env
 
 _DAY_US = 86_400_000_000
 
@@ -294,9 +295,7 @@ def _fuzzy_name_domain_max() -> int:
     share p_brand anyway, and lev<=2 implies |len(a)-len(b)|<=2).
     Env-overridable so tests can force the fallback on small data.
     """
-    import os
-
-    return int(os.environ.get("SPARK_ETL_FUZZY_NAME_DOMAIN_MAX", "8192"))
+    return positive_int_env("SPARK_ETL_FUZZY_NAME_DOMAIN_MAX", 8192)
 
 
 def _fuzzy_blocked_name_pairs(p: DataFrame) -> DataFrame:

@@ -63,6 +63,7 @@ from power_generation_etl_spark.plans.queries import (
     T,
     _register,
     hash_halves,
+    input_schema,
     link_data_files,
     ntz_epoch_us,
     overlap_two_rounds,
@@ -75,19 +76,18 @@ from power_generation_etl_spark.plans.queries import (
 _MEM_SEQ = itertools.count()
 
 
-def _stream_events(spark: SparkSession, sf_dir_or_path: str):
-    """readStream over an events parquet path, normalizing `ts` to
-    TIMESTAMP_NTZ holding the file's naive wall-clock via the SAME
-    shared helper as the batch T() scan (`queries.ts_to_ntz`) —
-    independent of session timezone and of whether the session's
-    parquet reader produced epoch-ns bigint (vanilla + nanosAsLong) or
-    TIMESTAMP_NTZ (ntz-inferring sessions). The streaming source needs
-    an explicit schema, so probe it with a static read."""
+def _stream_events(spark: SparkSession, sf_dir: str, landing: str):
+    """readStream over a landing dir of links to `{sf_dir}/events.parquet`,
+    normalizing `ts` to TIMESTAMP_NTZ holding the file's naive
+    wall-clock via the SAME shared helper as the batch T() scan
+    (`queries.ts_to_ntz`) — independent of session timezone and of
+    whether the session's parquet reader produced epoch-ns bigint
+    (vanilla + nanosAsLong) or TIMESTAMP_NTZ (ntz-inferring sessions).
+    The streaming source needs an explicit schema: the linked source
+    table's, which the session infers once (`queries.input_schema`)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(sf_dir_or_path)
-    return ts_to_ntz(
-        spark.readStream.schema(static.schema).parquet(sf_dir_or_path)
-    )
+    schema = input_schema(spark, f"{sf_dir}/events.parquet")
+    return ts_to_ntz(spark.readStream.schema(schema).parquet(landing))
 
 
 def _mem_name(prefix: str) -> str:
@@ -119,7 +119,7 @@ def stream_hourly_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     with stream_dirs("stream_hourly") as d:
         link_data_files(f"{sf_dir}/events.parquet", d.landing, "c0")
         agg = (
-            _stream_events(spark, d.landing)
+            _stream_events(spark, sf_dir, d.landing)
             .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
             .agg(F.count(F.lit(1)).alias("n_events"))
         )
@@ -197,7 +197,7 @@ def stream_dedup_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         for tag in ("c0", "c1"):  # the SAME file, twice
             link_data_files(f"{sf_dir}/events.parquet", d.landing, tag)
         deduped = (
-            _stream_events(spark, d.landing)
+            _stream_events(spark, sf_dir, d.landing)
             .select("event_id", "event_type")
             .dropDuplicates(["event_id"])
         )
@@ -1365,7 +1365,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     with stream_dirs("stream_enrich") as d:
         link_data_files(f"{sf_dir}/events.parquet", d.landing, "c0")
-        joined = _stream_events(spark, d.landing).join(
+        joined = _stream_events(spark, sf_dir, d.landing).join(
             dim, F.col("user_id") == F.col("c_custkey"), "inner"
         )
         agg = joined.groupBy("segment", "event_type").agg(

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from power_generation_etl_spark.operators import temporal as tmp
-from power_generation_etl_spark.plans.queries import _register, ntz_epoch_us
+from power_generation_etl_spark.plans.queries import _register, ntz_epoch_us, read_input
 
 GAP_US = 30 * 60 * 1_000_000  # 30 min session gap / follow-up window
 
@@ -29,7 +29,7 @@ def T_events_us(spark: SparkSession, sf_dir: str) -> DataFrame:
     nanos timestamp — integer division, never float (µs at 1e15 exceed
     double's exact range only at ns precision)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = read_input(spark, f"{sf_dir}/events.parquet")
     dt = dict(df.dtypes).get("ts")
     if dt == "bigint":
         return df.withColumn("ts_us", F.expr("ts div 1000")).drop("ts")

@@ -16,7 +16,7 @@ record index the reference's ``enumerate`` produces — the lines are
 never shuffled, and a multi-GB file still parses across many tasks.
 
 Loads: each source's parse, fixup and validation expressions are built
-once per session (``validation.session_exprs``); a load adds its run id
+once per session (``session.session_cached``); a load adds its run id
 and clock as literal columns and pays one validation pass.
 """
 
@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from power_generation_etl_spark.schemas import SOURCES, SourceSchema
+from power_generation_etl_spark.session import session_cached
 from power_generation_etl_spark.validation import (
     ORDER_COL,
     SKIP_COL,
@@ -37,7 +38,6 @@ from power_generation_etl_spark.validation import (
     LoadStats,
     ValidationReport,
     parse_fields,
-    session_exprs,
     typ_col,
     validate,
 )
@@ -407,11 +407,11 @@ def load_and_validate(
         missing = tuple(
             f for f in ("extraction_run_id", "created_at_ms") if f not in stats.first_record
         )
-        stages = session_exprs(
+        stages = session_cached(
             spark, ("fixup", source, missing), lambda: _GATED_FIXUPS[source](missing)
         )
     else:
-        stages = session_exprs(spark, ("fixup", source), _FIXUPS[source])
+        stages = session_cached(spark, ("fixup", source), _FIXUPS[source])
     df = parse_fields(read_jsonl_lines(spark, path), schema).withColumns(
         {RUN_ID_COL: F.lit(run_id or str(uuid.uuid4())), CREATED_COL: F.lit(created_at_ms)}
     )

@@ -17,9 +17,7 @@ reader speed at any scale.
 
 from __future__ import annotations
 
-import threading
 import time
-import weakref
 from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -27,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from power_generation_etl_spark.schemas import US_STATE_CODES, UUID_RE, Field, SourceSchema
+from power_generation_etl_spark.session import session_cached
 
 # 24 h future buffer for timestamps (reference src/validator.py:83-85).
 MAX_FUTURE_BUFFER_MS = 24 * 60 * 60 * 1000
@@ -43,24 +42,12 @@ def typ_col(f: str) -> str:
     return f"_typ_{f}"
 
 
-_SESSION_EXPRS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
-_SESSION_EXPRS_LOCK = threading.Lock()
-
-
-def session_exprs(spark: SparkSession, key, build):
-    """``build()``'s Column expressions, built once per session and key.
-
-    Building a load's expressions takes hundreds of py4j calls, so they
-    are cached and shared by every load of the session. A cached
-    expression names its inputs with ``F.col`` (``df[name]`` binds one
-    plan's attribute ids) and reads per-load values (run id,
-    created_at_ms, now_ms) from literal columns each load adds to its
-    own frame; it never captures them."""
-    with _SESSION_EXPRS_LOCK:
-        cache = _SESSION_EXPRS.setdefault(spark, {})
-        if key not in cache:
-            cache[key] = build()
-        return cache[key]
+# Building a load's expressions takes hundreds of py4j calls, so they
+# are built once per session (``session_cached``) and shared by every
+# load. A cached expression names its inputs with ``F.col`` (``df[name]``
+# binds one plan's attribute ids) and reads per-load values (run id,
+# created_at_ms, now_ms) from literal columns each load adds to its own
+# frame; it never captures them.
 
 
 # --- JSON-type predicates over schema_of_variant output ---------------------
@@ -204,12 +191,15 @@ class ValidationReport:
 @dataclass
 class LoadStats:
     """What one load's validation pass learns besides the report: the
-    valid rows' ``timestamp_ms`` bounds (None when no row is valid) and,
-    for a JSONL load, the first record of the file."""
+    valid rows' ``timestamp_ms`` bounds (None when no row is valid),
+    for a JSONL load the first record of the file, and the persisted
+    labelled frame the valid rows read from, for the caller to
+    unpersist once it has consumed them."""
 
     ts_lo: int | None = None
     ts_hi: int | None = None
     first_record: dict = dc_field(default_factory=dict)
+    labelled: DataFrame | None = None
 
 
 def _parse_exprs(schema: SourceSchema, line_col: str) -> tuple[Column, list[Column]]:
@@ -238,7 +228,7 @@ def parse_fields(raw: DataFrame, schema: SourceSchema, line_col: str = "line") -
     ``record.get`` erases; validation reunifies them where parity
     demands).
     """
-    variant, cols = session_exprs(
+    variant, cols = session_cached(
         raw.sparkSession, ("parse", schema, line_col), lambda: _parse_exprs(schema, line_col)
     )
     return raw.withColumn(VARIANT_COL, variant).select("*", *cols)
@@ -397,9 +387,9 @@ def validate(
     window over the duplicate key ordered by input order → status. One
     aggregation over the errors (one row per error, one per clean row)
     then yields the status counts, ``errors_by_type`` and the valid
-    rows' ``timestamp_ms`` bounds (into ``stats`` when given); the ≤10
-    sample errors take a second small collect, run only when some row
-    is invalid or duplicate.
+    rows' ``timestamp_ms`` bounds (into ``stats`` when given, with the
+    cached labelled frame); the ≤10 sample errors take a second small
+    collect, run only when some row is invalid or duplicate.
 
     Scope note: dedup here is whole-file. The reference's ENTSOE loader
     dedups per 1000-record insert batch (src/database.py:684-704), so
@@ -411,7 +401,7 @@ def validate(
     now_ms = now_ms if now_ms is not None else int(time.time() * 1000)
     columns = parsed.columns
     multi_file = FILE_COL in columns
-    x = session_exprs(
+    x = session_cached(
         parsed.sparkSession,
         ("validate", schema, multi_file),
         lambda: _validate_exprs(schema, multi_file),
@@ -426,6 +416,8 @@ def validate(
         .withColumn("_status", x.status)
         .persist()
     )
+    if stats is not None:
+        stats.labelled = df
 
     # --- report -------------------------------------------------------------
     per_error = df.select(*x.explode).withColumn("error_type", x.error_type)

@@ -615,3 +615,24 @@ def test_first_record_gating_follows_each_file(engine, tmp_path, monkeypatch):
         JAN + 2 * 3_600_000: (passed, FEB),
         JAN + 3 * 3_600_000: (passed, FEB),
     }
+
+
+def test_load_releases_its_labelled_frame(engine, spark, tmp_path):
+    """The validation pass caches the labelled frame; the load unpersists
+    it once the new rows are appended, also when the same file is
+    loaded again (0 rows inserted) and when the strict gate fails."""
+    path = _write(tmp_path, [_entsoe(JAN + k * 3_600_000, f"P{k}", 1.0) for k in range(3)]
+                  + [_entsoe(JAN, "P0", 1.0)])
+
+    def persisted() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = persisted()
+    assert engine.load_jsonl("entsoe", path).inserted == 3
+    assert persisted() == before
+    again = engine.load_jsonl("entsoe", path)
+    assert (again.inserted, again.skipped_existing) == (0, 3)
+    assert persisted() == before
+    with pytest.raises(ValueError, match="strict mode"):
+        engine.load_jsonl("entsoe", path, strict=True)
+    assert persisted() == before

@@ -4,6 +4,7 @@ and rolling range windows."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from power_generation_etl_spark.operators import corpus as cp
@@ -214,6 +215,14 @@ class TestAnalyticsBreadth:
         assert "BroadcastNestedLoopJoin" not in plan
         assert "CartesianProduct" not in plan
         assert fallback_df.collect() == primary
+
+    @pytest.mark.parametrize("value", ["abc", "0", "-1"])
+    def test_fuzzy_name_domain_env_rejects_non_positive_integers(
+        self, spark, sf_dir, monkeypatch, value
+    ):
+        monkeypatch.setenv("SPARK_ETL_FUZZY_NAME_DOMAIN_MAX", value)
+        with pytest.raises(ValueError, match="SPARK_ETL_FUZZY_NAME_DOMAIN_MAX"):
+            QUERIES["fuzzy_part_name_pairs"](spark, sf_dir)
 
     def test_latest_snapshot_one_row_per_customer(self, spark, sf_dir):
         df = QUERIES["latest_order_snapshot"](spark, sf_dir)

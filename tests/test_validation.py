@@ -215,13 +215,13 @@ class TestEntsoeValidation:
     def test_fixups_built_once_whatever_the_first_record(self, spark, tmp_path):
         """ENTSOE fills run metadata per record, so whether the first
         record carries it must not key a second fixup build."""
-        from power_generation_etl_spark.validation import _SESSION_EXPRS
+        from power_generation_etl_spark.session import _SESSION_CACHE
 
         for i, meta in enumerate([{}, {"extraction_run_id": ..., "created_at_ms": ...}]):
             path = _write(tmp_path, [self._entsoe(**meta)], f"entsoe{i}.jsonl")
             valid, _ = load_and_validate(spark, "entsoe", path, run_id=RUN_ID)
             assert valid.count() == 1
-        keys = [k for k in _SESSION_EXPRS[spark] if k[:2] == ("fixup", "entsoe")]
+        keys = [k for k in _SESSION_CACHE[spark] if k[:2] == ("fixup", "entsoe")]
         assert keys == [("fixup", "entsoe")]
 
     def test_unknown_psr_keeps_fuel_type(self, spark, tmp_path):
@@ -481,7 +481,7 @@ def test_session_exprs_builds_once_under_contention():
     import sys
     import threading
 
-    from power_generation_etl_spark.validation import session_exprs
+    from power_generation_etl_spark.session import session_cached
 
     class Session:  # stands in for a SparkSession: the cache only keys on it
         pass
@@ -496,7 +496,7 @@ def test_session_exprs_builds_once_under_contention():
 
     def load():
         start.wait(10)
-        results.append(session_exprs(session, ("k",), build))
+        results.append(session_cached(session, ("k",), build))
 
     old = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)

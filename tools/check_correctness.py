@@ -85,6 +85,12 @@ def main() -> int:
         else:
             print(f"  {name}: OK ({len(srows)} rows)")
     print(f"{'PASS' if failures == 0 else 'FAIL'}: {len(qs) - failures}/{len(qs)} queries match")
+    # The session's generated-class working set (get_spark sizes the
+    # codegen cache for it). The histogram keeps a sample, so the total
+    # is count × sample mean.
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    n = compiles.getCount()
+    print(f"codegen: {n} classes compiled, ~{n * compiles.getSnapshot().getMean():.0f} ms compiling")
     return 1 if failures else 0
 
 
