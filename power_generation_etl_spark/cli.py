@@ -645,7 +645,7 @@ def _dispatch(args, spark, eng: Engine) -> int:
     elif args.cmd == "list-versions":
         vs = eng.store.versions(args.table)
         for v in vs:
-            print(f"v{v}  {eng.store.read_version(args.table, v).count():>12,} rows")
+            print(f"v{v}  {eng.table(args.table, version=v).count():>12,} rows")
         print(f"({len(vs)} archived versions)")
     elif args.cmd == "restore-table":
         eng.store.restore(args.table, args.version)
@@ -656,7 +656,9 @@ def _dispatch(args, spark, eng: Engine) -> int:
     elif args.cmd == "diff-versions":
         # one execution of the two exceptAll passes serves both the
         # count aggregation and the printed sample
-        diff = eng.store.diff_versions(args.table, args.version).localCheckpoint()
+        diff = eng.store.diff_versions(
+            args.table, args.version, rows=eng.resolver(args.table)
+        ).localCheckpoint()
         counts = {
             r["_change"]: r["n"]
             for r in diff.groupBy("_change").agg(F.count(F.lit(1)).alias("n")).collect()

@@ -13,8 +13,10 @@ import time
 import uuid
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from power_generation_etl_spark.operators.dedupe import (
     anti_join_new_rows,
@@ -27,7 +29,7 @@ from power_generation_etl_spark.schemas import (
     SOURCES,
 )
 from power_generation_etl_spark.sources.jsonl import load_and_validate
-from power_generation_etl_spark.store import TableStore
+from power_generation_etl_spark.store import TableStore, local_frame
 from power_generation_etl_spark.validation import (
     FILE_COL,
     ORDER_COL,
@@ -47,6 +49,51 @@ DRIFT_SOURCE_CHECKS = [
     ("OCCTO", "occto_generation_data", "plant", "plant_name"),
     ("CHILE", "chile_generation_data", "plant", "plant_name"),
 ]
+
+
+META = "extraction_metadata"
+# Engine-internal write order of the metadata log's rows (see
+# `resolve_metadata`); readers never see it.
+WRITE_SEQ = "_write_seq"
+STORED_METADATA_SCHEMA = T.StructType(
+    [*EXTRACTION_METADATA_SCHEMA.fields, T.StructField(WRITE_SEQ, T.LongType(), False)]
+)
+# Only these are updated on conflict (reference src/database.py:1765-1784).
+CONFLICT_UPDATE_COLS = [
+    "total_records",
+    "failed_count",
+    "success",
+    "failed_details",
+    "start_date",
+    "end_date",
+]
+
+
+def resolve_metadata(stored: DataFrame) -> DataFrame:
+    """The extraction_metadata table as every reader sees it: one row
+    per extraction_run_id out of the append-only log `upsert_metadata`
+    writes. The identity columns (source, extraction_timestamp,
+    config_snapshot, ...) come from the run's first row and the
+    `CONFLICT_UPDATE_COLS` from its latest, nulls included — what the
+    reference's INSERT ... ON CONFLICT DO UPDATE leaves behind. Rows
+    written before the log existed have no write order; they sort first,
+    and there is one per run."""
+    if WRITE_SEQ not in stored.columns:
+        stored = stored.withColumn(WRITE_SEQ, F.lit(None).cast("long"))
+    key = "extraction_run_id"
+    names = [f.name for f in EXTRACTION_METADATA_SCHEMA.fields]
+    ident = [c for c in names if c != key and c not in CONFLICT_UPDATE_COLS]
+    seq = F.col(WRITE_SEQ)
+    runs = stored.groupBy(key).agg(
+        F.min(F.struct(seq, *ident)).alias("_first"),
+        F.max(F.struct(seq, *CONFLICT_UPDATE_COLS)).alias("_latest"),
+    )
+    return runs.select(
+        *[
+            c if c == key else F.col(f"{'_first' if c in ident else '_latest'}.{c}").alias(c)
+            for c in names
+        ]
+    )
 
 
 @dataclass
@@ -78,9 +125,9 @@ class Engine:
             if not self.store.exists(schema.table):
                 self.store.create(schema.table, schema.struct_type())
                 created.append(schema.table)
-        if not self.store.exists("extraction_metadata"):
-            self.store.create("extraction_metadata", EXTRACTION_METADATA_SCHEMA)
-            created.append("extraction_metadata")
+        if not self.store.exists(META):
+            self.store.create(META, STORED_METADATA_SCHEMA)
+            created.append(META)
         return created
 
     # --- S10: bootstrap / connection probe -----------------------------------
@@ -121,8 +168,22 @@ class Engine:
                 updated.append(schema.table)
         return updated
 
-    def table(self, name: str) -> DataFrame:
-        return self.store.read(name)
+    def table(self, name: str, version: int | None = None) -> DataFrame:
+        """Table ``name`` as readers see it (the metadata log resolved);
+        ``version`` reads an archived snapshot instead."""
+        if version is None:
+            df = self.store.read(name)
+        else:
+            df = self.store.read_version(name, version)
+        resolve = self.resolver(name)
+        return resolve(df) if resolve else df
+
+    @staticmethod
+    def resolver(name: str):
+        """The function from table ``name``'s stored rows to the rows its
+        readers see, or None where they are the same (every table but
+        the metadata log)."""
+        return resolve_metadata if name == META else None
 
     # --- lifecycle §3.1: load-data ------------------------------------------
     def load_jsonl(
@@ -234,19 +295,14 @@ class Engine:
         return LoadResult(True, inserted, skipped, report, run_id)
 
     # --- M1/M2: metadata upsert ----------------------------------------------
-    _CONFLICT_UPDATE_COLS = [
-        # only these are updated on conflict (reference src/database.py:1765-1784)
-        "total_records",
-        "failed_count",
-        "success",
-        "failed_details",
-        "start_date",
-        "end_date",
-    ]
-
     def upsert_metadata(self, row: dict) -> None:
-        meta_cols = [f.name for f in EXTRACTION_METADATA_SCHEMA.fields]
-        full = {c: row.get(c) for c in meta_cols}
+        """M1: the reference's INSERT ... ON CONFLICT (extraction_run_id)
+        DO UPDATE as one append to the metadata log; readers resolve a
+        run's rows (`resolve_metadata`), so a conflicting run id needs
+        no lookup and no rewrite. The append holds the table lock while
+        it takes its write order, so upserts from any number of engines
+        all land, ordered as they took the lock."""
+        full = {c: row.get(c) for c in EXTRACTION_METADATA_SCHEMA.fieldNames()}
         if full.get("extraction_timestamp") is None:
             from datetime import datetime, timezone
 
@@ -256,27 +312,9 @@ class Engine:
                 from datetime import date
 
                 full[c] = date.fromisoformat(full[c])
-        new = self.spark.createDataFrame([full], EXTRACTION_METADATA_SCHEMA)
-
-        if not self.store.exists("extraction_metadata"):
-            self.store.append("extraction_metadata", new)
-            return
-        existing = self.store.read("extraction_metadata")
-        run_id = full["extraction_run_id"]
-        match = existing.filter(F.col("extraction_run_id") == run_id).head()
-        if match is None:
-            self.store.append("extraction_metadata", new)
-            return
-        # Conflict: update the 6 updatable columns, keep the original
-        # extraction_timestamp / config_snapshot / source_urls.
-        kept = existing.filter(F.col("extraction_run_id") != run_id)
-        merged_row = match.asDict()
-        for c in self._CONFLICT_UPDATE_COLS:
-            merged_row[c] = full[c]
-        merged = self.spark.createDataFrame(
-            [{c: merged_row.get(c) for c in meta_cols}], EXTRACTION_METADATA_SCHEMA
-        )
-        self.store.overwrite("extraction_metadata", kept.unionByName(merged))
+        with self.store.write_order(META) as seq:
+            full[WRITE_SEQ] = seq
+            self.store.append(META, local_frame(self.spark, [full], STORED_METADATA_SCHEMA))
 
     # --- A9: per-run date range ----------------------------------------------
     def get_date_range_for_run(self, source: str, run_id: str) -> tuple[str | None, str | None]:
@@ -310,12 +348,13 @@ class Engine:
 
     # --- M3: refresh materialized views ---------------------------------------
     def refresh_views(self, source: str | None = None) -> list[str]:
-        views = SOURCE_VIEWS.get(source, ALL_VIEWS) if source else ALL_VIEWS
-        present = [v for v in views if self.store.exists(VIEW_BUILDERS[v][0])]
+        present = self._present_views(source)
+        # One read per source table, shared by all its views.
+        inputs = {t: self.store.read(t) for t in {VIEW_BUILDERS[v][0] for v in present}}
 
         def _one(v: str) -> None:
             src_table, builder = VIEW_BUILDERS[v]
-            self.store.overwrite(v, builder(self.store.read(src_table)))
+            self.store.overwrite(v, builder(inputs[src_table]))
 
         # Views are independent jobs over (usually) one fact table;
         # submitting them from a small thread pool lets each refresh's
@@ -325,13 +364,19 @@ class Engine:
         self._run_view_jobs(present, _one)
         return present
 
-    @staticmethod
-    def _run_view_jobs(views: list[str], fn) -> None:
+    def _present_views(self, source: str | None) -> list[str]:
+        views = SOURCE_VIEWS.get(source, ALL_VIEWS) if source else ALL_VIEWS
+        return [v for v in views if self.store.exists(VIEW_BUILDERS[v][0])]
+
+    def _run_view_jobs(self, views: list[str], fn) -> None:
+        """Run ``fn(view)`` for each view; more than one run from a small
+        pool whose threads keep the caller's job group and tags."""
         if len(views) > 1:
             from concurrent.futures import ThreadPoolExecutor
 
+            target = inheritable_thread_target(self.spark)(fn)
             with ThreadPoolExecutor(max_workers=min(4, len(views))) as pool:
-                for _ in pool.map(fn, views):
+                for _ in pool.map(target, views):
                     pass
         else:
             for v in views:
@@ -355,15 +400,19 @@ class Engine:
         scan that must be pruned.
 
         A typical monthly feed therefore refreshes 17 views at the cost
-        of one month of input each, independent of warehouse size.
+        of one month of input each, independent of warehouse size. Each
+        source table is read once per call, shared by all its views.
         """
         month_firsts = [m + "-01" for m in months]
-        views = SOURCE_VIEWS.get(source, ALL_VIEWS) if source else ALL_VIEWS
-        present = [v for v in views if self.store.exists(VIEW_BUILDERS[v][0])]
+        present = self._present_views(source)
+        inputs = {
+            t: self.store.read_months(t, months)
+            for t in {VIEW_BUILDERS[v][0] for v in present}
+        }
 
         def _one(v: str) -> None:
             src_table, builder = VIEW_BUILDERS[v]
-            new_part = builder(self.store.read_months(src_table, months))
+            new_part = builder(inputs[src_table])
             # An existing-but-empty MV reads as an empty frame whose
             # filtered union is `new_part` itself, so no pre-count job
             # is needed to special-case it.
@@ -458,11 +507,11 @@ class Engine:
         temp views so `engine.sql(...)` / `spark.sql(...)` work — the
         reference's third API surface (SQL against Postgres)."""
         registered = []
-        for name in list(KNOWN_TABLES.values()) + ["extraction_metadata"] + ALL_VIEWS:
+        for name in list(KNOWN_TABLES.values()) + [META] + ALL_VIEWS:
             if self.store.exists(name):
-                self.store.read(name).createOrReplaceTempView(name)
+                self.table(name).createOrReplaceTempView(name)
                 registered.append(name)
-        if self.store.exists("extraction_metadata"):
+        if self.store.exists(META):
             self.extraction_summary().createOrReplaceTempView("extraction_summary")
             self.recent_extractions().createOrReplaceTempView("recent_extractions")
             registered += ["extraction_summary", "recent_extractions"]
@@ -523,7 +572,7 @@ class Engine:
     def clear_table(self, table: str) -> int:
         if table not in set(KNOWN_TABLES.values()) | {"extraction_metadata"} | set(ALL_VIEWS):
             raise ValueError(f"unknown table: {table}")  # identifier guard (S12)
-        return self.store.truncate(table)
+        return self.store.truncate(table, rows=self.resolver(table))
 
     def compact_table(self, table: str, target_file_mb: int = 128) -> tuple[int, int]:
         """Small-files maintenance (no reference analog — Postgres has
@@ -674,7 +723,7 @@ class Engine:
 
     # --- extraction summary views (schema/extraction_metadata.sql:69-95) ---------------
     def extraction_summary(self) -> DataFrame:
-        meta = self.store.read("extraction_metadata")
+        meta = self.table(META)
         return (
             meta.groupBy("source")
             .agg(
@@ -691,7 +740,7 @@ class Engine:
         )
 
     def recent_extractions(self, limit: int = 20) -> DataFrame:
-        meta = self.store.read("extraction_metadata")
+        meta = self.table(META)
         return (
             meta.select(
                 "extraction_run_id", "source", "extraction_timestamp",
@@ -704,10 +753,11 @@ class Engine:
     # --- M2: backfill dates (reference src/backfill_extraction_dates.py) ----------------
     def backfill_extraction_dates(self) -> int:
         """Fill missing start/end dates from the source tables in ONE
-        join + ONE table overwrite — the reference loops runs and
-        re-queries per run (src/backfill_extraction_dates.py:33-62),
-        which would rewrite the metadata table once per run here."""
-        meta = self.store.read("extraction_metadata")
+        join + ONE append to the metadata log — the reference loops runs
+        and re-queries per run (src/backfill_extraction_dates.py:33-62).
+        Each matched run gets a row with its update columns as resolved
+        and the dates filled, ordered after every earlier write, so it
+        resolves as the run's latest. Returns the number of runs."""
         ranges = None
         for source, schema in SOURCES.items():
             if not self.store.exists(schema.table):
@@ -725,21 +775,20 @@ class Engine:
         if ranges is None:
             return 0
         todo = F.col("start_date").isNull() | F.col("end_date").isNull()
-        n = (
-            meta.filter(todo)
-            .join(F.broadcast(ranges), ["extraction_run_id", "source"], "inner")
-            .count()
-        )
-        if n == 0:
-            return 0
-        fill = todo & F.col("_start").isNotNull()
-        merged = (
-            meta.join(F.broadcast(ranges), ["extraction_run_id", "source"], "left")
-            .withColumn("start_date", F.when(fill, F.col("_start")).otherwise(F.col("start_date")))
-            .withColumn("end_date", F.when(fill, F.col("_end")).otherwise(F.col("end_date")))
-            .drop("_start", "_end")
-        )
-        self.store.overwrite("extraction_metadata", merged.select(*meta.columns))
+        fill = F.col("_start").isNotNull()
+        with self.store.write_order(META) as seq:
+            filled = (
+                self.table(META)
+                .filter(todo)
+                .join(F.broadcast(ranges), ["extraction_run_id", "source"], "inner")
+                .withColumn("start_date", F.when(fill, F.col("_start")).otherwise(F.col("start_date")))
+                .withColumn("end_date", F.when(fill, F.col("_end")).otherwise(F.col("end_date")))
+                .withColumn(WRITE_SEQ, F.lit(seq))
+                .select(*STORED_METADATA_SCHEMA.fieldNames())
+            )
+            n = filled.count()
+            if n:
+                self.store.append(META, filled)
         return n
 
 

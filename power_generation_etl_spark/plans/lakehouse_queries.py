@@ -383,8 +383,11 @@ def gdpr_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark import inheritable_thread_target
+
+        # Pool threads keep the caller's job group and session tags.
         with ThreadPoolExecutor(max_workers=3) as pool:
-            for _ in pool.map(_one, sorted(loads)):
+            for _ in pool.map(inheritable_thread_target(spark)(_one), sorted(loads)):
                 pass
         rows = [(t, *results[t]) for t in sorted(loads)]
     finally:

@@ -8,7 +8,13 @@ Physical design for the 100 TB target:
   schemas match the reference DDL exactly;
 - writes go through a temp-dir + atomic-ish rename only when
   replacing (`overwrite`); appends write new files into existing
-  partitions (safe for parquet append).
+  partitions (safe for parquet append);
+- every table directory carries a `_schema.json` sidecar, its logical
+  schema. `create` writes it and every write keeps it in step with the
+  rows written, so every scan (`_scan`) hands the reader that schema
+  (plus `_month`) instead of inferring it from parquet footers — a
+  read runs no Spark job. A directory without a sidecar (written by
+  another tool) still reads by inference.
 
 This replaces the reference's PostgreSQL heap tables + B-tree indexes
 (reference schema/*.sql): parquet min/max row-group stats give the
@@ -21,16 +27,20 @@ from __future__ import annotations
 
 import contextlib
 import itertools
+import json
 import math
 import os
 import shutil
 import threading
 import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 MONTH_COL = "_month"
+SCHEMA_FILE = "_schema.json"  # leading underscore: invisible to Spark's file listing
 
 _LOCK_TIMEOUT_ENV = "SPARK_ETL_STORE_LOCK_TIMEOUT_S"
 
@@ -52,6 +62,39 @@ def _lock_timeout_s() -> float:
             "of seconds; set a wait like 300"
         )
     return v
+
+
+def _shape(dt: T.DataType):
+    """``dt`` with every nullability flag dropped: two schemas of one
+    shape read the same parquet files the same way (parquet scans come
+    back all-nullable whatever the reader is given)."""
+    if isinstance(dt, T.StructType):
+        return tuple((f.name, _shape(f.dataType)) for f in dt.fields)
+    if isinstance(dt, T.ArrayType):
+        return ("array", _shape(dt.elementType))
+    if isinstance(dt, T.MapType):
+        return ("map", _shape(dt.keyType), _shape(dt.valueType))
+    return dt.simpleString()
+
+
+def local_frame(spark: SparkSession, rows: list[dict], schema: T.StructType) -> DataFrame:
+    """A small frame of driver-side ``rows`` (dicts; missing keys are
+    null), built from an Arrow table. ``createDataFrame(list)`` would
+    run a Python RDD as ``defaultParallelism`` Python-worker tasks; an
+    Arrow table is handed to the JVM as is. Values read back as from
+    the list path: a naive ``datetime`` in a TimestampType column is
+    the driver's local time, as ``TimestampType.toInternal`` takes it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    cols = {}
+    for f in schema.fields:
+        vals = [r.get(f.name) for r in rows]
+        if isinstance(f.dataType, T.TimestampType):
+            vals = [None if v is None else f.dataType.toInternal(v) for v in vals]
+        cols[f.name] = vals
+    table = pa.Table.from_pydict(cols, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
 
 
 class TableStore:
@@ -122,6 +165,27 @@ class TableStore:
         finally:
             os.close(fd)
 
+    @contextlib.contextmanager
+    def write_order(self, table: str):
+        """Hold ``table``'s writer lock and yield a write-order number
+        larger than any handed out for it before: the wall clock in ns,
+        bumped past the last one, which is kept beside the lock file so
+        it outlives truncates and rewrites and a clock step back cannot
+        reorder writes. Rows appended inside the block and stamped with
+        it sort after every earlier write's."""
+        with self._table_lock(table):
+            path = os.path.join(self.root, ".locks", f"{table}.seq")
+            try:
+                with open(path) as f:
+                    last = int(f.read())
+            except (FileNotFoundError, ValueError):
+                last = 0
+            seq = max(time.time_ns(), last + 1)
+            with open(path + ".tmp", "w") as f:
+                f.write(str(seq))
+            os.replace(path + ".tmp", path)
+            yield seq
+
     def _tmp_path(self, table: str) -> str:
         """Unique rewrite staging dir: a FIXED tmp name would let two
         concurrent rewriters write into the same directory before
@@ -152,8 +216,47 @@ class TableStore:
         return os.path.join(self.root, table)
 
     def _schema_file(self, table: str) -> str:
-        # Leading underscore → invisible to Spark's file listing.
-        return os.path.join(self.path(table), "_schema.json")
+        return os.path.join(self.path(table), SCHEMA_FILE)
+
+    @staticmethod
+    def _sidecar(root: str) -> T.StructType | None:
+        """The schema persisted in directory ``root``, or None."""
+        try:
+            with open(os.path.join(root, SCHEMA_FILE)) as f:
+                return T.StructType.fromJson(json.load(f))
+        except FileNotFoundError:
+            return None
+
+    def _scan(self, root: str, paths: list[str] | None = None) -> DataFrame:
+        """The one parquet scan of a table directory ``root`` (a table
+        or an archived version), over ``paths`` under it (default: all
+        of it). With a sidecar, the reader is given its schema plus
+        `_month` when the table has `timestamp_ms` (every store write
+        partitions such a table by it), so no schema-inference job
+        runs; the reader makes every column nullable, as inference
+        would. Without one, the schema is inferred. The frame keeps
+        `_month`; callers drop it."""
+        reader = self.spark.read.option("basePath", root)
+        schema = self._sidecar(root)
+        if schema is not None:
+            if "timestamp_ms" in schema.fieldNames():
+                schema = T.StructType(
+                    [*schema.fields, T.StructField(MONTH_COL, T.StringType())]
+                )
+            reader = reader.schema(schema)
+        return reader.parquet(*(paths or [root]))
+
+    def _sync_sidecar(self, root: str, schema: T.StructType) -> None:
+        """Make ``root``'s sidecar describe rows of ``schema`` about to
+        be written there. A sidecar of the same shape is kept as is, so
+        the non-null flags `create` persisted survive; a missing one or
+        one of another shape (an overwrite with new columns) is
+        replaced."""
+        cur = self._sidecar(root)
+        if cur is None or _shape(cur) != _shape(schema):
+            os.makedirs(root, exist_ok=True)
+            with open(os.path.join(root, SCHEMA_FILE), "w") as f:
+                f.write(schema.json())
 
     def _has_data(self, table: str) -> bool:
         p = self.path(table)
@@ -180,14 +283,11 @@ class TableStore:
 
     def read(self, table: str) -> DataFrame:
         if not self._has_data(table):
-            from pyspark.sql.types import StructType
-
-            with open(self._schema_file(table)) as f:
-                schema = StructType.fromJson(__import__("json").load(f))
-            return self.spark.createDataFrame([], schema)
-        df = self.spark.read.option("basePath", self.path(table)).parquet(
-            self.path(table)
-        )
+            schema = self._sidecar(self.path(table))
+            if schema is None:
+                raise FileNotFoundError(f"no table {table!r} in {self.root}")
+            return local_frame(self.spark, [], schema)
+        df = self._scan(self.path(table))
         return df.drop(MONTH_COL) if MONTH_COL in df.columns else df
 
     def read_months(self, table: str, months: list[str]) -> DataFrame:
@@ -197,9 +297,7 @@ class TableStore:
         size. The backbone of incremental MV refresh."""
         if not self._has_data(table):
             return self.read(table)
-        df = self.spark.read.option("basePath", self.path(table)).parquet(
-            self.path(table)
-        )
+        df = self._scan(self.path(table))
         if MONTH_COL in df.columns:
             df = df.filter(F.col(MONTH_COL).isin(months)).drop(MONTH_COL)
         return df
@@ -223,9 +321,7 @@ class TableStore:
         does not count)."""
         if not self._has_data(table):
             return self.read(table)
-        df = self.spark.read.option("basePath", self.path(table)).parquet(
-            self.path(table)
-        )
+        df = self._scan(self.path(table))
         if MONTH_COL not in df.columns:
             return df
         dim = months_df.select(
@@ -242,9 +338,7 @@ class TableStore:
         months), not O(table), on a 100 TB table."""
         if not self._has_data(table):
             return self.read(table)
-        df = self.spark.read.option("basePath", self.path(table)).parquet(
-            self.path(table)
-        )
+        df = self._scan(self.path(table))
         if MONTH_COL in df.columns:
             lo_m = F.date_format(F.timestamp_millis(F.lit(lo_ms)), "yyyy-MM")
             hi_m = F.date_format(F.timestamp_millis(F.lit(hi_ms)), "yyyy-MM")
@@ -263,7 +357,7 @@ class TableStore:
 
     def append(self, table: str, df: DataFrame) -> None:
         with self._table_lock(table):
-            self.create(table, df.schema)  # persist logical schema on first write
+            self._sync_sidecar(self.path(table), df.schema)
             df = self._with_month(df)
             writer = self._month_clustered(df).write.mode("append")
             if MONTH_COL in df.columns:
@@ -286,19 +380,29 @@ class TableStore:
             return df.hint("rebalance", MONTH_COL)
         return df
 
-    def _swap_in(self, table: str, tmp: str, force_archive: bool = False) -> None:
-        """Complete a tmp-dir rewrite: carry the schema sidecar across
-        the swap (losing it would make a later truncate re-derive the
-        schema from a parquet read — all-nullable — and silently drift
-        from the setup-time DDL), atomically replace the table dir, and
-        drop cached plans. The single swap protocol shared by every
-        overwrite-based maintenance path (overwrite / compact /
-        cluster), so crash-safety fixes land once."""
-        schema_json = None
+    def _swap_in(
+        self,
+        table: str,
+        tmp: str,
+        force_archive: bool = False,
+        schema: T.StructType | None = None,
+    ) -> None:
+        """Complete a tmp-dir rewrite: give ``tmp`` the table's schema
+        sidecar unless it brought its own (a restored version's), sync
+        it to the ``schema`` of the rows written, atomically replace the
+        table dir, and drop cached plans. Losing the sidecar would make
+        reads infer the schema again and a later truncate re-derive it
+        from a parquet read — all-nullable, drifting from the setup-time
+        DDL. The single swap protocol shared by every overwrite-based
+        maintenance path (overwrite / compact / cluster / restore), so
+        crash-safety fixes land once."""
         sidecar = self._schema_file(table)
-        if os.path.exists(sidecar):
-            with open(sidecar) as f:
-                schema_json = f.read()
+        if os.path.exists(sidecar) and not os.path.exists(
+            os.path.join(tmp, SCHEMA_FILE)
+        ):
+            shutil.copyfile(sidecar, os.path.join(tmp, SCHEMA_FILE))
+        if schema is not None:
+            self._sync_sidecar(tmp, schema)
         final = self.path(table)
         if os.path.isdir(final):
             # Archive only states that hold data: a schema-sidecar-only
@@ -312,9 +416,6 @@ class TableStore:
             else:
                 shutil.rmtree(final)
         os.replace(tmp, final)
-        if schema_json is not None:
-            with open(self._schema_file(table), "w") as f:
-                f.write(schema_json)
         # Invalidate cached plans/file listings for THIS path only.
         # clearCache() here was a sledgehammer: it dropped every cached
         # relation in the session (including persisted lineage cuts and
@@ -330,16 +431,21 @@ class TableStore:
         is a Delta/Iceberg `REPLACE` — parquet has no transaction log.)"""
         with self._table_lock(table):
             tmp = self._tmp_path(table)
+            schema = df.schema
             df = self._with_month(df)
             writer = self._month_clustered(df).write.mode("overwrite")
             if MONTH_COL in df.columns:
                 writer = writer.partitionBy(MONTH_COL)
             writer.parquet(tmp)
-            self._swap_in(table, tmp)
+            self._swap_in(table, tmp, schema=schema)
 
-    def truncate(self, table: str) -> int:
+    def truncate(
+        self, table: str, rows: Callable[[DataFrame], DataFrame] | None = None
+    ) -> int:
         """S11: destructive clear with pre-count
-        (reference src/database.py:910-935).
+        (reference src/database.py:910-935). ``rows`` maps the stored
+        rows to the ones to count, for a table whose readers resolve
+        it (an append-only log); the count runs under the table lock.
 
         Like the reference's TRUNCATE/DELETE, the emptied table still
         *exists*: data files go, the `_schema.json` sidecar is
@@ -349,7 +455,8 @@ class TableStore:
             schema_json = None
             n = 0
             if self.exists(table):
-                n = self.read(table).count()
+                stored = self.read(table)
+                n = (rows(stored) if rows else stored).count()
                 # Preserve the setup-time sidecar verbatim: re-deriving the
                 # schema from a parquet read would drop non-null flags
                 # (parquet reads come back all-nullable) and silently drift
@@ -359,7 +466,7 @@ class TableStore:
                     with open(sidecar) as f:
                         schema_json = f.read()
                 else:
-                    schema_json = self.read(table).schema.json()
+                    schema_json = stored.schema.json()
             p = self.path(table)
             if os.path.isdir(p):
                 shutil.rmtree(p)
@@ -429,9 +536,7 @@ class TableStore:
                     if f.endswith(".parquet"):
                         total_bytes += os.path.getsize(os.path.join(_dir, f))
             n_files = max(1, -(-total_bytes // (target_file_mb << 20)))  # ceil-div
-            df = self.spark.read.option("basePath", self.path(table)).parquet(
-                self.path(table)
-            )
+            df = self._scan(self.path(table))
             if MONTH_COL in df.columns:
                 # repartition by the partition column: each output task holds
                 # whole months → one file per (task, month) pair, no shuffle
@@ -493,8 +598,9 @@ class TableStore:
         before = self.file_count(table)
         if before == 0:
             return 0, 0
+        df = self._scan(self.path(table))
         missing = [
-            c for c in sort_cols if c not in self.read(table).columns
+            c for c in sort_cols if c not in df.columns or c == MONTH_COL
         ]
         if missing:
             raise ValueError(f"unknown sort column(s): {', '.join(missing)}")
@@ -507,9 +613,6 @@ class TableStore:
                     if f.endswith(".parquet"):
                         total_bytes += os.path.getsize(os.path.join(_dir, f))
             n_files = max(1, -(-total_bytes // (target_file_mb << 20)))
-        df = self.spark.read.option("basePath", self.path(table)).parquet(
-            self.path(table)
-        )
         # The sort must be the LAST operator before the write: routing
         # through overwrite() would recompute _month and let the dynamic-
         # partition writer insert its own (non-stable) sort on the
@@ -561,7 +664,7 @@ class TableStore:
         root = self.path(table)
         if not self._has_data(table):
             return []
-        df = self.spark.read.option("basePath", root).parquet(root)
+        df = self._scan(root)
         if MONTH_COL in df.columns:
             counts = {
                 r["m"]: r["n"]
@@ -633,7 +736,7 @@ class TableStore:
         files = self._parquet_files(table)
         if not files:
             return 0
-        df = self.spark.read.option("basePath", root).parquet(root)
+        df = self._scan(root)
         key = F.col(column)
         pos = (
             df.select(F.col("_metadata.file_path").alias("f"), key.alias("key"))
@@ -720,8 +823,7 @@ class TableStore:
         kept, _total = self.bloom_prune_paths(table, column, value)
         if not kept:
             return self.read(table).where(F.lit(False))
-        root = self.path(table)
-        df = self.spark.read.option("basePath", root).parquet(*kept)
+        df = self._scan(self.path(table), kept)
         return df.drop(MONTH_COL) if MONTH_COL in df.columns else df
 
     # -- time travel (opt-in versioned snapshots) ------------------------
@@ -747,7 +849,7 @@ class TableStore:
         p = os.path.join(self._versions_dir(table), f"v{version}")
         if not os.path.isdir(p):
             raise ValueError(f"no version {version} for table {table}")
-        df = self.spark.read.option("basePath", p).parquet(p)
+        df = self._scan(p)
         return df.drop(MONTH_COL) if MONTH_COL in df.columns else df
 
     def restore(self, table: str, version: int) -> None:
@@ -780,15 +882,23 @@ class TableStore:
                 shutil.rmtree(os.path.join(self._versions_dir(table), f"v{v}"))
             return len(drop)
 
-    def diff_versions(self, table: str, version: int) -> DataFrame:
+    def diff_versions(
+        self,
+        table: str,
+        version: int,
+        rows: Callable[[DataFrame], DataFrame] | None = None,
+    ) -> DataFrame:
         """Change-data-feed between an archived snapshot and the
         current table: rows only in the current state tagged
         ``_change='insert'``, rows only in the snapshot tagged
         ``_change='delete'`` (an updated row appears as one of each).
         Multiset semantics via exceptAll, so duplicate rows diff by
-        count, not presence."""
-        cur = self.read(table)
-        old = self.read_version(table, version).select(*cur.columns)
+        count, not presence. ``rows`` maps both states' stored rows to
+        the ones to compare, as in `truncate`."""
+        cur, old = self.read(table), self.read_version(table, version)
+        if rows:
+            cur, old = rows(cur), rows(old)
+        old = old.select(*cur.columns)
         return cur.exceptAll(old).withColumn(
             "_change", F.lit("insert")
         ).unionByName(

@@ -329,6 +329,8 @@ def neardup_intake_batch(
         # tail with the other's work).
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark import inheritable_thread_target
+
         def _write_sig() -> None:
             sig.join(survivors.select("doc_id"), "doc_id").write.mode(
                 "overwrite"
@@ -339,8 +341,10 @@ def neardup_intake_batch(
                 "overwrite"
             ).parquet(os.path.join(band_path, f"batch={batch_id}"))
 
+        # Pool threads keep the caller's job group and session tags.
+        inherit = inheritable_thread_target(spark)
         with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [pool.submit(_write_sig), pool.submit(_write_bands)]
+            futs = [pool.submit(inherit(_write_sig)), pool.submit(inherit(_write_bands))]
         for f in futs:
             f.result()  # surface either write's failure
         survivors.unpersist()

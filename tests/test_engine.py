@@ -131,6 +131,7 @@ def test_metadata_upsert_updates_subset_only(engine, spark):
             "total_records": 10,
             "failed_count": 0,
             "success": True,
+            "failed_details": '{"x": 1}',
             "config_snapshot": '{"a":1}',
         }
     )
@@ -142,6 +143,7 @@ def test_metadata_upsert_updates_subset_only(engine, spark):
             "total_records": 20,
             "failed_count": 2,
             "success": False,
+            "failed_details": '{"y": 2}',
             "config_snapshot": '{"a":2}',  # NOT updated on conflict
         }
     )
@@ -149,8 +151,121 @@ def test_metadata_upsert_updates_subset_only(engine, spark):
     assert len(rows) == 1
     r = rows[0]
     assert r["total_records"] == 20 and r["failed_count"] == 2 and r["success"] is False
+    assert r["failed_details"] == '{"y": 2}'
     assert r["config_snapshot"] == '{"a":1}'
     assert r["extraction_timestamp"] == first["extraction_timestamp"]
+    # A third upsert sets failed_details back to null: the latest null
+    # wins, as an ON CONFLICT DO UPDATE would leave it.
+    engine.upsert_metadata(
+        {
+            "extraction_run_id": RUN_ID,
+            "source": "npp",  # NOT updated on conflict
+            "total_records": 30,
+            "failed_count": 0,
+            "success": True,
+            "start_date": "2024-01-01",
+        }
+    )
+    rows = engine.table("extraction_metadata").collect()
+    assert len(rows) == 1
+    r = rows[0]
+    assert (r["total_records"], r["failed_count"], r["success"], r["failed_details"]) == (30, 0, True, None)
+    assert str(r["start_date"]) == "2024-01-01" and r["end_date"] is None
+    assert (r["source"], r["config_snapshot"]) == ("entsoe", '{"a":1}')
+    assert r["extraction_timestamp"] == first["extraction_timestamp"]
+
+
+@pytest.mark.parametrize("versioned", [False, True])
+def test_metadata_readers_see_one_row_per_run(spark, tmp_path, versioned):
+    """Every reader of the metadata table sees a conflicting run id once,
+    with its latest update columns: the summary views, the SQL surface,
+    the backfill, clear_table's count and the CLI's version listing."""
+    from datetime import datetime
+
+    engine = Engine(spark, str(tmp_path / "warehouse"), versioned=versioned)
+    path = _write(tmp_path, [_entsoe(JAN, "P1", 1.0), _entsoe(FEB, "P2", 2.0)])
+    assert engine.load_jsonl("entsoe", path, write_metadata=False).inserted == 2
+
+    def upsert(run, source, total, ok, hour):
+        engine.upsert_metadata(
+            {
+                "extraction_run_id": run,
+                "source": source,
+                "extraction_timestamp": datetime(2024, 5, 1, hour),
+                "total_records": total,
+                "failed_count": 0 if ok else total,
+                "success": ok,
+            }
+        )
+
+    other = "b" * 8 + "-bbbb-cccc-dddd-eeeeeeeeeeee"
+    third = "c" * 8 + "-bbbb-cccc-dddd-eeeeeeeeeeee"
+    upsert(RUN_ID, "entsoe", 10, True, 1)
+    upsert(other, "npp", 4, False, 2)
+    upsert(RUN_ID, "entsoe", 20, False, 3)
+    upsert(third, "entsoe", 5, True, 4)
+    upsert(other, "npp", 6, True, 5)
+
+    want = {RUN_ID: (1, 20, False), other: (2, 6, True), third: (4, 5, True)}
+    meta = {
+        r["extraction_run_id"]: (r["extraction_timestamp"].hour, r["total_records"], r["success"])
+        for r in engine.table("extraction_metadata").collect()
+    }
+    assert meta == want
+    summary = {
+        r["source"]: (r["total_runs"], r["total_records"], r["successful_runs"], r["failed_runs"])
+        for r in engine.extraction_summary().collect()
+    }
+    assert summary == {"entsoe": (2, 25, 1, 1), "npp": (1, 6, 1, 0)}
+    recent = [r["extraction_run_id"] for r in engine.recent_extractions(limit=2).collect()]
+    assert recent == [third, other]
+    row = engine.sql(
+        "SELECT count(*) AS n, sum(total_records) AS t FROM extraction_metadata"
+    ).head()
+    assert (row["n"], row["t"]) == (3, 31)
+
+    # Only RUN_ID has rows in the source table; backfill fills its dates
+    # and keeps its update columns.
+    assert engine.backfill_extraction_dates() == 1
+    assert engine.backfill_extraction_dates() == 0
+    r = engine.table("extraction_metadata").filter(f"extraction_run_id = '{RUN_ID}'").head()
+    assert (str(r["start_date"]), str(r["end_date"])) == ("2024-01-01", "2024-02-01")
+    assert (r["total_records"], r["success"], r["extraction_timestamp"].hour) == (20, False, 1)
+
+    engine.compact_table("extraction_metadata")
+    assert engine.table("extraction_metadata").count() == 3
+    if versioned:
+        v = engine.store.versions("extraction_metadata")[-1]
+        assert engine.table("extraction_metadata", version=v).count() == 3
+    assert engine.clear_table("extraction_metadata") == 3
+    assert engine.table("extraction_metadata").count() == 0
+    upsert(RUN_ID, "entsoe", 1, True, 6)
+    assert [r["total_records"] for r in engine.table("extraction_metadata").collect()] == [1]
+
+
+def test_refresh_runs_every_job_in_the_callers_group(engine, spark, tmp_path):
+    """The view pool's threads carry the caller's job group (and tags):
+    no refresh job runs outside it."""
+    import uuid
+    import warnings
+
+    engine.load_jsonl("entsoe", _write(tmp_path, [_entsoe(JAN, "P1", 1.0)]))
+    engine.refresh_views_incremental(["2024-01"], "entsoe")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    loose = set(tracker.getJobIdsForGroup(None))
+    group = f"refresh-{uuid.uuid4().hex}"
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        sc.setJobGroup(group, group)
+        try:
+            views = engine.refresh_views_incremental(["2024-01"], "entsoe")
+        finally:
+            sc._jsc.clearJobGroup()
+    assert len(views) == 3
+    assert len(tracker.getJobIdsForGroup(group)) >= 3
+    assert not set(tracker.getJobIdsForGroup(None)) - loose
+    assert not [w for w in caught if "Tags will not be inherited" in str(w.message)]
 
 
 def test_extraction_summary_and_recent(engine, spark):

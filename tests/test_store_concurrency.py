@@ -157,6 +157,79 @@ class TestWriterLock:
             pass  # acquiring proves the dead holder's lock evaporated
 
 
+class TestMetadataUpsertRace:
+    """`Engine.upsert_metadata` from several engines on one warehouse:
+    no upsert may drop another's run."""
+
+    def test_run_appended_during_a_conflict_upsert_survives(self, spark, tmp_path):
+        """Engine A upserts run A again (a conflict) while engine B
+        appends run B just before A's write takes the table lock. A
+        read-then-rewrite upsert that read before B's append writes the
+        table back without run B."""
+        import contextlib
+
+        from power_generation_etl_spark.engine import Engine
+
+        wh = str(tmp_path / "wh_meta")
+        a, b = Engine(spark, wh), Engine(spark, wh)
+        a.upsert_metadata({"extraction_run_id": "run-a", "source": "entsoe", "total_records": 1})
+        take_lock = a.store._table_lock
+        interleaved = []
+
+        @contextlib.contextmanager
+        def b_appends_first(table, timeout=None):
+            if table == "extraction_metadata" and not interleaved:
+                interleaved.append(table)
+                b.upsert_metadata({"extraction_run_id": "run-b", "source": "npp", "total_records": 7})
+            with take_lock(table, timeout):
+                yield
+
+        a.store._table_lock = b_appends_first
+        a.upsert_metadata({"extraction_run_id": "run-a", "source": "entsoe", "total_records": 2})
+        assert interleaved
+        rows = [(r["extraction_run_id"], r["source"], r["total_records"])
+                for r in a.table("extraction_metadata").collect()]
+        assert sorted(rows) == [("run-a", "entsoe", 2), ("run-b", "npp", 7)]
+
+    def test_threads_upserting_new_and_conflicting_runs_all_land(self, spark, tmp_path):
+        from collections import Counter
+
+        from power_generation_etl_spark.engine import Engine
+
+        wh = str(tmp_path / "wh_meta_threads")
+        n_threads, n_runs = 4, 3
+        start = threading.Barrier(n_threads)
+        errs = []
+
+        def work(i: int) -> None:
+            try:
+                eng = Engine(spark, wh)
+                start.wait(30)
+                for j in range(n_runs):
+                    run = f"run-{i}-{j}"
+                    eng.upsert_metadata({"extraction_run_id": run, "source": "npp", "total_records": 0})
+                    eng.upsert_metadata(
+                        {"extraction_run_id": run, "source": "npp", "total_records": 10 * i + j,
+                         "success": j % 2 == 0}
+                    )
+            except Exception as e:  # surfaced below — a thread must not die
+                errs.append(e)
+
+        threads = [threading.Thread(target=work, args=(i,)) for i in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert not errs, errs
+        rows = Engine(spark, wh).table("extraction_metadata").collect()
+        assert Counter(r["extraction_run_id"] for r in rows) == Counter(
+            f"run-{i}-{j}" for i in range(n_threads) for j in range(n_runs)
+        )
+        assert {(r["extraction_run_id"], r["total_records"], r["success"]) for r in rows} == {
+            (f"run-{i}-{j}", 10 * i + j, j % 2 == 0) for i in range(n_threads) for j in range(n_runs)
+        }
+
+
 _CHILD_MERGE = """
 import sys
 from pyspark.sql import SparkSession
