@@ -29,7 +29,8 @@ from power_generation_etl_spark.schemas import (
     SOURCES,
 )
 from power_generation_etl_spark.sources.jsonl import load_and_validate
-from power_generation_etl_spark.store import TableStore, local_frame
+from power_generation_etl_spark.session import local_frame
+from power_generation_etl_spark.store import TableStore
 from power_generation_etl_spark.validation import (
     FILE_COL,
     ORDER_COL,
@@ -335,13 +336,21 @@ class Engine:
     # --- A10: watermark --------------------------------------------------------
     def get_latest_date(self, source: str) -> str:
         """MAX(timestamp)::date with '1970-01-01' fallback
-        (reference src/get_latest_date.py:19-35)."""
+        (reference src/get_latest_date.py:19-35). Scans only the newest
+        `_month` partition holding data, which holds the largest
+        `timestamp_ms`; a table without `_month` partitions is read
+        whole."""
         schema = SOURCES[source]
         if not self.store.exists(schema.table):
             return "1970-01-01"
-        row = (
+        month = self.store.newest_month(schema.table)
+        df = (
             self.store.read(schema.table)
-            .agg(F.max(F.to_date(F.timestamp_millis(F.col("timestamp_ms")))).alias("d"))
+            if month is None
+            else self.store.read_months(schema.table, [month])
+        )
+        row = (
+            df.agg(F.max(F.to_date(F.timestamp_millis(F.col("timestamp_ms")))).alias("d"))
             .head()
         )
         return str(row["d"]) if row["d"] else "1970-01-01"

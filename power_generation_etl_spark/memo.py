@@ -13,11 +13,13 @@ index once, query it many times".
 plus explicit parameters. The plan key — `DataFrame.semanticHash()`
 pre-filter + `sameSemantics()` confirm — is exact in the direction
 that matters: two reads of the same parquet path compare equal, while
-different paths and different `createDataFrame` literal data never do,
-so a stale hit cannot happen; the worst case is a harmless rebuild
-(e.g. LocalRelations never match, so unit-test corpora always build
-fresh). Entries pin materialized blocks in executor storage, so each
-memo is LRU-capped.
+different paths and different driver-built data never do, so a stale
+hit cannot happen; the worst case is a harmless rebuild. A
+`session.local_frame` is a LocalRelation, equal only to one holding the
+same rows; `createDataFrame` over a Python list is an RDD plan that
+never matches, so unit-test corpora built that way always build fresh.
+Entries pin materialized blocks in executor storage, so each memo is
+LRU-capped.
 
 Lifecycle hardening (round 8):
 
@@ -92,7 +94,15 @@ class PlanMemo:
         self._slots: list[tuple[tuple, DataFrame, Any, tuple | None, set[int]]] = []
 
     def enabled(self) -> bool:
-        return os.environ.get(self.env, "1") != "0"
+        """``$env`` is ``1`` (the default when unset) or ``0``; any other
+        value raises rather than silently leaving the memo on."""
+        env = os.environ.get(self.env, "1")
+        if env not in ("0", "1"):
+            raise ValueError(
+                f"{self.env}={env!r} is not 0 or 1; set {self.env}=0 to disable "
+                f"the {self.name} memo, 1 (or unset) to enable it"
+            )
+        return env == "1"
 
     # -- lifecycle -----------------------------------------------------
     def _release(self, sdf: DataFrame, rdd_ids: set[int]) -> None:

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..lineage import cut as _cut
+from ..session import local_frame
 
 
 def segment_chars(word):
@@ -132,9 +133,7 @@ def train_merges(
     order). Stops early if the vocab runs out of pairs."""
     spark = df.sparkSession
     merges, _ = _train(df, text_col, rounds, final_seg=False)
-    return spark.createDataFrame(
-        merges, "round int, merge string, pair_count bigint"
-    )
+    return local_frame(spark, merges, "round int, merge string, pair_count bigint")
 
 
 def trained_segmentation(

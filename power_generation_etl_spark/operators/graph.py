@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from .. import lineage
 from ..lineage import cut as _cut
+from ..session import local_frame
 
 
 def _copartition(df: DataFrame, key: str) -> DataFrame:
@@ -322,7 +323,7 @@ def khop_min_hops(
     if not 1 <= k <= 8:
         raise ValueError("k must be in [1, 8]")
     frontier = (
-        edges.sparkSession.createDataFrame([(source_id,)], f"{dst} bigint")
+        local_frame(edges.sparkSession, [(source_id,)], f"{dst} bigint")
         .select(F.col(dst).cast("long").alias("id"))
     )
     hops: DataFrame | None = None
@@ -383,8 +384,8 @@ def bounded_cheapest_paths(
         .transform(lambda d: _copartition(d, "eu"))
         .transform(_cut)
     )
-    dist = edges.sparkSession.createDataFrame(
-        [(int(source_id), 0, 0)], "id long, cost long, hops int"
+    dist = local_frame(
+        edges.sparkSession, [(int(source_id), 0, 0)], "id long, cost long, hops int"
     )
     for _ in range(k):
         relaxed = dist.join(e, dist.id == F.col("eu")).select(

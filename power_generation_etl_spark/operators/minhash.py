@@ -56,9 +56,9 @@ def _resolve_max_candidates(max_candidates: int | None) -> int | None:
     if env is not None:
         try:
             v = int(float(env))  # accept "5e7" / "50000000"
-        except ValueError:
+        except (ValueError, OverflowError):  # "abc", "nan" / "inf", "-inf"
             raise ValueError(
-                f"{_ALLPAIRS_ENV}={env!r} is not a number; set a "
+                f"{_ALLPAIRS_ENV}={env!r} is not a finite number; set a "
                 "candidate-count bound like 50000000 (or <=0 to disable "
                 "the guard)"
             ) from None

@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..lineage import cut
+from ..session import local_frame
 
 
 def _two_pass(
@@ -77,9 +78,7 @@ def _two_pass(
     for pid, n in counts:
         rows.append((pid, total))
         total += n or 0
-    offsets = spark.createDataFrame(rows or [(0, 0)], "_rk_pid int, _rk_off bigint")
-    if not rows:
-        offsets = offsets.where(F.lit(False))
+    offsets = local_frame(spark, rows, "_rk_pid int, _rk_off bigint")
     w_local = Window.partitionBy("_rk_pid").orderBy(*order)
     out = (
         base.join(F.broadcast(offsets), "_rk_pid")

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # Demo model: quality-ish signal over the synthetic vocabulary
 # (weights ×1000; positive = keep-ish). Deterministic and public.
 DEMO_WEIGHTS: dict[str, int] = {
@@ -61,9 +63,7 @@ def score_documents(
     weights = DEMO_WEIGHTS if weights is None else weights
     bias = DEMO_BIAS if bias is None else bias
     threshold = DEMO_THRESHOLD if threshold is None else threshold
-    model = spark.createDataFrame(
-        sorted(weights.items()), schema="term string, w long"
-    )
+    model = local_frame(spark, sorted(weights.items()), schema="term string, w long")
     toks = df.select(
         F.col(id_col),
         F.explode_outer(F.split(F.lower(F.col(text_col)), r"\s+")).alias("term"),
@@ -254,7 +254,8 @@ def _build_bigram_model(src: DataFrame):
         .distinct()
         .collect()
     )
-    lut = spark.createDataFrame(
+    lut = local_frame(
+        spark,
         [(int(n), int(_m.floor(_m.log(float(n)) * 1_000_000))) for n in dom],
         "n bigint, l bigint",
     )

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def value_at_ranks(
     df: DataFrame,
@@ -159,7 +161,4 @@ def exact_deciles(
     rows = [
         (t, found[ranks[t]]) for t in tiles if ranks[t] in found
     ]
-    out = spark.createDataFrame(
-        rows or [(0, 0)], "tile bigint, value bigint"
-    )
-    return out.where(F.lit(bool(rows))).orderBy("tile")
+    return local_frame(spark, rows, "tile bigint, value bigint").orderBy("tile")

@@ -27,6 +27,7 @@ from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..lineage import cut as _cut
 from ..memo import PlanMemo
+from ..session import local_frame
 
 
 def as_double_array(col: Column) -> Column:
@@ -386,8 +387,8 @@ def lsh_bucketed_neardup(
     probe = df.select(vec_col).head()
     if probe is None:  # empty corpus -> empty pairs, stable schema
         idt = dict(df.dtypes).get(id_col, "bigint")
-        return df.sparkSession.createDataFrame(
-            [], f"id_a {idt}, id_b {idt}, cosine_sim double"
+        return local_frame(
+            df.sparkSession, [], f"id_a {idt}, id_b {idt}, cosine_sim double"
         )
     dim = len(probe[0])
     planes = random_hyperplanes(dim, n_planes, seed)
@@ -739,8 +740,8 @@ def ivf_topk(
         probe = df.select(vec_col).head()
         if probe is None:  # empty corpus -> empty top-k, stable schema
             idt = dict(df.dtypes).get(id_col, "bigint")
-            return df.sparkSession.createDataFrame(
-                [], f"{id_col} {idt}, cosine_sim double"
+            return local_frame(
+                df.sparkSession, [], f"{id_col} {idt}, cosine_sim double"
             )
         dim = len(probe[0])
         centroids = df.groupBy(cell.alias("cell")).agg(
@@ -757,17 +758,17 @@ def ivf_topk(
         )
         if not cents:  # empty corpus -> empty top-k, stable schema
             idt = dict(df.dtypes).get(id_col, "bigint")
-            return df.sparkSession.createDataFrame(
-                [], f"{id_col} {idt}, cosine_sim double"
+            return local_frame(
+                df.sparkSession, [], f"{id_col} {idt}, cosine_sim double"
             )
         cell = (
             assign_cell_fast(v, cents) if kernel == "arrow" else assign_cell(v, cents)
         )
         spark = df.sparkSession
-        ranked = spark.createDataFrame(
-            [(cid, c) for cid, c in cents], "cell int, centroid array<double>"
-        ).select("cell", cosine(F.col("centroid"), q).alias("cell_sim")).orderBy(
-            F.col("cell_sim").desc(), F.col("cell")
+        ranked = (
+            local_frame(spark, cents, "cell int, centroid array<double>")
+            .select("cell", cosine(F.col("centroid"), q).alias("cell_sim"))
+            .orderBy(F.col("cell_sim").desc(), F.col("cell"))
         )
     # One collect (≤ n_cells tiny rows) instead of count + limit-collect.
     ranked_rows = ranked.collect()
@@ -1097,9 +1098,7 @@ def pq_topk(
     books = pq_train(df, id_col, vec_col, m=m, k_sub=k_sub, iters=iters)
     if not books:
         idt = dict(df.dtypes).get(id_col, "bigint")
-        return df.sparkSession.createDataFrame(
-            [], f"{id_col} {idt}, adc_d2 double"
-        )
+        return local_frame(df.sparkSession, [], f"{id_col} {idt}, adc_d2 double")
     sub = len(query_vec) // m
     v = as_double_array(F.col(vec_col))
     adc = None
@@ -1155,9 +1154,7 @@ def semdedup(
     spark = df.sparkSession
     cents = kmeans_train(df, id_col, vec_col, k=k, iters=iters, kernel=kernel)
     if not cents:
-        return spark.createDataFrame(
-            [], "cell int, n_vectors bigint, n_dropped bigint"
-        )
+        return local_frame(spark, [], "cell int, n_vectors bigint, n_dropped bigint")
     v = as_double_array(F.col(vec_col))
     assigner = assign_cell_fast if kernel == "arrow" else assign_cell
     assigned = df.select(
@@ -1255,8 +1252,8 @@ def ivfpq_topk(
     cents = kmeans_train(df, id_col, vec_col, k=n_cells, iters=coarse_iters)
     if not cents:
         idt = dict(df.dtypes).get(id_col, "bigint")
-        return df.sparkSession.createDataFrame(
-            [], f"{id_col} {idt}, cell int, adc_d2 double"
+        return local_frame(
+            df.sparkSession, [], f"{id_col} {idt}, cell int, adc_d2 double"
         )
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     v = as_double_array(F.col(vec_col))
@@ -1304,11 +1301,9 @@ def ivfpq_topk(
     books = pq_train(train_df, "_id", "_enc", m=m, k_sub=k_sub, iters=iters)
     if not books:
         idt = dict(df.dtypes).get(id_col, "bigint")
-        return spark.createDataFrame([], f"{id_col} {idt}, cell int, adc_d2 double")
+        return local_frame(spark, [], f"{id_col} {idt}, cell int, adc_d2 double")
     ranked_rows = (
-        spark.createDataFrame(
-            [(cid, c) for cid, c in cents], "cell int, centroid array<double>"
-        )
+        local_frame(spark, cents, "cell int, centroid array<double>")
         .select("cell", cosine(F.col("centroid"), q).alias("cell_sim"))
         .orderBy(F.col("cell_sim").desc(), F.col("cell"))
         .collect()
@@ -1391,7 +1386,7 @@ def binary_sign_topk(
     idt = dict(df.dtypes).get(id_col, "bigint")
     empty_schema = f"{id_col} {idt}, hamming int, cosine_sim double"
     if probe is None:
-        return df.sparkSession.createDataFrame([], empty_schema)
+        return local_frame(df.sparkSession, [], empty_schema)
     dim = len(probe[0])
     trow = df.agg(
         *[F.round(F.avg(v.getItem(i)), 6).alias(f"t{i}") for i in range(dim)]

@@ -89,6 +89,7 @@ from pyspark.sql.window import Window
 
 from ..lineage import cut, cut_index
 from ..memo import PlanMemo
+from ..session import local_frame
 from .rank import with_global_rank
 
 # Round-0 string-prefix width: one window of INIT-1 leads replaces
@@ -303,7 +304,7 @@ def _products(
 
 
 def _empty_sa(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], "doc_id bigint, pos int, sa_rank bigint")
+    return local_frame(spark, [], "doc_id bigint, pos int, sa_rank bigint")
 
 
 def suffix_array(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -503,7 +504,8 @@ def longest_repeated_substrings(
     spark = df.sparkSession
     base, maxlen, levels, sa = _products(df, id_col, text_col, need_levels=True)
     if maxlen == 0:  # empty corpus
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "lcp int, doc_a bigint, pos_a int, doc_b bigint, pos_b int,"
             " repeat_preview string",

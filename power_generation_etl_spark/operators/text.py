@@ -13,6 +13,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..lineage import cut as _cut
+from ..session import local_frame
 
 # Per-language stopword lists for the heuristic language ID: top
 # function words, whitespace-tokenized. Counting stays a single-scan
@@ -565,7 +566,7 @@ def dsir_importance_weights(
     )
     spark = df.sparkSession
     if not totals:
-        return spark.createDataFrame([], "doc_id bigint, weight_ppm bigint")
+        return local_frame(spark, [], "doc_id bigint, weight_ppm bigint")
     s_r = sum(r["cr"] for r in totals)
     s_t = sum(r["ct"] for r in totals)
     rows = []
@@ -578,7 +579,7 @@ def dsir_importance_weights(
         rows.append(
             (r["b"], math.floor(math.log(float(num) / float(den)) * 1_000_000))
         )
-    wtab = spark.createDataFrame(rows, "b bigint, w_ppm bigint")
+    wtab = local_frame(spark, rows, "b bigint, w_ppm bigint")
     per_doc = bg.groupBy("doc_id", "b").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )

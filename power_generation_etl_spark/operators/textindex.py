@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from power_generation_etl_spark.operators.sketch import hash48
+from power_generation_etl_spark.session import local_frame
 
 BUCKET_COL = "bucket"
 
@@ -177,7 +178,7 @@ def phrase_search(
     top = cnt.agg(F.max("c")).head()[0]
     out_schema = "doc_id long, n_occurrences long"
     if top is None:  # empty corpus / no doc has two tokens
-        return df.sparkSession.createDataFrame([], out_schema)
+        return local_frame(df.sparkSession, [], out_schema)
     phrase = cnt.where(F.col("c") == top).agg(F.min("b")).head()[0]
     return (
         bg.where(F.col("b") == phrase)

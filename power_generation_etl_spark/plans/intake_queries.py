@@ -56,6 +56,7 @@ from power_generation_etl_spark.plans.queries import (
     stream_dirs,
     stream_scoped,
 )
+from power_generation_etl_spark.session import local_frame
 
 _OFF_CROSS = 100_000_000   # round-2 copies of round-1 (h4=0) docs
 _OFF_WITHIN = 200_000_000  # round-2 copies of round-2 (h4=1) docs
@@ -194,7 +195,7 @@ def stream_intake_filter_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             result = [(row["n_docs"], row["sum_len"], row["fp_checksum"])]
         except AnalysisException:  # zero batches ever ran (empty corpus)
             result = [(0, None, None)]
-    return spark.createDataFrame(result, schema_out)
+    return local_frame(spark, result, schema_out)
 
 
 # ---------------------------------------------------------------------------
@@ -371,7 +372,7 @@ def stream_intake_neardup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         except AnalysisException:  # zero batches ever ran (empty corpus)
             rows = []
-    return spark.createDataFrame([(i,) for i in rows], "doc_id long")
+    return local_frame(spark, [(i,) for i in rows], "doc_id long")
 
 
 # ---------------------------------------------------------------------------
@@ -511,8 +512,8 @@ def stream_expectations_by_source(spark: SparkSession, sf_dir: str) -> DataFrame
                 spark, d.store, suite
             ).collect()
         except ValueError:  # empty corpus: zero batches, no store
-            return spark.createDataFrame([], out_schema)
-    return spark.createDataFrame([tuple(r) for r in rows], out_schema)
+            rows = []
+    return local_frame(spark, rows, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -572,5 +573,5 @@ def stream_text_index_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
             rows = term_stats_from_store(spark, d.store, k=20).collect()
         except ValueError:  # empty corpus: zero batches, no shards
-            return spark.createDataFrame([], out_schema)
-    return spark.createDataFrame([tuple(r) for r in rows], out_schema)
+            rows = []
+    return local_frame(spark, rows, out_schema)

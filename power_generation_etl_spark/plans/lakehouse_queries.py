@@ -51,6 +51,7 @@ from power_generation_etl_spark.plans.queries import (
     stream_dirs,
     stream_scoped,
 )
+from power_generation_etl_spark.session import local_frame
 from power_generation_etl_spark.store import TableStore
 
 _OUT_SCHEMA = "change string, status string, n long"
@@ -112,7 +113,7 @@ def _feed_counts(spark: SparkSession, store: TableStore) -> DataFrame:
         ((r["change"], r["status"], r["n"]) for r in rows),
         key=lambda t: (t[0], t[1]),
     )
-    return spark.createDataFrame(rows, _OUT_SCHEMA)
+    return local_frame(spark, rows, _OUT_SCHEMA)
 
 
 @_register("cdc_version_diff", _FEED_SQL)
@@ -132,7 +133,7 @@ def cdc_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             "orders_snap", changes, keys=["o_orderkey"], order_col="ver"
         )
         if 1 not in store.versions("orders_snap"):  # empty base: no archive
-            return spark.createDataFrame([], _OUT_SCHEMA)
+            return local_frame(spark, [], _OUT_SCHEMA)
         return _feed_counts(spark, store)
     finally:
         shutil.rmtree(wh, ignore_errors=True)
@@ -180,7 +181,7 @@ def stream_cdc_apply_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.awaitTermination()
         q.stop()
         if 1 not in store.versions("orders_snap"):  # empty base: no batch
-            return spark.createDataFrame([], _OUT_SCHEMA)
+            return local_frame(spark, [], _OUT_SCHEMA)
         return _feed_counts(spark, store)
 
 
@@ -258,7 +259,7 @@ def incremental_mv_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     out_schema = "month string, fuel_type string, total_mwh double"
     if not months:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     last = months[-1]
     wh = tempfile.mkdtemp(prefix="mv_wh_")
     try:
@@ -285,7 +286,7 @@ def incremental_mv_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(wh, ignore_errors=True)
-    return spark.createDataFrame([tuple(r) for r in rows], out_schema)
+    return local_frame(spark, rows, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -392,4 +393,4 @@ def gdpr_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = [(t, *results[t]) for t in sorted(loads)]
     finally:
         shutil.rmtree(wh, ignore_errors=True)
-    return spark.createDataFrame(rows, out_schema)
+    return local_frame(spark, rows, out_schema)

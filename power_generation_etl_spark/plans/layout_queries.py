@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from power_generation_etl_spark.plans.queries import T, _register
+from power_generation_etl_spark.session import local_frame
 from power_generation_etl_spark.store import morton_key
 
 _BITS = 16
@@ -208,7 +209,7 @@ def layout_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("o_orderkey").alias("mn1"), F.max("o_orderkey").alias("mx1"),
     ).head()
     if st["mn0"] is None:  # empty corpus
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     c_lo = st["mn0"] + ((st["mx0"] - st["mn0"]) * _BAND_LO) // 100
     c_hi = st["mn0"] + ((st["mx0"] - st["mn0"]) * _BAND_HI) // 100
     keyed = o.withColumn("zkey", morton_key(o, ["o_custkey", "o_orderkey"]))

@@ -18,6 +18,7 @@ from power_generation_etl_spark.operators import minhash as mh
 from power_generation_etl_spark.operators import similarity as sim
 from power_generation_etl_spark.operators import text as tx
 from power_generation_etl_spark.plans.queries import ORACLES, T, _register
+from power_generation_etl_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # Exact dedup: hash-groupBy on the text digest (shuffle carries 32-char
@@ -405,7 +406,7 @@ def _query_vec(spark: SparkSession, sf_dir: str) -> list[float] | None:
 
 
 def _empty_topk(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], "vec_id bigint, cosine_sim double")
+    return local_frame(spark, [], "vec_id bigint, cosine_sim double")
 
 
 @_register(
@@ -968,8 +969,8 @@ def filtered_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     move)."""
     qv = _query_vec(spark, sf_dir)
     if qv is None:
-        return spark.createDataFrame(
-            [], "vec_id bigint, lang string, source string, cosine_sim double"
+        return local_frame(
+            spark, [], "vec_id bigint, lang string, source string, cosine_sim double"
         )
     e = T(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
     d = (
@@ -1310,7 +1311,7 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = T(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
     if qv is None:
-        return spark.createDataFrame([], "vec_id bigint, adc_d2 double")
+        return local_frame(spark, [], "vec_id bigint, adc_d2 double")
     return sim.pq_topk(e, "vec_id", "embedding", qv, m=4, k_sub=8, iters=2, k=10)
 
 
@@ -1450,7 +1451,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = T(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
     qv = _query_vec(spark, sf_dir)
     if qv is None:
-        den50 = spark.createDataFrame([], "doc_id bigint, cosine_sim double")
+        den50 = local_frame(spark, [], "doc_id bigint, cosine_sim double")
     else:
         den50 = sim.brute_force_topk(
             e, "vec_id", "embedding", qv, k=_RRF_TOPK
@@ -2200,7 +2201,7 @@ def ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = T(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
     if qv is None:
-        return spark.createDataFrame([], "vec_id bigint, cell int, adc_d2 double")
+        return local_frame(spark, [], "vec_id bigint, cell int, adc_d2 double")
     return sim.ivfpq_topk(
         e,
         "vec_id",
@@ -2387,7 +2388,7 @@ def ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = T(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
     if qv is None:
-        return spark.createDataFrame([], "vec_id bigint, cell int, adc_d2 double")
+        return local_frame(spark, [], "vec_id bigint, cell int, adc_d2 double")
     return sim.ivfpq_topk(
         e,
         "vec_id",
@@ -2461,9 +2462,7 @@ def binary_sign_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = T(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
     if qv is None:
-        return spark.createDataFrame(
-            [], "vec_id bigint, hamming int, cosine_sim double"
-        )
+        return local_frame(spark, [], "vec_id bigint, hamming int, cosine_sim double")
     return sim.binary_sign_topk(e, "vec_id", "embedding", qv, shortlist=50, k=10)
 
 
@@ -2510,8 +2509,8 @@ def matryoshka_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = T(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
     if qv is None:
-        return spark.createDataFrame(
-            [], "vec_id bigint, prefix_sim double, cosine_sim double"
+        return local_frame(
+            spark, [], "vec_id bigint, prefix_sim double, cosine_sim double"
         )
     return sim.matryoshka_rerank_topk(
         e, "vec_id", "embedding", qv, prefix_dim=16, shortlist=50, k=10

@@ -22,7 +22,7 @@ from power_generation_etl_spark.operators import scoring as sc
 from power_generation_etl_spark.operators import sketch as sk
 from power_generation_etl_spark.plans.queries import T, _register
 from power_generation_etl_spark.plans.temporal_queries import T_events_us
-from power_generation_etl_spark.session import positive_int_env
+from power_generation_etl_spark.session import local_frame, positive_int_env
 
 _DAY_US = 86_400_000_000
 
@@ -561,8 +561,8 @@ def mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(tx.token_count(F.col("text"))).alias("n_tokens"),
     )
-    target = spark.createDataFrame(
-        sorted(_MIX_PCT.items()), schema="source string, pct long"
+    target = local_frame(
+        spark, sorted(_MIX_PCT.items()), schema="source string, pct long"
     )
     budgeted = F.expr(f"({_MIX_BUDGET} * coalesce(pct, 0)) div 100")
     return (
@@ -1063,7 +1063,8 @@ def referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             orphans(s, "s_nationkey", n, "n_nationkey"),
         )
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "lineitem_orphans long, order_orphans long, "
         "customer_orphans long, supplier_orphans long",
@@ -1336,8 +1337,8 @@ def mixture_sampled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_source = d.groupBy("source").agg(
         F.sum(tx.token_count(F.col("text"))).alias("n_tokens")
     )
-    target = spark.createDataFrame(
-        sorted(_MIX_PCT.items()), schema="source string, pct long"
+    target = local_frame(
+        spark, sorted(_MIX_PCT.items()), schema="source string, pct long"
     )
     rates = (
         per_source.join(F.broadcast(target), "source", "left")

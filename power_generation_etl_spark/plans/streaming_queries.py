@@ -72,6 +72,7 @@ from power_generation_etl_spark.plans.queries import (
     stream_scoped,
     ts_to_ntz,
 )
+from power_generation_etl_spark.session import local_frame
 
 _MEM_SEQ = itertools.count()
 
@@ -134,7 +135,7 @@ def stream_hourly_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.stop()
     schema = "hour_us long, event_type string, n_events long"
     if not spark.catalog.tableExists(name):  # zero micro-batches ran
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     # Localize the (bounded: hours × types) result and DROP the memory
     # sink — otherwise every invocation in a long session (bench reps,
     # oracle sweeps) pins another copy of the aggregation state. The
@@ -153,9 +154,7 @@ def stream_hourly_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         spark.catalog.dropTempView(name)
-    return spark.createDataFrame(
-        [(r["hour_us"], r["event_type"], r["n_events"]) for r in rows], schema
-    )
+    return local_frame(spark, rows, schema)
 
 
 @_register(
@@ -214,7 +213,7 @@ def stream_dedup_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     for counts in per_batch.values():
         for et, n in counts.items():
             totals[et] = totals.get(et, 0) + int(n)
-    return spark.createDataFrame(sorted(totals.items()), schema)
+    return local_frame(spark, sorted(totals.items()), schema)
 
 
 # Deterministic on-time/late split: ~10% of events (by a cross-engine
@@ -386,7 +385,7 @@ def stream_late_data_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = sorted(
         ((r["hour_us"], r["event_type"], r["n_events"]) for r in emitted),
     )
-    return spark.createDataFrame(rows, schema_out)
+    return local_frame(spark, rows, schema_out)
 
 
 _KMV_K = 16
@@ -460,10 +459,8 @@ def stream_kmv_event_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
             rows = kmv_estimate_from_store(spark, d.store, k=_KMV_K).collect()
         except ValueError:  # empty corpus: zero batches, no store
-            return spark.createDataFrame([], out_schema)
-    return spark.createDataFrame(
-        [(r["grp"], r["kmv_estimate"]) for r in rows], out_schema
-    )
+            rows = []
+    return local_frame(spark, rows, out_schema)
 
 
 _MG_CAP = 16  # 15/150/1500 distinct users at the 3 SFs: the smallest SF
@@ -552,10 +549,8 @@ def stream_mg_heavy_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
             rows = heavy_hitters_from_store(spark, d.store).collect()
         except ValueError:  # empty corpus: zero batches, no store
-            return spark.createDataFrame([], out_schema)
-    return spark.createDataFrame(
-        [(r["key"], r["est_count"], r["max_err"]) for r in rows], out_schema
-    )
+            rows = []
+    return local_frame(spark, rows, out_schema)
 
 
 _IJ_WIN_US = 30 * 60 * 1_000_000  # interval-join window, µs
@@ -638,7 +633,8 @@ def stream_interval_join_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         t = totals.setdefault(uid, [0, 0])
         t[0] += n
         t[1] += lag
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         sorted((u, n, lag) for u, (n, lag) in totals.items()),
         "user_id long, n_pairs long, sum_lag_s long",
     )
@@ -690,11 +686,8 @@ def stream_hll_event_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
             rows = hll_estimate_from_store(spark, d.store).collect()
         except ValueError:  # empty corpus: zero batches, no store
-            return spark.createDataFrame([], out_schema)
-    return spark.createDataFrame(
-        [(r["grp"], r["v_empty"], r["z_scaled"], r["hll_estimate"]) for r in rows],
-        out_schema,
-    )
+            rows = []
+    return local_frame(spark, rows, out_schema)
 
 
 # Two-batch drift evolution, unrolled: half-0 seeds the baseline (no
@@ -765,9 +758,7 @@ def stream_type_drift_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
         # round 1 seeds the baseline, round 2 raises the alert
         overlap_two_rounds(d, r1, r2, "json", _run)
         rows = type_drift_alerts(spark, d.store).collect()
-    return spark.createDataFrame(
-        [(r["batch_id"], r["n_rows"], r["drift_ppm"]) for r in rows], out_schema
-    )
+    return local_frame(spark, rows, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -970,10 +961,10 @@ def stream_sessions_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches (sanctioned applyInPandasWithState), not per-row UDFs."""
     ev, cutoff, lo, hi = _session_round_split(spark, sf_dir)
     if ev is None:
-        return spark.createDataFrame([], _SESS_SCHEMA_OUT)
+        return local_frame(spark, [], _SESS_SCHEMA_OUT)
     emitted = _run_session_rounds(spark, ev, cutoff, hi, native=False)
     if emitted is None:
-        return spark.createDataFrame([], _SESS_SCHEMA_OUT)
+        return local_frame(spark, [], _SESS_SCHEMA_OUT)
     return emitted
 
 
@@ -989,10 +980,10 @@ def stream_sessions_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     event time."""
     ev, cutoff, lo, hi = _session_round_split(spark, sf_dir)
     if ev is None:
-        return spark.createDataFrame([], _SESS_SCHEMA_OUT)
+        return local_frame(spark, [], _SESS_SCHEMA_OUT)
     emitted = _run_session_rounds(spark, ev, cutoff, hi, native=True)
     if emitted is None:
-        return spark.createDataFrame([], _SESS_SCHEMA_OUT)
+        return local_frame(spark, [], _SESS_SCHEMA_OUT)
     return emitted
 
 
@@ -1056,7 +1047,7 @@ def stream_transition_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo, hi = ev.agg(F.min("t_us"), F.max("t_us")).first()
     out_schema = "from_type string, to_type string, n_transitions long"
     if lo is None:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     cutoff = (lo + hi) // 2
     cols = ["event_id", "ts", "user_id", "event_type"]
     r1 = ev.filter(F.col("t_us") <= cutoff).select(*cols)
@@ -1092,8 +1083,8 @@ def stream_transition_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     for counts in acc.values():
         for k, n in counts.items():
             totals[k] = totals.get(k, 0) + int(n)
-    return spark.createDataFrame(
-        sorted((f, t, n) for (f, t), n in totals.items()), out_schema
+    return local_frame(
+        spark, sorted((f, t, n) for (f, t), n in totals.items()), out_schema
     )
 
 
@@ -1164,10 +1155,8 @@ def stream_quantile_store(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, d.store, _QS_PCTS, value_scale=_QS_SCALE
             ).collect()
         except ValueError:  # empty corpus: zero batches, no store
-            return spark.createDataFrame([], out_schema)
-    return spark.createDataFrame(
-        [tuple(r) for r in rows], out_schema
-    )
+            rows = []
+    return local_frame(spark, rows, out_schema)
 
 
 _IVF_CELLS = 8
@@ -1231,7 +1220,7 @@ def stream_ivf_ingest_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     out_schema = "cell int, n_vectors long, vecid_sum long"
     if not seeds:  # empty corpus: no centroids, stable-schema empty
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     r1, r2 = hash_halves(emb, "vec_id")
     with stream_dirs("ivf") as d:
         def _run(landing: str) -> None:
@@ -1248,8 +1237,8 @@ def stream_ivf_ingest_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
             rows = ivf_cells_from_store(spark, d.store).collect()
         except ValueError:  # zero batches (shouldn't happen: seeds exist)
-            return spark.createDataFrame([], out_schema)
-    return spark.createDataFrame([tuple(r) for r in rows], out_schema)
+            rows = []
+    return local_frame(spark, rows, out_schema)
 
 
 def _stream_exp_suite():
@@ -1316,8 +1305,8 @@ def stream_expectations_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
             rows = expectations_from_store(spark, d.store, suite).collect()
         except ValueError:  # empty corpus: zero batches, no store
-            return spark.createDataFrame([], out_schema)
-    return spark.createDataFrame([tuple(r) for r in rows], out_schema)
+            rows = []
+    return local_frame(spark, rows, out_schema)
 
 
 @_register(
@@ -1385,7 +1374,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.stop()
     schema = "segment string, event_type string, n_events long, sum_cents long"
     if not spark.catalog.tableExists(name):  # zero micro-batches ran
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     try:
         rows = (
             spark.table(name)
@@ -1394,6 +1383,4 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         spark.catalog.dropTempView(name)
-    return spark.createDataFrame(
-        [tuple(r) for r in rows], schema
-    )
+    return local_frame(spark, rows, schema)

@@ -12,8 +12,10 @@ from __future__ import annotations
 import os
 import threading
 import weakref
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 # Spark's generated-class cache (a static conf, default 100 entries; an
 # LRU keyed by generated source). A 7-entry catalog pass compiles 125
@@ -109,3 +111,38 @@ def session_cached(spark: SparkSession, key, build):
         if key not in cache:
             cache[key] = build()
         return cache[key]
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence | dict], schema: T.StructType | str
+) -> DataFrame:
+    """A frame of driver-held ``rows``, built from an Arrow table.
+
+    Every DataFrame the package builds from values on the driver goes
+    through here; it is the package's only ``createDataFrame`` call
+    (``tests/test_local_frame.py`` enforces that). ``createDataFrame``
+    over a Python list makes a pickled Python RDD, so every action on
+    the frame (a collect, a broadcast) forks Python workers and runs
+    ``defaultParallelism`` tasks. An Arrow table reaches the JVM as a
+    ``LocalRelation``: collecting it runs no job, and it carries exact
+    size statistics.
+
+    ``rows`` are tuples (``Row``s included) matched to ``schema`` by
+    position, or dicts matched by name (a missing key is null).
+    ``schema`` is a ``StructType`` or a DDL string such as
+    ``"id bigint, vec array<double>"``. Values read back as from the
+    list path: a naive ``datetime`` in a TimestampType column is the
+    driver's local time, as ``TimestampType.toInternal`` takes it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = []
+    for i, f in enumerate(schema.fields):
+        vals = [r.get(f.name) if isinstance(r, dict) else r[i] for r in rows]
+        if isinstance(f.dataType, T.TimestampType):
+            vals = [None if v is None else f.dataType.toInternal(v) for v in vals]
+        cols.append(pa.array(vals, type=arrow_schema.field(i).type))
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow_schema), schema)

@@ -30,6 +30,7 @@ import itertools
 import json
 import math
 import os
+import re
 import shutil
 import threading
 import time
@@ -38,6 +39,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from power_generation_etl_spark.session import local_frame
 
 MONTH_COL = "_month"
 SCHEMA_FILE = "_schema.json"  # leading underscore: invisible to Spark's file listing
@@ -64,6 +67,11 @@ def _lock_timeout_s() -> float:
     return v
 
 
+def _holds_parquet(root: str) -> bool:
+    """Whether directory ``root`` (missing: no) holds a data file."""
+    return any(f.endswith(".parquet") for _d, _s, files in os.walk(root) for f in files)
+
+
 def _shape(dt: T.DataType):
     """``dt`` with every nullability flag dropped: two schemas of one
     shape read the same parquet files the same way (parquet scans come
@@ -75,26 +83,6 @@ def _shape(dt: T.DataType):
     if isinstance(dt, T.MapType):
         return ("map", _shape(dt.keyType), _shape(dt.valueType))
     return dt.simpleString()
-
-
-def local_frame(spark: SparkSession, rows: list[dict], schema: T.StructType) -> DataFrame:
-    """A small frame of driver-side ``rows`` (dicts; missing keys are
-    null), built from an Arrow table. ``createDataFrame(list)`` would
-    run a Python RDD as ``defaultParallelism`` Python-worker tasks; an
-    Arrow table is handed to the JVM as is. Values read back as from
-    the list path: a naive ``datetime`` in a TimestampType column is
-    the driver's local time, as ``TimestampType.toInternal`` takes it."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    cols = {}
-    for f in schema.fields:
-        vals = [r.get(f.name) for r in rows]
-        if isinstance(f.dataType, T.TimestampType):
-            vals = [None if v is None else f.dataType.toInternal(v) for v in vals]
-        cols[f.name] = vals
-    table = pa.Table.from_pydict(cols, schema=to_arrow_schema(schema))
-    return spark.createDataFrame(table, schema)
 
 
 class TableStore:
@@ -259,13 +247,7 @@ class TableStore:
                 f.write(schema.json())
 
     def _has_data(self, table: str) -> bool:
-        p = self.path(table)
-        if not os.path.isdir(p):
-            return False
-        for _dir, _sub, files in os.walk(p):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
+        return _holds_parquet(self.path(table))
 
     def exists(self, table: str) -> bool:
         return self._has_data(table) or os.path.isfile(self._schema_file(table))
@@ -291,16 +273,35 @@ class TableStore:
         return df.drop(MONTH_COL) if MONTH_COL in df.columns else df
 
     def read_months(self, table: str, months: list[str]) -> DataFrame:
-        """Read only the given 'yyyy-MM' partition directories — the
-        `_month` IN-list prunes at the directory level (PartitionFilters
-        in .explain), so the scan is O(len(months)) regardless of table
-        size. The backbone of incremental MV refresh."""
+        """Read only the given 'yyyy-MM' partition directories: the scan
+        is handed just the ones holding data, so both the file listing
+        and the read are O(len(months)) regardless of table size, and
+        the `_month` IN-list prunes at the directory level
+        (PartitionFilters in .explain). The backbone of incremental MV
+        refresh and of the watermark lookup."""
         if not self._has_data(table):
             return self.read(table)
-        df = self._scan(self.path(table))
+        root = self.path(table)
+        dirs = [os.path.join(root, f"{MONTH_COL}={m}") for m in months]
+        df = self._scan(root, [d for d in dirs if _holds_parquet(d)] or None)
         if MONTH_COL in df.columns:
             df = df.filter(F.col(MONTH_COL).isin(months)).drop(MONTH_COL)
         return df
+
+    def newest_month(self, table: str) -> str | None:
+        """The newest `_month` partition ('yyyy-MM') that holds a data
+        file, compared as (year, month); None when the table has no such
+        partition (unpartitioned, or no data). Every write partitions by
+        the month of `timestamp_ms` in the session zone, so with one zone
+        this partition holds the table's largest `timestamp_ms`."""
+        root = self.path(table)
+        months = []
+        for entry in os.scandir(root) if os.path.isdir(root) else ():
+            key, _, month = entry.name.partition("=")
+            ym = re.fullmatch(r"([+-]?\d+)-(\d+)", month)
+            if key == MONTH_COL and ym and _holds_parquet(entry.path):
+                months.append(((int(ym[1]), int(ym[2])), month))
+        return max(months)[1] if months else None
 
     def read_join_months(self, table: str, months_df: DataFrame) -> DataFrame:
         """Runtime-pruned read: like `read_months`, but the month set is

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from power_generation_etl_spark.schemas import SOURCES
+from power_generation_etl_spark.session import local_frame
 
 
 _INTERVAL_UNITS_US = {
@@ -876,7 +877,8 @@ def stream_type_drift(
             nb = int(stats["nb"] or 0)
             drift_x = int(stats["x"] or 0)
             drift_ppm = (drift_x * 1_000_000) // (na * nb) if na and nb else 0
-            alert = spark.createDataFrame(
+            alert = local_frame(
+                spark,
                 [(batch_id, int(nb), int(drift_ppm))],
                 "batch_id long, n_rows long, drift_ppm long",
             )
@@ -918,9 +920,7 @@ def type_drift_alerts(spark: SparkSession, store_dir: str) -> DataFrame:
 
     path = os.path.join(store_dir, "alerts")
     if not os.path.isdir(path):
-        return spark.createDataFrame(
-            [], "batch_id long, n_rows long, drift_ppm long"
-        )
+        return local_frame(spark, [], "batch_id long, n_rows long, drift_ppm long")
     # Explicit projection: the batch=<id> directory layout adds a
     # discovered partition column that must not leak into the contract.
     return (

@@ -751,3 +751,52 @@ def test_load_releases_its_labelled_frame(engine, spark, tmp_path):
     with pytest.raises(ValueError, match="strict mode"):
         engine.load_jsonl("entsoe", path, strict=True)
     assert persisted() == before
+
+
+def test_watermark_scans_only_the_newest_month(engine, spark, tmp_path, monkeypatch):
+    """get_latest_date reads one partition directory, the newest month
+    holding data, and still equals a full-table MAX."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    table = "entsoe_generation_data"
+    p = _write(tmp_path, [_entsoe(JAN + 5 * DAY, "P1", 1.0), _entsoe(FEB, "P2", 2.0),
+                          _entsoe(MAR + 9 * DAY, "P3", 3.0), _entsoe(MAR, "P4", 4.0)])
+    engine.load_jsonl("entsoe", p)
+    full = engine.store.read(table).agg(
+        F.max(F.to_date(F.timestamp_millis("timestamp_ms")))
+    ).head()[0]
+    # the newest month directory exists but holds no data file
+    empty = os.path.join(engine.store.path(table), "_month=2024-04")
+    os.makedirs(empty)
+    open(os.path.join(empty, "_SUCCESS"), "w").close()
+
+    scans = []
+    for name in ("read", "read_months"):
+        orig = getattr(engine.store, name)
+        monkeypatch.setattr(
+            engine.store, name, lambda *a, _orig=orig: scans.append(_orig(*a)) or scans[-1]
+        )
+    assert engine.get_latest_date("entsoe") == str(full) == "2024-03-10"
+    assert len(scans) == 1
+    dirs = {os.path.basename(os.path.dirname(f)) for f in scans[0].inputFiles()}
+    assert dirs == {"_month=2024-03"}
+
+
+def test_newest_month_compares_year_and_month(engine, tmp_path):
+    """Months compare as numbers ('10000-01' is newer than '9999-12');
+    a table without `_month` partitions has no newest month."""
+    import os
+
+    root = engine.store.path("t")
+    for month in ("9999-12", "10000-01", "2024-10", "__HIVE_DEFAULT_PARTITION__"):
+        os.makedirs(os.path.join(root, f"_month={month}"))
+        open(os.path.join(root, f"_month={month}", "part-0.parquet"), "w").close()
+    assert engine.store.newest_month("t") == "10000-01"
+
+    flat = engine.store.path("flat")
+    os.makedirs(flat)
+    open(os.path.join(flat, "part-0.parquet"), "w").close()
+    assert engine.store.newest_month("flat") is None
+    assert engine.store.newest_month("missing") is None

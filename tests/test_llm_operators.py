@@ -1437,3 +1437,12 @@ class TestMutualKnn:
             assert got[key] == sim or (
                 math.isnan(got[key]) and math.isnan(sim)
             ), key
+
+
+@pytest.mark.parametrize("raw", ["abc", "nan", "inf", "-inf"])
+def test_max_candidates_env_rejects_non_finite(monkeypatch, raw):
+    """A malformed or non-finite SPARK_ETL_ALLPAIRS_MAX_CANDIDATES fails
+    with the descriptive ValueError, not a bare OverflowError from int()."""
+    monkeypatch.setenv("SPARK_ETL_ALLPAIRS_MAX_CANDIDATES", raw)
+    with pytest.raises(ValueError, match="SPARK_ETL_ALLPAIRS_MAX_CANDIDATES"):
+        mh._resolve_max_candidates(None)

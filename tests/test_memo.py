@@ -4,7 +4,10 @@ for (shingle tables, k-means trainings)."""
 
 from __future__ import annotations
 
+import pytest
+
 from power_generation_etl_spark.memo import PlanMemo
+from power_generation_etl_spark.session import local_frame
 
 
 class TestPlanMemo:
@@ -45,6 +48,28 @@ class TestPlanMemo:
         assert m.get_or_build((), src, lambda: "a") == "a"
         assert m.get_or_build((), src, lambda: "b") == "b"
         assert not m._slots
+
+    @pytest.mark.parametrize("raw", ["false", "off", "no", "true", "", "2"])
+    def test_env_rejects_values_other_than_0_and_1(self, monkeypatch, raw):
+        monkeypatch.setenv("SPARK_ETL_PRODUCT_CACHE", raw)
+        with pytest.raises(ValueError, match="SPARK_ETL_PRODUCT_CACHE"):
+            PlanMemo("t").enabled()
+
+    @pytest.mark.parametrize("raw, on", [(None, True), ("1", True), ("0", False)])
+    def test_env_accepts_0_and_1_unset_is_on(self, monkeypatch, raw, on):
+        if raw is None:
+            monkeypatch.delenv("SPARK_ETL_PRODUCT_CACHE", raising=False)
+        else:
+            monkeypatch.setenv("SPARK_ETL_PRODUCT_CACHE", raw)
+        assert PlanMemo("t").enabled() is on
+
+    def test_local_frames_hit_only_on_equal_rows(self, spark):
+        # An Arrow-built LocalRelation equals one holding the same rows.
+        m = PlanMemo("t")
+        ddl = "id long, t string"
+        m.get_or_build((), local_frame(spark, [(1, "x")], ddl), lambda: "first")
+        assert m.get_or_build((), local_frame(spark, [(1, "x")], ddl), lambda: "b") == "first"
+        assert m.get_or_build((), local_frame(spark, [(2, "x")], ddl), lambda: "c") == "c"
 
 
 def _persisted_ids(spark) -> set[int]:

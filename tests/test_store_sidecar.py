@@ -16,7 +16,8 @@ from pyspark.sql import functions as F
 
 from power_generation_etl_spark.engine import Engine
 from power_generation_etl_spark.schemas import EXTRACTION_METADATA_SCHEMA
-from power_generation_etl_spark.store import MONTH_COL, SCHEMA_FILE, TableStore, local_frame
+from power_generation_etl_spark.session import local_frame
+from power_generation_etl_spark.store import MONTH_COL, SCHEMA_FILE, TableStore
 
 JAN = 1704067200000  # 2024-01-01T00:00:00Z
 FEB = 1706745600000  # 2024-02-01T00:00:00Z
