@@ -140,7 +140,11 @@ def stream_hourly_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sink — otherwise every invocation in a long session (bench reps,
     # oracle sweeps) pins another copy of the aggregation state. The
     # drop sits in a finally: if the aggregation throws, the temp view
-    # (holding the full sink state) must not leak for the session.
+    # (holding the full sink state) must not leak for the session. The
+    # rows are sorted on the driver: a Spark orderBy would add a
+    # sampling job and a shuffle for a result this small. The key gives
+    # Spark's ascending, nulls-first order; Python compares strings by
+    # code point, which is the order of their UTF-8 bytes, Spark's.
     try:
         rows = (
             spark.table(name)
@@ -149,11 +153,11 @@ def stream_hourly_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "event_type",
                 "n_events",
             )
-            .orderBy("hour_us", "event_type")
             .collect()
         )
     finally:
         spark.catalog.dropTempView(name)
+    rows.sort(key=lambda r: (r[0] is not None, r[0], r[1] is not None, r[1]))
     return local_frame(spark, rows, schema)
 
 

@@ -15,9 +15,29 @@ This module is the Spark-native upgrade path for both:
   with a watermark for late data — the incremental version of the
   monthly MVs (A1-A5): at 100 TB you don't recompute 47.5M-row months,
   you update only the open windows.
+
+Every stream here starts through `_start`: checkpointed, with
+`Trigger.AvailableNow`, so one call processes what has landed and
+stops. The mergeable sketch stores (KMV, Misra-Gries, drift baseline,
+HLL registers, bottom-k sample, expectations metrics) share one
+crash-safe version protocol, `_commit_version`: micro-batch `n` writes
+the directory `<prefix><n>`, built by merging the newest COMPLETE
+version (one carrying Spark's `_SUCCESS` marker) with an id below `n`,
+then deletes the versions older than that merge source. A crash
+mid-write leaves a version without `_SUCCESS`, which no merge and no
+reader ever reads; a replayed batch rebuilds its own version from the
+same older one; the merge source is kept until the next batch
+commits. This is sound because the stores are mergeable summaries
+(Agarwal et al., "Mergeable Summaries", PODS 2012): merging a batch
+into the summary of everything before it equals the summary of the
+union.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,13 +62,22 @@ def _interval_us(spec: str) -> int:
     return int(n) * _INTERVAL_UNITS_US[unit.lower()]
 
 
+def _start(writer, checkpoint_dir: str) -> StreamingQuery:
+    """Start a configured `DataStreamWriter` as a catch-up run:
+    checkpointed at `checkpoint_dir`, `Trigger.AvailableNow` (process
+    everything that has landed, then stop)."""
+    return (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def stream_load(
     engine,
     source: str,
     landing_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    batch_files: bool = True,
 ) -> StreamingQuery:
     """Continuously load JSONL files dropped into `landing_dir`.
 
@@ -57,12 +86,10 @@ def stream_load(
     file-scoped semantics; foreachBatch routes discovered files through
     Engine.load_jsonl.
 
-    `batch_files=True` (default) loads an N-file burst in ONE
-    load_jsonl pass — one Spark job pipeline per micro-batch instead of
-    N sequential driver-side loads; first-wins dedup across the burst
-    follows lexicographic path order and the batch shares one lineage
-    row. Set False when per-file metadata rows / per-file
-    first-record-gated injection are required."""
+    An N-file burst loads in ONE load_jsonl pass — one Spark job
+    pipeline per micro-batch instead of N sequential driver-side loads;
+    first-wins dedup across the burst follows lexicographic path order
+    and the batch shares one lineage row."""
     spark = engine.spark
     stream = (
         spark.readStream.format("text")
@@ -74,20 +101,10 @@ def stream_load(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         paths = sorted(r["path"] for r in batch_df.select("path").distinct().collect())
-        if not paths:
-            return
-        if batch_files:
+        if paths:
             engine.load_jsonl(source, paths)
-        else:
-            for p in paths:
-                engine.load_jsonl(source, p)
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def streaming_monthly_rollup(
@@ -128,7 +145,6 @@ def stream_neardup_intake(
     k: int = 64,
     n_bands: int = 16,
     seed: int = 42,
-    available_now: bool = True,
     bucket_cap: int | None = None,
 ) -> StreamingQuery:
     """Streaming MinHash near-dup dedup at intake — the streaming twin
@@ -165,12 +181,7 @@ def stream_neardup_intake(
             bucket_cap=bucket_cap,
         )
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def neardup_intake_batch(
@@ -202,8 +213,6 @@ def neardup_intake_batch(
     bucket is super-cap. None (default) keeps the plan exact — what the
     oracle-gated catalog entry pins; set it for always-on production
     intake."""
-    import os
-
     from power_generation_etl_spark.operators import minhash as mh
 
     sig_path = os.path.join(store_dir, "sig")
@@ -358,7 +367,6 @@ def stream_document_filter(
     landing_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     redact_pii: bool = True,
     min_logit: int | None = None,
     dedup_watermark: str = "1 hour",
@@ -425,12 +433,9 @@ def stream_document_filter(
     writer = (
         filtered.writeStream.format("parquet")
         .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(writer, checkpoint_dir)
 
 
 def stream_interval_join(
@@ -508,7 +513,6 @@ def stream_cdc_apply(
     order_col: str,
     schema: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming CDC apply: JSON change batches land in `landing_dir`
     and merge into a warehouse table by key with
@@ -529,21 +533,13 @@ def stream_cdc_apply(
                 store.create(table, batch_df.schema)
             store.merge_upsert(table, batch_df, keys, order_col)
 
-    writer = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream.writeStream.foreachBatch(apply_batch), checkpoint_dir)
 
 
 def _store_versions(store_dir: str, prefix: str) -> list[int]:
     """COMPLETE (committed) sketch-store versions, ascending. A version
     is a `<prefix><batch_id>` directory carrying Spark's _SUCCESS
     marker — partial writes from a crashed batch never qualify."""
-    import os
-
     out = []
     if os.path.isdir(store_dir):
         for name in os.listdir(store_dir):
@@ -554,8 +550,47 @@ def _store_versions(store_dir: str, prefix: str) -> list[int]:
     return sorted(out)
 
 
-def _kmv_store_versions(store_dir: str) -> list[int]:
-    return _store_versions(store_dir, "kmv_v")
+def _commit_version(
+    spark: SparkSession,
+    store_dir: str,
+    prefix: str,
+    batch_id: int,
+    build: Callable[[DataFrame | None], DataFrame],
+) -> None:
+    """Commit micro-batch `batch_id` of a versioned sketch store: write
+    `build(prev)` to `<prefix><batch_id>` in overwrite mode, where
+    `prev` is the newest COMPLETE version with a smaller id (None when
+    there is none), then delete the versions older than that merge
+    source.
+
+    Crash/retry rules: a version without `_SUCCESS` is never read (a
+    crash mid-write leaves the merge source as the committed state — an
+    in-place overwrite would destroy the accumulated summary); a
+    replayed batch rebuilds its own version from the same older one,
+    never from its own partial output; the merge source is kept until
+    the next batch commits."""
+    older = [v for v in _store_versions(store_dir, prefix) if v < batch_id]
+    prev = (
+        spark.read.parquet(os.path.join(store_dir, f"{prefix}{older[-1]}"))
+        if older
+        else None
+    )
+    build(prev).write.mode("overwrite").parquet(
+        os.path.join(store_dir, f"{prefix}{batch_id}")
+    )
+    for v in older[:-1]:
+        shutil.rmtree(os.path.join(store_dir, f"{prefix}{v}"), ignore_errors=True)
+
+
+def _newest_version(
+    spark: SparkSession, store_dir: str, prefix: str, what: str
+) -> DataFrame:
+    """The newest complete version of a versioned sketch store; raises
+    ValueError naming `what` when none is committed yet."""
+    versions = _store_versions(store_dir, prefix)
+    if not versions:
+        raise ValueError(f"no committed {what} under {store_dir}")
+    return spark.read.parquet(os.path.join(store_dir, f"{prefix}{versions[-1]}"))
 
 
 def stream_kmv_cardinality(
@@ -567,7 +602,6 @@ def stream_kmv_cardinality(
     value_col: str,
     schema: str,
     k: int = 64,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming distinct-cardinality tracking via a MERGEABLE KMV
     sketch: each micro-batch hashes its values, merges them into the
@@ -576,58 +610,36 @@ def stream_kmv_cardinality(
     estimate covers everything ever seen (sketch mergeability is the
     property HLL is loved for; KMV shares it and stays engine-exact).
 
-    Crash/retry safety: each batch writes a NEW `kmv_v<batch_id>`
-    version directory (deterministic per batch → a replayed batch
-    rewrites its own version) built by merging the latest COMPLETE
-    version with id < batch_id — a replay never reads its own partial
-    output, and a crash mid-write leaves the previous version as the
-    committed state (an in-place overwrite would destroy all
-    accumulated hashes on a mid-write crash). Versions older than the
-    merge source are vacuumed opportunistically. Query the current
-    estimate with `kmv_estimate_from_store`.
+    Each batch commits a `kmv_v<batch_id>` version through
+    `_commit_version`. Query the current estimate with
+    `kmv_estimate_from_store`.
     """
+    from pyspark.sql.window import Window
+
     from power_generation_etl_spark.operators import sketch as sk
 
     stream = spark.readStream.schema(schema).json(landing_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-        import shutil
-
-        from pyspark.sql.window import Window
-
         if batch_df.isEmpty():
             return
         new = batch_df.select(
             F.col(group_col).alias("grp"),
             sk.hash48(F.col(value_col)).alias("h"),
         ).where(F.col("h").isNotNull()).distinct()
-        prev = [v for v in _kmv_store_versions(store_dir) if v < batch_id]
-        if prev:
-            prev_path = os.path.join(store_dir, f"kmv_v{prev[-1]}")
-            merged = spark.read.parquet(prev_path).unionByName(new).distinct()
-        else:
-            merged = new
-        w = Window.partitionBy("grp").orderBy("h")
-        kept = (
-            merged.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= k)
-            .drop("_rn")
-        )
-        kept.write.mode("overwrite").parquet(
-            os.path.join(store_dir, f"kmv_v{batch_id}")
-        )
-        for v in prev[:-1]:  # keep the merge source until the next batch
-            shutil.rmtree(
-                os.path.join(store_dir, f"kmv_v{v}"), ignore_errors=True
+
+        def build(prev: DataFrame | None) -> DataFrame:
+            merged = new if prev is None else prev.unionByName(new).distinct()
+            w = Window.partitionBy("grp").orderBy("h")
+            return (
+                merged.withColumn("_rn", F.row_number().over(w))
+                .where(F.col("_rn") <= k)
+                .drop("_rn")
             )
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+        _commit_version(spark, store_dir, "kmv_v", batch_id, build)
+
+    return _start(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def kmv_estimate_from_store(
@@ -637,15 +649,10 @@ def kmv_estimate_from_store(
     version; groups that never filled k hashes report their exact
     count. Estimate expression shared with the batch sketch
     (sketch.kmv_estimate_expr) so the two can never drift."""
-    import os
-
     from power_generation_etl_spark.operators import sketch as sk
     from pyspark.sql.window import Window
 
-    versions = _kmv_store_versions(store_dir)
-    if not versions:
-        raise ValueError(f"no committed kmv store under {store_dir}")
-    df = spark.read.parquet(os.path.join(store_dir, f"kmv_v{versions[-1]}"))
+    df = _newest_version(spark, store_dir, "kmv_v", "kmv store")
     w = Window.partitionBy("grp").orderBy("h")
     ranked = df.withColumn("_rn", F.row_number().over(w))
     kth = ranked.where(F.col("_rn") == k).select(
@@ -667,7 +674,6 @@ def stream_heavy_hitters(
     key_col: str,
     schema: str,
     capacity: int = 64,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming heavy-hitter tracking via a MERGEABLE Misra-Gries
     summary bounded at ``capacity`` counters forever.
@@ -680,17 +686,12 @@ def stream_heavy_hitters(
     (Agarwal et al., "Mergeable Summaries"). The cumulative subtracted
     total rides along as the error bound: for every key,
     ``est ≤ true ≤ est + max_err``, and any key whose true count
-    exceeds max_err is GUARANTEED present in the summary.
-
-    Crash/retry safety follows the KMV store protocol: versioned
-    `mg_v<batch_id>` directories, replayed batches rewrite their own
-    version from the last complete version with a smaller id.
+    exceeds max_err is GUARANTEED present in the summary. Each batch
+    commits an `mg_v<batch_id>` version through `_commit_version`.
     """
+    from pyspark.sql.window import Window
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-        import shutil
-
         if batch_df.isEmpty():
             return
         new = (
@@ -698,100 +699,83 @@ def stream_heavy_hitters(
             .groupBy(F.col(key_col).alias("key"))
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        prev = [v for v in _store_versions(store_dir, "mg_v") if v < batch_id]
-        prev_err = 0
-        if prev:
-            # ONE read of the previous version serves both the counter
-            # rows and the error scalar. max_err is a summary-global
-            # scalar (same on every row, and carried by the NULL-key
-            # meta row even when a truncation empties the counters — a
-            # per-key or rows-only error would silently reset the bound
-            # in exactly that case). A per-key error would also
-            # under-state the bound for keys evicted and re-inserted.
-            prev_all = spark.read.parquet(
-                os.path.join(store_dir, f"mg_v{prev[-1]}")
-            ).localCheckpoint()
-            prev_err = int(
-                prev_all.agg(F.max("max_err")).collect()[0][0] or 0
-            )
-            merged = (
-                prev_all.where(F.col("key").isNotNull())
-                .drop("max_err")
-                .unionByName(new)
-                .groupBy("key")
-                .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-            )
-        else:
-            merged = new
-        # MG truncation: subtract the (capacity+1)-th largest count.
-        # The summary is ≤ 2*capacity rows here (prev ≤ capacity, new
-        # collapses to distinct batch keys merged on key) — tiny, but
-        # computed distributed anyway (one window, deterministic
-        # (cnt desc, key) order).
-        from pyspark.sql.window import Window
 
-        ranked = merged.withColumn(
-            "_rn", F.row_number().over(Window.orderBy(F.desc("cnt"), "key"))
-        )
-        # The (capacity+1)-th count enters the plan as a broadcast 1-row
-        # aggregate (max-of-when, 0 when absent) instead of a driver
-        # collect, and the NULL-key meta row is derived from that same
-        # 1-row frame — the whole truncation + meta write is ONE job
-        # (r12; previously a collect + a driver-built createDataFrame
-        # per micro-batch). Identical rows: cut and max_err are the
-        # same integers either way.
-        cut_agg = ranked.agg(
-            F.coalesce(
-                F.max(F.when(F.col("_rn") == capacity + 1, F.col("cnt"))),
-                F.lit(0),
+        def build(prev: DataFrame | None) -> DataFrame:
+            prev_err = 0
+            merged = new
+            if prev is not None:
+                # ONE read of the previous version serves both the
+                # counter rows and the error scalar. max_err is a
+                # summary-global scalar (same on every row, and carried
+                # by the NULL-key meta row even when a truncation empties
+                # the counters — a per-key or rows-only error would
+                # silently reset the bound in exactly that case). A
+                # per-key error would also under-state the bound for
+                # keys evicted and re-inserted.
+                prev_all = prev.localCheckpoint()
+                prev_err = int(
+                    prev_all.agg(F.max("max_err")).collect()[0][0] or 0
+                )
+                merged = (
+                    prev_all.where(F.col("key").isNotNull())
+                    .drop("max_err")
+                    .unionByName(new)
+                    .groupBy("key")
+                    .agg(F.sum("cnt").cast("bigint").alias("cnt"))
+                )
+            # MG truncation: subtract the (capacity+1)-th largest count.
+            # The summary is ≤ 2*capacity rows here (prev ≤ capacity,
+            # new collapses to distinct batch keys merged on key) — tiny,
+            # but computed distributed anyway (one window, deterministic
+            # (cnt desc, key) order).
+            ranked = merged.withColumn(
+                "_rn", F.row_number().over(Window.orderBy(F.desc("cnt"), "key"))
             )
-            .cast("bigint")
-            .alias("_cut")
-        )
-        kept = (
-            ranked.crossJoin(F.broadcast(cut_agg))
-            .where(F.col("_rn") <= capacity)
-            .select(
-                "key",
-                (F.col("cnt") - F.col("_cut")).alias("cnt"),
+            # The (capacity+1)-th count enters the plan as a broadcast
+            # 1-row aggregate (max-of-when, 0 when absent) instead of a
+            # driver collect, and the NULL-key meta row is derived from
+            # that same 1-row frame — the whole truncation + meta write
+            # is ONE job (r12; previously a collect + a driver-built
+            # createDataFrame per micro-batch). Identical rows: cut and
+            # max_err are the same integers either way.
+            cut_agg = ranked.agg(
+                F.coalesce(
+                    F.max(F.when(F.col("_rn") == capacity + 1, F.col("cnt"))),
+                    F.lit(0),
+                )
+                .cast("bigint")
+                .alias("_cut")
+            )
+            kept = (
+                ranked.crossJoin(F.broadcast(cut_agg))
+                .where(F.col("_rn") <= capacity)
+                .select(
+                    "key",
+                    (F.col("cnt") - F.col("_cut")).alias("cnt"),
+                    (F.lit(prev_err) + F.col("_cut")).cast("bigint").alias("max_err"),
+                )
+                .where(F.col("cnt") > 0)
+            )
+            # NULL-key meta row: keeps the cumulative error even if the
+            # truncation just emptied the counter set (all counts == cut).
+            meta = cut_agg.select(
+                F.lit(None).cast(dict(kept.dtypes)["key"]).alias("key"),
+                F.lit(0).cast("bigint").alias("cnt"),
                 (F.lit(prev_err) + F.col("_cut")).cast("bigint").alias("max_err"),
             )
-            .where(F.col("cnt") > 0)
-        )
-        # NULL-key meta row: keeps the cumulative error even if the
-        # truncation just emptied the counter set (all counts == cut).
-        meta = cut_agg.select(
-            F.lit(None).cast(dict(kept.dtypes)["key"]).alias("key"),
-            F.lit(0).cast("bigint").alias("cnt"),
-            (F.lit(prev_err) + F.col("_cut")).cast("bigint").alias("max_err"),
-        )
-        kept.unionByName(meta).write.mode("overwrite").parquet(
-            os.path.join(store_dir, f"mg_v{batch_id}")
-        )
-        for v in prev[:-1]:
-            shutil.rmtree(
-                os.path.join(store_dir, f"mg_v{v}"), ignore_errors=True
-            )
+            return kept.unionByName(meta)
+
+        _commit_version(spark, store_dir, "mg_v", batch_id, build)
 
     stream = spark.readStream.schema(schema).json(landing_dir)
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def heavy_hitters_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
     """(key, est_count, max_err) from the latest committed summary,
     heaviest first. True counts satisfy est ≤ true ≤ est + max_err."""
-    import os
-
-    versions = _store_versions(store_dir, "mg_v")
-    if not versions:
-        raise ValueError(f"no committed heavy-hitter store under {store_dir}")
     return (
-        spark.read.parquet(os.path.join(store_dir, f"mg_v{versions[-1]}"))
+        _newest_version(spark, store_dir, "mg_v", "heavy-hitter store")
         .where(F.col("key").isNotNull())  # drop the error-carrier meta row
         .select("key", F.col("cnt").alias("est_count"), "max_err")
         .orderBy(F.desc("est_count"), "key")
@@ -805,7 +789,6 @@ def stream_type_drift(
     checkpoint_dir: str,
     key_col: str,
     schema: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming distribution-drift monitor — the streaming twin of the
     batch `lang_distribution_drift` query: each micro-batch's key
@@ -818,9 +801,9 @@ def stream_type_drift(
     replayed batch overwrites its own alert instead of duplicating it.
 
     The first batch seeds the baseline and reports no drift (there is
-    nothing to compare against). Read results with
+    nothing to compare against). The baseline is a `drift_v<batch_id>`
+    version committed through `_commit_version`. Read results with
     `type_drift_alerts`."""
-    import os
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -830,11 +813,10 @@ def stream_type_drift(
             .groupBy(F.col(key_col).alias("key"))
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        prev = [v for v in _store_versions(store_dir, "drift_v") if v < batch_id]
-        if prev:
-            base = spark.read.parquet(
-                os.path.join(store_dir, f"drift_v{prev[-1]}")
-            )
+
+        def build(base: DataFrame | None) -> DataFrame:
+            if base is None:
+                return new
             j = (
                 base.withColumnRenamed("cnt", "base_cnt")
                 .join(new.withColumnRenamed("cnt", "batch_cnt"), "key", "full_outer")
@@ -885,39 +867,20 @@ def stream_type_drift(
             alert.write.mode("overwrite").parquet(
                 os.path.join(store_dir, "alerts", f"batch={batch_id}")
             )
-            merged = (
-                j.select(
-                    "key",
-                    (F.col("base_cnt") + F.col("batch_cnt")).alias("cnt"),
-                )
+            return j.select(
+                "key", (F.col("base_cnt") + F.col("batch_cnt")).alias("cnt")
             )
-        else:
-            merged = new
-        import shutil
 
-        merged.write.mode("overwrite").parquet(
-            os.path.join(store_dir, f"drift_v{batch_id}")
-        )
-        for v in prev[:-1]:
-            shutil.rmtree(
-                os.path.join(store_dir, f"drift_v{v}"), ignore_errors=True
-            )
+        _commit_version(spark, store_dir, "drift_v", batch_id, build)
 
     stream = spark.readStream.schema(schema).json(landing_dir)
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def type_drift_alerts(spark: SparkSession, store_dir: str) -> DataFrame:
     """(batch_id, n_rows, drift_ppm) per monitored batch, in batch
     order. drift_ppm is Σ|share_batch − share_baseline| · 1e6 (L1
     distance ∈ [0, 2e6])."""
-    import os
-
     path = os.path.join(store_dir, "alerts")
     if not os.path.isdir(path):
         return local_frame(spark, [], "batch_id long, n_rows long, drift_ppm long")
@@ -930,10 +893,6 @@ def type_drift_alerts(spark: SparkSession, store_dir: str) -> DataFrame:
     )
 
 
-def _hll_store_versions(store_dir: str) -> list[int]:
-    return _store_versions(store_dir, "hll_v")
-
-
 def stream_hll_cardinality(
     spark: SparkSession,
     landing_dir: str,
@@ -942,7 +901,6 @@ def stream_hll_cardinality(
     group_col: str,
     value_col: str,
     schema: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming distinct-cardinality tracking via persisted HLL
     registers — the HLL twin of `stream_kmv_cardinality`: each
@@ -951,48 +909,30 @@ def stream_hll_cardinality(
     max(mj), the textbook HLL union. The store is bounded at
     O(groups × m=64) rows forever, and because max() is idempotent and
     commutative the merged state equals the batch sketch over
-    everything ever seen regardless of arrival order or replays.
-
-    Versioned-store crash/retry protocol identical to the KMV store:
-    each batch writes `hll_v<batch_id>` from the latest complete
-    version with id < batch_id, so replays rewrite their own version
-    and never read partial output."""
+    everything ever seen regardless of arrival order or replays. Each
+    batch commits an `hll_v<batch_id>` version through
+    `_commit_version`."""
     from power_generation_etl_spark.operators import sketch as sk
 
     stream = spark.readStream.schema(schema).json(landing_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-        import shutil
-
         if batch_df.isEmpty():
             return
         new = sk.hll_registers(batch_df, group_col, value_col)
-        prev = [v for v in _hll_store_versions(store_dir) if v < batch_id]
-        if prev:
-            prev_path = os.path.join(store_dir, f"hll_v{prev[-1]}")
-            merged = (
-                spark.read.parquet(prev_path)
-                .unionByName(new)
+
+        def build(prev: DataFrame | None) -> DataFrame:
+            if prev is None:
+                return new
+            return (
+                prev.unionByName(new)
                 .groupBy("grp", "bucket")
                 .agg(F.max("mj").alias("mj"))
             )
-        else:
-            merged = new
-        merged.write.mode("overwrite").parquet(
-            os.path.join(store_dir, f"hll_v{batch_id}")
-        )
-        for v in prev[:-1]:  # keep the merge source until the next batch
-            shutil.rmtree(
-                os.path.join(store_dir, f"hll_v{v}"), ignore_errors=True
-            )
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+        _commit_version(spark, store_dir, "hll_v", batch_id, build)
+
+    return _start(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def hll_estimate_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -1000,21 +940,12 @@ def hll_estimate_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
     register-store version — the identical estimate expression as the
     batch sketch (sketch.hll_estimate_from_registers), so streamed and
     batch numbers can never drift."""
-    import os
-
     from power_generation_etl_spark.operators import sketch as sk
 
-    versions = _hll_store_versions(store_dir)
-    if not versions:
-        raise ValueError(f"no committed hll store under {store_dir}")
-    regs = spark.read.parquet(
-        os.path.join(store_dir, f"hll_v{versions[-1]}")
-    ).select("grp", "bucket", "mj")
+    regs = _newest_version(spark, store_dir, "hll_v", "hll store").select(
+        "grp", "bucket", "mj"
+    )
     return sk.hll_estimate_from_registers(regs).orderBy("grp")
-
-
-def _qs_store_versions(store_dir: str) -> list[int]:
-    return _store_versions(store_dir, "qs_v")
 
 
 def stream_bottomk_sample(
@@ -1027,7 +958,6 @@ def stream_bottomk_sample(
     value_col: str,
     schema: str,
     k: int = 16,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming quantile tracking via a MERGEABLE bottom-k hash
     sample (operators.sketch.bottomk_sample): each micro-batch keeps
@@ -1035,11 +965,10 @@ def stream_bottomk_sample(
     persisted store, which re-truncates to k — bottom-k of a union
     equals bottom-k of the union of bottom-ks, so the store equals the
     batch sketch over everything ever seen regardless of the feed
-    split, and stays O(groups × k) forever. Same versioned
-    `qs_v<batch_id>` crash/retry protocol as the KMV store: a replayed
-    batch rewrites its own version from the latest COMPLETE older
-    version; sample membership is a pure function of the key set, so
-    replays are idempotent. Read estimates with `quantiles_from_store`.
+    split, and stays O(groups × k) forever. Each batch commits a
+    `qs_v<batch_id>` version through `_commit_version`; sample
+    membership is a pure function of the key set, so replays are
+    idempotent. Read estimates with `quantiles_from_store`.
     """
     from pyspark.sql.window import Window
 
@@ -1048,38 +977,22 @@ def stream_bottomk_sample(
     stream = spark.readStream.schema(schema).json(landing_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-        import shutil
-
         if batch_df.isEmpty():
             return
         new = sk.bottomk_sample(batch_df, group_col, key_col, value_col, k=k)
-        prev = [v for v in _qs_store_versions(store_dir) if v < batch_id]
-        if prev:
-            prev_path = os.path.join(store_dir, f"qs_v{prev[-1]}")
-            merged = spark.read.parquet(prev_path).unionByName(new).distinct()
-        else:
-            merged = new
-        w = Window.partitionBy("grp").orderBy("h", "key", "v")
-        kept = (
-            merged.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= k)
-            .drop("_rn")
-        )
-        kept.write.mode("overwrite").parquet(
-            os.path.join(store_dir, f"qs_v{batch_id}")
-        )
-        for v in prev[:-1]:  # keep the merge source until the next batch
-            shutil.rmtree(
-                os.path.join(store_dir, f"qs_v{v}"), ignore_errors=True
+
+        def build(prev: DataFrame | None) -> DataFrame:
+            merged = new if prev is None else prev.unionByName(new).distinct()
+            w = Window.partitionBy("grp").orderBy("h", "key", "v")
+            return (
+                merged.withColumn("_rn", F.row_number().over(w))
+                .where(F.col("_rn") <= k)
+                .drop("_rn")
             )
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+        _commit_version(spark, store_dir, "qs_v", batch_id, build)
+
+    return _start(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def quantiles_from_store(
@@ -1093,21 +1006,12 @@ def quantiles_from_store(
     sample store version — the identical quantile expression as the
     batch sketch (sketch.sample_quantiles), so streamed and batch
     numbers can never drift."""
-    import os
-
     from power_generation_etl_spark.operators import sketch as sk
 
-    versions = _qs_store_versions(store_dir)
-    if not versions:
-        raise ValueError(f"no committed bottom-k sample store under {store_dir}")
-    df = spark.read.parquet(
-        os.path.join(store_dir, f"qs_v{versions[-1]}")
+    df = _newest_version(
+        spark, store_dir, "qs_v", "bottom-k sample store"
     ).select("grp", "key", "v", "h")
     return sk.sample_quantiles(df, percents, value_scale=value_scale)
-
-
-def _ivf_store_batches(store_dir: str) -> list[int]:
-    return _store_versions(store_dir, "ivf_b")
 
 
 def stream_ivf_ingest(
@@ -1119,7 +1023,6 @@ def stream_ivf_ingest(
     vec_col: str,
     centroids: list[tuple[int, list[float]]],
     schema: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming vector ingestion into an IVF index: each micro-batch
     assigns its embeddings to the nearest fixed coarse centroid
@@ -1142,8 +1045,6 @@ def stream_ivf_ingest(
     cents = sorted((int(c), [float(x) for x in v]) for c, v in centroids)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
         if batch_df.isEmpty():
             return
         v = sim.as_double_array(F.col(vec_col))
@@ -1155,12 +1056,7 @@ def stream_ivf_ingest(
             os.path.join(store_dir, f"ivf_b{batch_id}")
         )
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def ivf_cells_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -1169,9 +1065,7 @@ def ivf_cells_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
     The per-cell count/checksum pair is what the batch-built index
     must reproduce — any assignment drift or lost/duplicated posting
     breaks it."""
-    import os
-
-    batches = _ivf_store_batches(store_dir)
+    batches = _store_versions(store_dir, "ivf_b")
     if not batches:
         raise ValueError(f"no committed ivf postings under {store_dir}")
     df = spark.read.parquet(
@@ -1188,8 +1082,9 @@ def ivf_cells_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
     )
 
 
-def _text_index_batches(store_dir: str) -> list[int]:
-    return _store_versions(store_dir, "ix_b")
+# The columns and types of every `ix_b<batch_id>` shard that
+# `stream_text_index_ingest` writes.
+TEXT_INDEX_SCHEMA = "term string, doc_id long, tf long"
 
 
 def stream_text_index_ingest(
@@ -1200,7 +1095,6 @@ def stream_text_index_ingest(
     id_col: str,
     text_col: str,
     schema: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming inverted-index ingestion — the text twin of
     `stream_ivf_ingest`: each micro-batch tokenizes its documents with
@@ -1220,8 +1114,6 @@ def stream_text_index_ingest(
     stream = spark.readStream.schema(schema).json(landing_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
         if batch_df.isEmpty():
             return
         toks = (
@@ -1241,12 +1133,7 @@ def stream_text_index_ingest(
             os.path.join(store_dir, f"ix_b{batch_id}")
         )
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def term_stats_from_store(
@@ -1258,15 +1145,14 @@ def term_stats_from_store(
     (replay belt-and-braces — a replayed shard carries identical
     postings). Because shards partition the document set, the merged
     stats must equal the batch tokenize+aggregate over every document
-    ever ingested — the oracle's claim."""
-    import os
-
-    batches = _text_index_batches(store_dir)
+    ever ingested — the oracle's claim. The shards are read with the
+    writer's schema, `TEXT_INDEX_SCHEMA`, so the read infers nothing."""
+    batches = _store_versions(store_dir, "ix_b")
     if not batches:
         raise ValueError(f"no committed index shards under {store_dir}")
-    df = spark.read.parquet(
+    df = spark.read.schema(TEXT_INDEX_SCHEMA).parquet(
         *[os.path.join(store_dir, f"ix_b{b}") for b in batches]
-    ).select("term", "doc_id", "tf")
+    )
     return (
         df.dropDuplicates(["term", "doc_id"])
         .groupBy("term")
@@ -1279,10 +1165,6 @@ def term_stats_from_store(
     )
 
 
-def _qx_store_versions(store_dir: str) -> list[int]:
-    return _store_versions(store_dir, "qx_v")
-
-
 def stream_expectations(
     spark: SparkSession,
     landing_dir: str,
@@ -1290,7 +1172,6 @@ def stream_expectations(
     checkpoint_dir: str,
     suite,
     schema: str,
-    available_now: bool = True,
     group_col: str | None = None,
 ) -> StreamingQuery:
     """Streaming data-quality monitoring: each micro-batch reduces to
@@ -1303,8 +1184,8 @@ def stream_expectations(
     split — Deequ-style checks kept current over an unbounded stream
     for the cost of a map-side aggregate per batch.
 
-    Same versioned `qx_v<batch_id>` crash/retry protocol as the other
-    sketch stores. Batch-only checks (uniqueness) are rejected at
+    Each batch commits a `qx_v<batch_id>` version through
+    `_commit_version`. Batch-only checks (uniqueness) are rejected at
     start. Read the report with `expectations_from_store`.
 
     `group_col` switches to the PER-GROUP monitor (the streaming twin
@@ -1316,9 +1197,6 @@ def stream_expectations(
     stream = spark.readStream.schema(schema).json(landing_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-        import shutil
-
         if batch_df.isEmpty():
             return
         if group_col is None:
@@ -1327,43 +1205,27 @@ def stream_expectations(
             new = batch_df.groupBy(
                 F.col(group_col).alias("grp")
             ).agg(*suite.partial_aggs())
-        prev = [v for v in _qx_store_versions(store_dir) if v < batch_id]
-        if prev:
-            prev_path = os.path.join(store_dir, f"qx_v{prev[-1]}")
-            both = spark.read.parquet(prev_path).unionByName(new)
-            if group_col is None:
-                merged = both.agg(*suite.merge_aggs())
-            else:
-                merged = both.groupBy("grp").agg(*suite.merge_aggs())
-        else:
-            merged = new
-        merged.write.mode("overwrite").parquet(
-            os.path.join(store_dir, f"qx_v{batch_id}")
-        )
-        for v in prev[:-1]:  # keep the merge source until the next batch
-            shutil.rmtree(
-                os.path.join(store_dir, f"qx_v{v}"), ignore_errors=True
-            )
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+        def build(prev: DataFrame | None) -> DataFrame:
+            if prev is None:
+                return new
+            both = prev.unionByName(new)
+            if group_col is None:
+                return both.agg(*suite.merge_aggs())
+            return both.groupBy("grp").agg(*suite.merge_aggs())
+
+        _commit_version(spark, store_dir, "qx_v", batch_id, build)
+
+    return _start(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def expectations_from_store(spark: SparkSession, store_dir: str, suite) -> DataFrame:
     """(check_name, metric, passed) from the latest committed metrics
     store — finalized through the same Spark SQL integer arithmetic as
     the batch suite, so streamed and batch reports can never drift."""
-    import os
-
-    versions = _qx_store_versions(store_dir)
-    if not versions:
-        raise ValueError(f"no committed expectations store under {store_dir}")
-    merged = spark.read.parquet(os.path.join(store_dir, f"qx_v{versions[-1]}"))
-    return suite.finalize(merged)
+    return suite.finalize(
+        _newest_version(spark, store_dir, "qx_v", "expectations store")
+    )
 
 
 def grouped_expectations_from_store(
@@ -1371,10 +1233,6 @@ def grouped_expectations_from_store(
 ) -> DataFrame:
     """(grp, check_name, metric, passed) from the latest committed
     per-group metrics store."""
-    import os
-
-    versions = _qx_store_versions(store_dir)
-    if not versions:
-        raise ValueError(f"no committed expectations store under {store_dir}")
-    merged = spark.read.parquet(os.path.join(store_dir, f"qx_v{versions[-1]}"))
-    return suite.finalize_grouped(merged)
+    return suite.finalize_grouped(
+        _newest_version(spark, store_dir, "qx_v", "expectations store")
+    )

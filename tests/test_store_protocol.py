@@ -1,0 +1,205 @@
+"""The shared machinery of ``streaming/ingest.py``: the crash-safe
+version protocol of the sketch stores (``_commit_version``), the one
+stream start (``_start``), the text-index reader's pinned schema, and
+the driver-side order of ``stream_hourly_event_counts``."""
+
+from __future__ import annotations
+
+import ast
+import datetime
+import os
+import uuid
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from power_generation_etl_spark.session import local_frame
+from power_generation_etl_spark.streaming import ingest
+from power_generation_etl_spark.streaming.ingest import (
+    TEXT_INDEX_SCHEMA,
+    _commit_version,
+    _newest_version,
+    _store_versions,
+)
+
+INGEST = ingest.__file__
+
+
+def _rows(df) -> set[int]:
+    return {r["v"] for r in df.collect()}
+
+
+def _commit(spark, store, batch_id, new, seen=None):
+    """Commit batch ``batch_id`` of a toy store whose summary is the set
+    union of the values ``new``; record the merge source's rows."""
+
+    def build(prev):
+        if seen is not None:
+            seen.append(None if prev is None else _rows(prev))
+        df = local_frame(spark, [(v,) for v in new], "v long")
+        return df if prev is None else prev.unionByName(df).distinct()
+
+    _commit_version(spark, store, "p_v", batch_id, build)
+
+
+def _group_jobs(spark, fn):
+    """Run ``fn`` under a job group of its own; return (result, the
+    stage names of each job it ran)."""
+    group = f"store-protocol-{uuid.uuid4().hex}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    tracker = sc.statusTracker()
+    names = []
+    for job in tracker.getJobIdsForGroup(group):
+        stages = [tracker.getStageInfo(s) for s in tracker.getJobInfo(job).stageIds]
+        names.append([s.name for s in stages if s is not None])
+    return out, names
+
+
+def test_commit_version_ignores_incomplete_version(spark, tmp_path):
+    """A version directory without ``_SUCCESS`` (a crash mid-write) is
+    read neither as a merge source nor by the newest-version reader."""
+    store = str(tmp_path / "store")
+    _commit(spark, store, 1, [1])
+    partial = os.path.join(store, "p_v2")
+    local_frame(spark, [(99,)], "v long").write.parquet(partial)
+    os.remove(os.path.join(partial, "_SUCCESS"))
+
+    assert _store_versions(store, "p_v") == [1]
+    assert _rows(_newest_version(spark, store, "p_v", "toy store")) == {1}
+    seen = []
+    _commit(spark, store, 3, [3], seen)
+    assert seen == [{1}]
+    assert _rows(_newest_version(spark, store, "p_v", "toy store")) == {1, 3}
+
+
+def test_commit_version_replay_rebuilds_from_older_version(spark, tmp_path):
+    """Replaying batch n over a committed ``<prefix>n`` merges the newest
+    complete version below n again, never its own output, and writes
+    the same rows."""
+    store = str(tmp_path / "store")
+    for b in (1, 2, 3):
+        _commit(spark, store, b, [b])
+    before = sorted(spark.read.parquet(os.path.join(store, "p_v3")).collect())
+    seen = []
+    _commit(spark, store, 3, [3], seen)
+    assert seen == [{1, 2}]
+    after = sorted(spark.read.parquet(os.path.join(store, "p_v3")).collect())
+    assert after == before
+    assert {r["v"] for r in after} == {1, 2, 3}
+
+
+def test_commit_version_keeps_only_merge_source_and_new_version(spark, tmp_path):
+    store = str(tmp_path / "store")
+    seen = []
+    for b in (1, 2, 3, 4):
+        _commit(spark, store, b, [b], seen)
+    assert seen[0] is None
+    assert sorted(os.listdir(store)) == ["p_v3", "p_v4"]
+
+
+def test_newest_version_raises_without_committed_version(spark, tmp_path):
+    with pytest.raises(ValueError, match="no committed toy store under"):
+        _newest_version(spark, str(tmp_path / "none"), "p_v", "toy store")
+
+
+def _calls_outside(tree, attr, owner, pred=lambda call: True):
+    """Line numbers of calls to ``.<attr>(...)`` outside the function
+    ``owner``."""
+    allowed = set()
+    for fn in ast.walk(tree):
+        if isinstance(fn, ast.FunctionDef) and fn.name == owner:
+            allowed = {id(n) for n in ast.walk(fn)}
+    return [
+        n.lineno
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == attr
+        and pred(n)
+        and id(n) not in allowed
+    ]
+
+
+def test_one_version_commit_and_one_stream_start():
+    """Store versions are deleted only by ``_commit_version``; streams
+    are triggered and started only by ``_start``."""
+    with open(INGEST) as f:
+        tree = ast.parse(f.read(), INGEST)
+    assert _calls_outside(tree, "rmtree", "_commit_version") == []
+    assert _calls_outside(tree, "trigger", "_start") == []
+    no_args = lambda call: not call.args and not call.keywords  # noqa: E731
+    assert _calls_outside(tree, "start", "_start", no_args) == []
+
+
+def test_text_index_writer_schema_is_the_pinned_schema(spark, tmp_path):
+    """``stream_text_index_ingest`` writes shards of exactly
+    ``TEXT_INDEX_SCHEMA``, and ``term_stats_from_store`` reads them
+    without a schema-inference job."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    landing = tmp_path / "ix_in"
+    landing.mkdir()
+    store = str(tmp_path / "ix_store")
+    with open(landing / "d.jsonl", "w") as f:
+        for i, text in enumerate(["a b a", "B c", None]):
+            f.write(json.dumps({"id": i, "text": text}) + "\n")
+    q = ingest.stream_text_index_ingest(
+        spark, str(landing), store, str(tmp_path / "ck"),
+        "id", "text", "id long, text string",
+    )
+    q.awaitTermination(120)
+
+    shards = _store_versions(store, "ix_b")
+    assert shards
+    for b in shards:
+        written = spark.read.parquet(os.path.join(store, f"ix_b{b}")).schema
+        assert written == StructType.fromDDL(TEXT_INDEX_SCHEMA)
+
+    rows, jobs = _group_jobs(
+        spark, lambda: ingest.term_stats_from_store(spark, store, k=2).collect()
+    )
+    assert [tuple(r) for r in rows] == [("b", 2, 2), ("a", 1, 2)]
+    assert jobs
+    assert not [n for names in jobs for n in names if n.startswith("parquet ")]
+
+
+def test_hourly_event_counts_rows_in_spark_sort_order(spark, tmp_path):
+    """``stream_hourly_event_counts`` sorts on the driver; its rows come
+    back in the order Spark's ascending, nulls-first sort gives, with a
+    null and non-ASCII event types in the data."""
+    from power_generation_etl_spark.plans.streaming_queries import (
+        stream_hourly_event_counts,
+    )
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    t0 = datetime.datetime(2024, 1, 1, 5, 10)
+    types = ["view", None, "Zoom", "éclair", "cart", None, "view", "ä", "cart"]
+    n = len(types) * 3
+    table = pa.table({
+        "event_id": pa.array(range(n), pa.int64()),
+        "ts": pa.array(
+            [t0 + datetime.timedelta(minutes=50 * (i % 4)) for i in range(n)],
+            pa.timestamp("us"),
+        ),
+        "user_id": pa.array([i % 5 for i in range(n)], pa.int64()),
+        "event_type": pa.array(types * 3, pa.string()),
+        "value": pa.array([1.0] * n, pa.float64()),
+        "props": pa.array(["{}"] * n, pa.string()),
+    })
+    pq.write_table(table, str(sf / "events.parquet"))
+    got = stream_hourly_event_counts(spark, str(sf)).collect()
+    assert any(r["event_type"] is None for r in got)
+    want = local_frame(
+        spark, got, "hour_us long, event_type string, n_events long"
+    ).orderBy("hour_us", "event_type").collect()
+    assert got == want
+    assert sum(r["n_events"] for r in got) == n

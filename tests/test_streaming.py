@@ -473,9 +473,9 @@ def test_stream_kmv_cardinality(spark, tmp_path):
     want = sk.kmv_distinct(batch, "g", "v", k=64).collect()[0]["kmv_estimate"]
     assert est["g1"] == want
     # the latest committed version stays bounded at k rows per group
-    from power_generation_etl_spark.streaming.ingest import _kmv_store_versions
+    from power_generation_etl_spark.streaming.ingest import _store_versions
 
-    versions = _kmv_store_versions(str(store))
+    versions = _store_versions(str(store), "kmv_v")
     assert versions, "no committed store version"
     latest = store / f"kmv_v{versions[-1]}"
     assert spark.read.parquet(str(latest)).count() <= 64
@@ -707,7 +707,7 @@ def test_heavy_hitters_error_survives_emptied_summary(spark, tmp_path):
 def test_stream_hll_cardinality_merges_as_batch(spark, tmp_path):
     from power_generation_etl_spark.operators import sketch as sk
     from power_generation_etl_spark.streaming.ingest import (
-        _hll_store_versions,
+        _store_versions,
         hll_estimate_from_store,
         stream_hll_cardinality,
     )
@@ -746,7 +746,7 @@ def test_stream_hll_cardinality_merges_as_batch(spark, tmp_path):
     want = sk.hll_distinct(batch, "g", "v").collect()[0]
     assert est["g1"] == (want["z_scaled"], want["hll_estimate"])
     # the committed store stays bounded at m rows per group
-    versions = _hll_store_versions(str(store))
+    versions = _store_versions(str(store), "hll_v")
     assert versions, "no committed store version"
     latest = store / f"hll_v{versions[-1]}"
     assert spark.read.parquet(str(latest)).count() <= 64
@@ -815,10 +815,10 @@ def test_kmv_store_survives_injected_replay(spark, tmp_path):
             for r in kmv_estimate_from_store(spark, store, k=64).collect()
         }
         from power_generation_etl_spark.streaming.ingest import (
-            _kmv_store_versions,
+            _store_versions,
         )
 
-        v = _kmv_store_versions(store)[-1]
+        v = _store_versions(store, "kmv_v")[-1]
         rows = sorted(
             map(tuple, spark.read.parquet(f"{store}/kmv_v{v}").collect())
         )
@@ -883,7 +883,7 @@ def test_stream_bottomk_sample_quantiles(spark, tmp_path):
     committed store stays bounded at k rows per group."""
     from power_generation_etl_spark.operators import sketch as sk
     from power_generation_etl_spark.streaming.ingest import (
-        _qs_store_versions,
+        _store_versions,
         quantiles_from_store,
         stream_bottomk_sample,
     )
@@ -925,7 +925,7 @@ def test_stream_bottomk_sample_quantiles(spark, tmp_path):
         )
     )
     assert got == want
-    versions = _qs_store_versions(str(store))
+    versions = _store_versions(str(store), "qs_v")
     assert versions, "no committed store version"
     latest = store / f"qs_v{versions[-1]}"
     assert spark.read.parquet(str(latest)).count() <= 16
@@ -1007,7 +1007,7 @@ def test_quantile_store_survives_injected_replay(spark, tmp_path):
     older-version protocol, plus sample membership being a pure
     function of the key set)."""
     from power_generation_etl_spark.streaming.ingest import (
-        _qs_store_versions,
+        _store_versions,
         quantiles_from_store,
         stream_bottomk_sample,
     )
@@ -1035,7 +1035,7 @@ def test_quantile_store_survives_injected_replay(spark, tmp_path):
     run()
 
     def snapshot():
-        v = _qs_store_versions(store)[-1]
+        v = _store_versions(store, "qs_v")[-1]
         rows = sorted(map(tuple, spark.read.parquet(f"{store}/qs_v{v}").collect()))
         qs = sorted(
             map(tuple, quantiles_from_store(spark, store, [50, 90]).collect())
