@@ -171,12 +171,10 @@ def stream_intake_filter_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = os.path.join(d.store, "out")
 
         def _run(landing: str) -> None:
-            q = stream_document_filter(
+            stream_document_filter(
                 spark, landing, out, d.ckpt,
                 redact_pii=False, dedup_watermark="3650 days",
             )
-            q.awaitTermination()
-            q.stop()
 
         overlap_two_rounds(d, r1, r2, "json", _run)
         try:
@@ -354,13 +352,11 @@ def stream_intake_neardup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = os.path.join(d.store, "out")
 
         def _run(landing: str) -> None:
-            q = stream_neardup_intake(
+            stream_neardup_intake(
                 spark, landing, out, d.ckpt, os.path.join(d.store, "sig"),
                 threshold=0.5, n=3, k=64, n_bands=16, seed=42,
                 bucket_cap=None,  # pinned: exact, env-independent output
             )
-            q.awaitTermination()
-            q.stop()
 
         overlap_two_rounds(d, r1, r2, "json", _run)
         try:
@@ -499,12 +495,10 @@ def stream_expectations_by_source(spark: SparkSession, sf_dir: str) -> DataFrame
     out_schema = "grp string, check_name string, metric long, passed int"
     with stream_dirs("qg") as d:
         def _run(landing: str) -> None:
-            q = stream_expectations(
+            stream_expectations(
                 spark, landing, d.store, d.ckpt, suite, schema,
                 group_col="source",
             )
-            q.awaitTermination()
-            q.stop()
 
         overlap_two_rounds(d, r1, r2, "json", _run)
         try:
@@ -561,12 +555,10 @@ def stream_text_index_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_schema = "term string, df long, total_tf long"
     with stream_dirs("ix") as d:
         def _run(landing: str) -> None:
-            q = stream_text_index_ingest(
+            stream_text_index_ingest(
                 spark, landing, d.store, d.ckpt, "doc_id", "text",
                 "doc_id long, text string",
             )
-            q.awaitTermination()
-            q.stop()
 
         # round 1 shards ix_b0; round 2 appends ix_b1
         overlap_two_rounds(d, r1, r2, "json", _run)

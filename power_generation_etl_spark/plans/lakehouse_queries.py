@@ -168,7 +168,7 @@ def stream_cdc_apply_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "json",
         )
         link_data_files(staged, d.landing, "c")
-        q = stream_cdc_apply(
+        stream_cdc_apply(
             spark,
             d.landing,
             store,
@@ -178,8 +178,6 @@ def stream_cdc_apply_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             schema="o_orderkey long, o_orderstatus string, ver long",
             checkpoint_dir=d.ckpt,
         )
-        q.awaitTermination()
-        q.stop()
         if 1 not in store.versions("orders_snap"):  # empty base: no batch
             return local_frame(spark, [], _OUT_SCHEMA)
         return _feed_counts(spark, store)

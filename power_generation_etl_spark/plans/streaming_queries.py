@@ -9,11 +9,10 @@ for it to finish, and returns the sink contents as a DataFrame whose
 values are batch-deterministic — so the ordinary exact oracle applies.
 
 Determinism notes (why these shapes and not others):
-* `stream_hourly_event_counts` uses COMPLETE output mode — the memory
-  sink holds the full aggregation state after the final micro-batch,
-  so the result equals the batch GROUP BY no matter how the file
-  source split micro-batches, and no watermark/late-data policy can
-  drop rows.
+* `stream_hourly_event_counts` uses COMPLETE output mode — every
+  micro-batch re-emits the full aggregation state, so the last batch's
+  rows equal the batch GROUP BY no matter how the file source split
+  micro-batches, and no watermark/late-data policy can drop rows.
 * `stream_dedup_event_counts` feeds the file source a landing dir
   with the SAME events file hard-linked twice, streams it through
   stateful `dropDuplicates` (append mode), and aggregates the sink
@@ -35,23 +34,27 @@ Feed plumbing: every entry uses the one stream-feed scaffold in
 `plans/queries.py` — `stream_dirs` owns its stage/landing/store/
 checkpoint temp dirs, `link_data_files` adds files to the landing dir,
 and each two-round entry hands its round DataFrames, a staging format
-and a `run(landing)` callable to `overlap_two_rounds`. An entry body
-is only its query, its sink and its result read.
+and a `run(landing)` callable to `overlap_two_rounds`. Every stream
+runs to its end through `streaming/ingest.py::run_to_end`, checkpointed
+in the entry's `ckpt` dir; the sinks that bring rows to the driver are
+`_collect_batches` sinks. An entry body is only its query, its sink and
+its result read.
 
 Scale notes: both plans are the standard cluster shapes — file-source
 listing parallelizes per file; the windowed count is a streaming
 partial-agg + state-store merge keyed by (window, type) whose state is
 bounded by the key domain, and the dedup state is keyed by event_id
 (at 100 TB one would add a watermark + event-time bound on the dedup
-key TTL, which availableNow replay here doesn't need). The memory sink
-is test/driver plumbing only; production sinks are the parquet/
-foreachBatch stores in `streaming/ingest.py`.
+key TTL, which availableNow replay here doesn't need). The collecting
+sinks hold only bounded aggregates (hours × types, segments × types);
+production sinks are the parquet/foreachBatch stores in
+`streaming/ingest.py`.
 """
 
 from __future__ import annotations
 
-import itertools
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -73,8 +76,7 @@ from power_generation_etl_spark.plans.queries import (
     ts_to_ntz,
 )
 from power_generation_etl_spark.session import local_frame
-
-_MEM_SEQ = itertools.count()
+from power_generation_etl_spark.streaming.ingest import run_to_end
 
 
 def _stream_events(spark: SparkSession, sf_dir: str, landing: str):
@@ -91,8 +93,31 @@ def _stream_events(spark: SparkSession, sf_dir: str, landing: str):
     return ts_to_ntz(spark.readStream.schema(schema).parquet(landing))
 
 
-def _mem_name(prefix: str) -> str:
-    return f"{prefix}_{os.getpid()}_{next(_MEM_SEQ)}"
+def _collect_batches(
+    select: Callable[[DataFrame], DataFrame],
+) -> tuple[Callable[[DataFrame, int], None], dict[int, list]]:
+    """A `foreachBatch` sink that collects `select(batch_df)` to the
+    driver, and the dict it fills: batch id → rows. A retried batch
+    overwrites its own rows instead of adding them twice."""
+    rows: dict[int, list] = {}
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        rows[int(batch_id)] = select(batch_df).collect()
+
+    return sink, rows
+
+
+def _last_batch(rows: dict[int, list]) -> list:
+    """The rows of the newest batch — in COMPLETE mode, the whole
+    result; none when zero micro-batches ran."""
+    return rows[max(rows)] if rows else []
+
+
+def _spark_order(r) -> tuple:
+    """Sort key on a row's first two fields giving Spark's ascending,
+    nulls-first order. Python compares strings by code point, which is
+    the order of their UTF-8 bytes, Spark's."""
+    return (r[0] is not None, r[0], r[1] is not None, r[1])
 
 
 @_register(
@@ -110,13 +135,21 @@ def _mem_name(prefix: str) -> str:
 def stream_hourly_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming windowed aggregation, run for real: file
     source over events.parquet → 1-hour tumbling window × event_type
-    count → COMPLETE mode memory sink, trigger=availableNow. The sink
-    after termination holds the exact batch GROUP BY result (complete
-    mode re-emits full state, so micro-batch boundaries are
+    count → COMPLETE mode `foreachBatch` sink, trigger=availableNow.
+    The last micro-batch holds the exact batch GROUP BY result
+    (complete mode re-emits full state, so micro-batch boundaries are
     invisible), letting the streaming runtime itself sit under the
     exact DuckDB oracle. Window starts are reported as epoch-µs
-    BIGINTs — timezone-free on both engines."""
-    name = _mem_name("stream_hourly")
+    BIGINTs — timezone-free on both engines. The bounded (hours ×
+    types) rows are sorted on the driver: a Spark orderBy would add a
+    sampling job and a shuffle for a result this small."""
+    sink, batches = _collect_batches(
+        lambda b: b.select(
+            ntz_epoch_us(F.col("w.start")).alias("hour_us"),
+            "event_type",
+            "n_events",
+        )
+    )
     with stream_dirs("stream_hourly") as d:
         link_data_files(f"{sf_dir}/events.parquet", d.landing, "c0")
         agg = (
@@ -124,41 +157,9 @@ def stream_hourly_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
             .agg(F.count(F.lit(1)).alias("n_events"))
         )
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
-    schema = "hour_us long, event_type string, n_events long"
-    if not spark.catalog.tableExists(name):  # zero micro-batches ran
-        return local_frame(spark, [], schema)
-    # Localize the (bounded: hours × types) result and DROP the memory
-    # sink — otherwise every invocation in a long session (bench reps,
-    # oracle sweeps) pins another copy of the aggregation state. The
-    # drop sits in a finally: if the aggregation throws, the temp view
-    # (holding the full sink state) must not leak for the session. The
-    # rows are sorted on the driver: a Spark orderBy would add a
-    # sampling job and a shuffle for a result this small. The key gives
-    # Spark's ascending, nulls-first order; Python compares strings by
-    # code point, which is the order of their UTF-8 bytes, Spark's.
-    try:
-        rows = (
-            spark.table(name)
-            .select(
-                ntz_epoch_us(F.col("w.start")).alias("hour_us"),
-                "event_type",
-                "n_events",
-            )
-            .collect()
-        )
-    finally:
-        spark.catalog.dropTempView(name)
-    rows.sort(key=lambda r: (r[0] is not None, r[0], r[1] is not None, r[1]))
-    return local_frame(spark, rows, schema)
+        run_to_end(agg.writeStream.outputMode("complete").foreachBatch(sink), d.ckpt)
+    rows = sorted(_last_batch(batches), key=_spark_order)
+    return local_frame(spark, rows, "hour_us long, event_type string, n_events long")
 
 
 @_register(
@@ -176,9 +177,8 @@ def stream_dedup_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SAME events file twice (hard links — no copy), the stream
     applies dropDuplicates(event_id) in append mode, and each
     micro-batch's deduped output is aggregated INSIDE foreachBatch into
-    a per-batch {event_type: count} dict — so the driver-side state is
-    O(batches × types), never O(rows) (the earlier memory-sink form
-    held one row per unique event). Keying by batch_id keeps the sink
+    per-batch (event_type, count) rows — so the driver-side state is
+    O(batches × types), never O(rows). Keying by batch_id keeps the sink
     idempotent: a retried batch overwrites its own counts instead of
     double-adding. The dedup state is what's under test — without it
     every per-type count doubles and the oracle's plain counts
@@ -186,16 +186,9 @@ def stream_dedup_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-ingest contract (`operators/dedupe.py::anti_join_new_rows` —
     reference src/database.py ON CONFLICT DO NOTHING), restated as
     exactly-once streaming intake."""
-    per_batch: dict[int, dict[str, int]] = {}
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        per_batch[int(batch_id)] = {
-            r["event_type"]: r["n"]
-            for r in batch_df.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-
+    sink, batches = _collect_batches(
+        lambda b: b.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+    )
     with stream_dirs("stream_dedup") as d:
         for tag in ("c0", "c1"):  # the SAME file, twice
             link_data_files(f"{sf_dir}/events.parquet", d.landing, tag)
@@ -204,20 +197,14 @@ def stream_dedup_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("event_id", "event_type")
             .dropDuplicates(["event_id"])
         )
-        q = (
-            deduped.writeStream.outputMode("append")
-            .foreachBatch(_sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
-    schema = "event_type string, n_unique_events long"
+        run_to_end(deduped.writeStream.outputMode("append").foreachBatch(sink), d.ckpt)
     totals: dict[str, int] = {}
-    for counts in per_batch.values():
-        for et, n in counts.items():
+    for rows in batches.values():
+        for et, n in rows:
             totals[et] = totals.get(et, 0) + int(n)
-    return local_frame(spark, sorted(totals.items()), schema)
+    return local_frame(
+        spark, sorted(totals.items()), "event_type string, n_unique_events long"
+    )
 
 
 # Deterministic on-time/late split: ~10% of events (by a cross-engine
@@ -350,17 +337,13 @@ def stream_late_data_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "span with >=1 on-time row); the watermark oracle is "
             "undefined here"
         )
-    emitted: list = []
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        emitted.extend(
-            batch_df.select(
-                F.unix_micros(F.col("w.start")).alias("hour_us"),
-                "event_type",
-                "n_events",
-            ).collect()
+    sink, batches = _collect_batches(
+        lambda b: b.select(
+            F.unix_micros(F.col("w.start")).alias("hour_us"),
+            "event_type",
+            "n_events",
         )
-
+    )
     on_time = ev.filter(~F.col("late")).select("ts", "event_type")
     late = ev.filter(F.col("late")).select("ts", "event_type")
     with stream_dirs("stream_late") as d:
@@ -372,24 +355,13 @@ def stream_late_data_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
                 .agg(F.count(F.lit(1)).alias("n_events"))
             )
-            q = (
-                agg.writeStream.outputMode("append")
-                .foreachBatch(_sink)
-                .option("checkpointLocation", d.ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            q.stop()
+            run_to_end(agg.writeStream.outputMode("append").foreachBatch(sink), d.ckpt)
 
         # round 1: on-time rows, fresh checkpoint; round 2: late rows,
         # RESTORED watermark/state
         overlap_two_rounds(d, on_time, late, "parquet", _run_round)
-    schema_out = "hour_us long, event_type string, n_events long"
-    rows = sorted(
-        ((r["hour_us"], r["event_type"], r["n_events"]) for r in emitted),
-    )
-    return local_frame(spark, rows, schema_out)
+    rows = sorted(tuple(r) for emitted in batches.values() for r in emitted)
+    return local_frame(spark, rows, "hour_us long, event_type string, n_events long")
 
 
 _KMV_K = 16
@@ -450,13 +422,11 @@ def stream_kmv_event_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_schema = "grp string, kmv_estimate long"
     with stream_dirs("kmv") as d:
         def _run(landing: str) -> None:
-            q = stream_kmv_cardinality(
+            stream_kmv_cardinality(
                 spark, landing, d.store, d.ckpt,
                 group_col="event_type", value_col="user_id",
                 schema="event_type string, user_id long", k=_KMV_K,
             )
-            q.awaitTermination()
-            q.stop()
 
         # round 1 seeds kmv_v0; round 2 MERGES v0 + new
         overlap_two_rounds(d, r1, r2, "json", _run)
@@ -540,13 +510,11 @@ def stream_mg_heavy_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_schema = "key long, est_count long, max_err long"
     with stream_dirs("mg") as d:
         def _run(landing: str) -> None:
-            q = stream_heavy_hitters(
+            stream_heavy_hitters(
                 spark, landing, d.store, d.ckpt,
                 key_col="user_id", schema="user_id long",
                 capacity=_MG_CAP,
             )
-            q.awaitTermination()
-            q.stop()
 
         # MG merge is order-defined: half 0 must be batch 0
         overlap_two_rounds(d, r1, r2, "json", _run)
@@ -600,21 +568,13 @@ def stream_interval_join_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.timestamp_micros(ntz_epoch_us(F.col("ts"))).alias("ts"),
         "event_type",
     )
-    acc: dict[tuple[int, int], tuple[int, int]] = {}
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        lag = F.expr("(unix_micros(error_ts) - unix_micros(click_ts)) div 1000000")
-        for r in (
-            batch_df.groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(lag).cast("bigint").alias("lag"),
-            )
-            .collect()
-        ):
-            # keyed by (batch, user): a retried batch overwrites itself
-            acc[(int(batch_id), r["user_id"])] = (int(r["n"]), int(r["lag"]))
-
+    lag = F.expr("(unix_micros(error_ts) - unix_micros(click_ts)) div 1000000")
+    sink, batches = _collect_batches(
+        lambda b: b.groupBy("user_id").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(lag).cast("bigint").alias("lag"),
+        )
+    )
     with stream_dirs("ij") as d:
         sides = []
         for kind in ("click", "error"):  # one staged file per side
@@ -624,19 +584,13 @@ def stream_interval_join_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         j = stream_interval_join(
             *sides, watermark="10 minutes", window="30 minutes"
         )
-        q = (
-            j.writeStream.outputMode("append")
-            .foreachBatch(_sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
+        run_to_end(j.writeStream.outputMode("append").foreachBatch(sink), d.ckpt)
     totals: dict[int, list[int]] = {}
-    for (_b, uid), (n, lag) in acc.items():
-        t = totals.setdefault(uid, [0, 0])
-        t[0] += n
-        t[1] += lag
+    for rows in batches.values():
+        for uid, n, lag_s in rows:
+            t = totals.setdefault(uid, [0, 0])
+            t[0] += int(n)
+            t[1] += int(lag_s)
     return local_frame(
         spark,
         sorted((u, n, lag) for u, (n, lag) in totals.items()),
@@ -678,13 +632,11 @@ def stream_hll_event_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_schema = "grp string, v_empty long, z_scaled long, hll_estimate double"
     with stream_dirs("hll") as d:
         def _run(landing: str) -> None:
-            q = stream_hll_cardinality(
+            stream_hll_cardinality(
                 spark, landing, d.store, d.ckpt,
                 group_col="event_type", value_col="user_id",
                 schema="event_type string, user_id long",
             )
-            q.awaitTermination()
-            q.stop()
 
         overlap_two_rounds(d, r1, r2, "json", _run)
         try:
@@ -752,12 +704,10 @@ def stream_type_drift_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_schema = "batch_id long, n_rows long, drift_ppm long"
     with stream_dirs("drift") as d:
         def _run(landing: str) -> None:
-            q = stream_type_drift(
+            stream_type_drift(
                 spark, landing, d.store, d.ckpt,
                 key_col="event_type", schema="event_type string",
             )
-            q.awaitTermination()
-            q.stop()
 
         # round 1 seeds the baseline, round 2 raises the alert
         overlap_two_rounds(d, r1, r2, "json", _run)
@@ -916,16 +866,8 @@ def _run_session_rounds(spark: SparkSession, ev, cutoff: int, hi: int,
         def _run(landing: str) -> None:
             stream = spark.readStream.schema(r1.schema).parquet(landing)
             op = sessionize_native if native else sessionize
-            q = (
-                op(stream, watermark="10 minutes")
-                .writeStream.outputMode("append")
-                .foreachBatch(_sink)
-                .option("checkpointLocation", d.ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            q.stop()
+            writer = op(stream, watermark="10 minutes").writeStream
+            run_to_end(writer.outputMode("append").foreachBatch(_sink), d.ckpt)
 
         overlap_two_rounds(d, r1, r2, "parquet", _run)
         try:
@@ -1056,37 +998,24 @@ def stream_transition_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     cols = ["event_id", "ts", "user_id", "event_type"]
     r1 = ev.filter(F.col("t_us") <= cutoff).select(*cols)
     r2 = ev.filter(F.col("t_us") > cutoff).select(*cols) if cutoff < hi else None
-    acc: dict = {}
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        acc[int(batch_id)] = {
-            (r["from_type"], r["to_type"]): r["n"]
-            for r in batch_df.groupBy("from_type", "to_type")
-            .agg(F.sum("n_transitions").cast("bigint").alias("n"))
-            .collect()
-        }
-
+    sink, batches = _collect_batches(
+        lambda b: b.groupBy("from_type", "to_type").agg(
+            F.sum("n_transitions").cast("bigint").alias("n")
+        )
+    )
     with stream_dirs("trans") as d:
         def _run(landing: str) -> None:
-            q = (
-                stream_transition_counts(
-                    spark.readStream.schema(r1.schema).parquet(landing),
-                    watermark="10 minutes",
-                )
-                .writeStream.outputMode("append")
-                .foreachBatch(_sink)
-                .option("checkpointLocation", d.ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            q.stop()
+            counts = stream_transition_counts(
+                spark.readStream.schema(r1.schema).parquet(landing),
+                watermark="10 minutes",
+            ).writeStream.outputMode("append")
+            run_to_end(counts.foreachBatch(sink), d.ckpt)
 
         overlap_two_rounds(d, r1, r2, "parquet", _run)
     totals: dict = {}
-    for counts in acc.values():
-        for k, n in counts.items():
-            totals[k] = totals.get(k, 0) + int(n)
+    for rows in batches.values():
+        for f, t, n in rows:
+            totals[(f, t)] = totals.get((f, t), 0) + int(n)
     return local_frame(
         spark, sorted((f, t, n) for (f, t), n in totals.items()), out_schema
     )
@@ -1143,14 +1072,12 @@ def stream_quantile_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     with stream_dirs("qs") as d:
         def _run(landing: str) -> None:
-            q = stream_bottomk_sample(
+            stream_bottomk_sample(
                 spark, landing, d.store, d.ckpt,
                 group_col="event_type", key_col="event_id", value_col="value",
                 schema="event_type string, event_id long, value double",
                 k=_QS_K,
             )
-            q.awaitTermination()
-            q.stop()
 
         # round 1 seeds qs_v0; round 2 MERGES v0 + new
         overlap_two_rounds(d, r1, r2, "json", _run)
@@ -1228,13 +1155,11 @@ def stream_ivf_ingest_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     r1, r2 = hash_halves(emb, "vec_id")
     with stream_dirs("ivf") as d:
         def _run(landing: str) -> None:
-            q = stream_ivf_ingest(
+            stream_ivf_ingest(
                 spark, landing, d.store, d.ckpt,
                 id_col="vec_id", vec_col="embedding",
                 centroids=seeds, schema="vec_id long, embedding array<double>",
             )
-            q.awaitTermination()
-            q.stop()
 
         # round 1 shards ivf_b0; round 2 appends ivf_b1
         overlap_two_rounds(d, r1, r2, "json", _run)
@@ -1300,9 +1225,7 @@ def stream_expectations_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_schema = "check_name string, metric long, passed int"
     with stream_dirs("qx") as d:
         def _run(landing: str) -> None:
-            q = stream_expectations(spark, landing, d.store, d.ckpt, suite, schema)
-            q.awaitTermination()
-            q.stop()
+            stream_expectations(spark, landing, d.store, d.ckpt, suite, schema)
 
         # round 1 seeds qx_v0; round 2 MERGES v0 + new
         overlap_two_rounds(d, r1, r2, "json", _run)
@@ -1335,23 +1258,24 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs). A file-source stream of events inner-joins the STATIC
     customer dimension on user_id = c_custkey, then aggregates
     (segment, event_type) counts + exact floor-cents value sums in
-    COMPLETE mode to a memory sink, trigger=availableNow.
+    COMPLETE mode to a `foreachBatch` sink, trigger=availableNow.
 
     Why oracle-exact: stream-static inner joins are STATELESS — each
     micro-batch joins against the same static snapshot, so the joined
     row multiset is independent of the micro-batch split, and complete
-    mode re-emits full aggregation state; the result equals the batch
-    join + GROUP BY the oracle computes.
+    mode re-emits full aggregation state, so the last micro-batch's
+    rows equal the batch join + GROUP BY the oracle computes.
 
     Scale notes: the static side is projected to 2 columns before the
     join and left UNHINTED — customer is sf-proportional, so a hard
     broadcast() would OOM at large sf (the design rule in
     plans/queries.py); Spark plans a per-batch broadcast only while
     the dim fits the auto threshold, else a shuffled join. State is
-    only the (segments × types)-bounded aggregation. Mirrors the
+    only the (segments × types)-bounded aggregation, whose rows are
+    sorted on the driver with the hourly entry's key. Mirrors the
     reference's crosswalk enrichment joins (src/database.py drift
     report) in streaming form."""
-    name = _mem_name("stream_enrich")
+    sink, batches = _collect_batches(lambda b: b)
     dim = (
         T(spark, sf_dir, "customer")
         .select(F.col("c_custkey"), F.col("c_mktsegment").alias("segment"))
@@ -1367,24 +1291,8 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(F.col("value") * 100).cast("long")
             ).alias("sum_cents"),
         )
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
-    schema = "segment string, event_type string, n_events long, sum_cents long"
-    if not spark.catalog.tableExists(name):  # zero micro-batches ran
-        return local_frame(spark, [], schema)
-    try:
-        rows = (
-            spark.table(name)
-            .orderBy("segment", "event_type")
-            .collect()
-        )
-    finally:
-        spark.catalog.dropTempView(name)
-    return local_frame(spark, rows, schema)
+        run_to_end(agg.writeStream.outputMode("complete").foreachBatch(sink), d.ckpt)
+    rows = sorted(_last_batch(batches), key=_spark_order)
+    return local_frame(
+        spark, rows, "segment string, event_type string, n_events long, sum_cents long"
+    )

@@ -16,21 +16,21 @@ This module is the Spark-native upgrade path for both:
   monthly MVs (A1-A5): at 100 TB you don't recompute 47.5M-row months,
   you update only the open windows.
 
-Every stream here starts through `_start`: checkpointed, with
-`Trigger.AvailableNow`, so one call processes what has landed and
-stops. The mergeable sketch stores (KMV, Misra-Gries, drift baseline,
-HLL registers, bottom-k sample, expectations metrics) share one
-crash-safe version protocol, `_commit_version`: micro-batch `n` writes
-the directory `<prefix><n>`, built by merging the newest COMPLETE
-version (one carrying Spark's `_SUCCESS` marker) with an id below `n`,
-then deletes the versions older than that merge source. A crash
-mid-write leaves a version without `_SUCCESS`, which no merge and no
-reader ever reads; a replayed batch rebuilds its own version from the
-same older one; the merge source is kept until the next batch
-commits. This is sound because the stores are mergeable summaries
-(Agarwal et al., "Mergeable Summaries", PODS 2012): merging a batch
-into the summary of everything before it equals the summary of the
-union.
+Every stream here runs through `run_to_end`: checkpointed, with
+`Trigger.AvailableNow`, waited on and stopped, so one call processes
+what has landed and returns the finished query. The mergeable sketch
+stores (KMV, Misra-Gries, drift baseline, HLL registers, bottom-k
+sample, expectations metrics) share one crash-safe version protocol,
+`_commit_version`: micro-batch `n` writes the directory `<prefix><n>`,
+built by merging the newest COMPLETE version (one carrying Spark's
+`_SUCCESS` marker) with an id below `n`, then deletes the versions
+older than that merge source. A crash mid-write leaves a version
+without `_SUCCESS`, which no merge and no reader ever reads; a
+replayed batch rebuilds its own version from the same older one; the
+merge source is kept until the next batch commits. This is sound
+because the stores are mergeable summaries (Agarwal et al., "Mergeable
+Summaries", PODS 2012): merging a batch into the summary of everything
+before it equals the summary of the union.
 """
 
 from __future__ import annotations
@@ -43,7 +43,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from power_generation_etl_spark.schemas import SOURCES
 from power_generation_etl_spark.session import local_frame
 
 
@@ -62,15 +61,22 @@ def _interval_us(spec: str) -> int:
     return int(n) * _INTERVAL_UNITS_US[unit.lower()]
 
 
-def _start(writer, checkpoint_dir: str) -> StreamingQuery:
-    """Start a configured `DataStreamWriter` as a catch-up run:
+def run_to_end(writer, checkpoint_dir: str) -> StreamingQuery:
+    """Run a configured `DataStreamWriter` as a catch-up run to its end:
     checkpointed at `checkpoint_dir`, `Trigger.AvailableNow` (process
-    everything that has landed, then stop)."""
-    return (
+    everything that has landed), waited on so that the query's own
+    failure is raised here, and stopped also when it fails. Returns the
+    finished query."""
+    q = (
         writer.option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
+    return q
 
 
 def stream_load(
@@ -104,7 +110,7 @@ def stream_load(
         if paths:
             engine.load_jsonl(source, paths)
 
-    return _start(stream.writeStream.foreachBatch(process), checkpoint_dir)
+    return run_to_end(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def streaming_monthly_rollup(
@@ -181,7 +187,7 @@ def stream_neardup_intake(
             bucket_cap=bucket_cap,
         )
 
-    return _start(stream.writeStream.foreachBatch(process), checkpoint_dir)
+    return run_to_end(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def neardup_intake_batch(
@@ -435,7 +441,7 @@ def stream_document_filter(
         .option("path", out_dir)
         .outputMode("append")
     )
-    return _start(writer, checkpoint_dir)
+    return run_to_end(writer, checkpoint_dir)
 
 
 def stream_interval_join(
@@ -533,7 +539,7 @@ def stream_cdc_apply(
                 store.create(table, batch_df.schema)
             store.merge_upsert(table, batch_df, keys, order_col)
 
-    return _start(stream.writeStream.foreachBatch(apply_batch), checkpoint_dir)
+    return run_to_end(stream.writeStream.foreachBatch(apply_batch), checkpoint_dir)
 
 
 def _store_versions(store_dir: str, prefix: str) -> list[int]:
@@ -639,7 +645,7 @@ def stream_kmv_cardinality(
 
         _commit_version(spark, store_dir, "kmv_v", batch_id, build)
 
-    return _start(stream.writeStream.foreachBatch(process), checkpoint_dir)
+    return run_to_end(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def kmv_estimate_from_store(
@@ -768,7 +774,7 @@ def stream_heavy_hitters(
         _commit_version(spark, store_dir, "mg_v", batch_id, build)
 
     stream = spark.readStream.schema(schema).json(landing_dir)
-    return _start(stream.writeStream.foreachBatch(process), checkpoint_dir)
+    return run_to_end(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def heavy_hitters_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -874,7 +880,7 @@ def stream_type_drift(
         _commit_version(spark, store_dir, "drift_v", batch_id, build)
 
     stream = spark.readStream.schema(schema).json(landing_dir)
-    return _start(stream.writeStream.foreachBatch(process), checkpoint_dir)
+    return run_to_end(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def type_drift_alerts(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -932,7 +938,7 @@ def stream_hll_cardinality(
 
         _commit_version(spark, store_dir, "hll_v", batch_id, build)
 
-    return _start(stream.writeStream.foreachBatch(process), checkpoint_dir)
+    return run_to_end(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def hll_estimate_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -992,7 +998,7 @@ def stream_bottomk_sample(
 
         _commit_version(spark, store_dir, "qs_v", batch_id, build)
 
-    return _start(stream.writeStream.foreachBatch(process), checkpoint_dir)
+    return run_to_end(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def quantiles_from_store(
@@ -1056,7 +1062,7 @@ def stream_ivf_ingest(
             os.path.join(store_dir, f"ivf_b{batch_id}")
         )
 
-    return _start(stream.writeStream.foreachBatch(process), checkpoint_dir)
+    return run_to_end(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def ivf_cells_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -1133,7 +1139,7 @@ def stream_text_index_ingest(
             os.path.join(store_dir, f"ix_b{batch_id}")
         )
 
-    return _start(stream.writeStream.foreachBatch(process), checkpoint_dir)
+    return run_to_end(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def term_stats_from_store(
@@ -1216,7 +1222,7 @@ def stream_expectations(
 
         _commit_version(spark, store_dir, "qx_v", batch_id, build)
 
-    return _start(stream.writeStream.foreachBatch(process), checkpoint_dir)
+    return run_to_end(stream.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def expectations_from_store(spark: SparkSession, store_dir: str, suite) -> DataFrame:

@@ -1,12 +1,14 @@
 """The shared machinery of ``streaming/ingest.py``: the crash-safe
 version protocol of the sketch stores (``_commit_version``), the one
-stream start (``_start``), the text-index reader's pinned schema, and
-the driver-side order of ``stream_hourly_event_counts``."""
+way to run a stream (``run_to_end``), the text-index reader's pinned
+schema, and the driver-side order of the collecting catalog streams
+(``stream_hourly_event_counts``, ``stream_static_enrich``)."""
 
 from __future__ import annotations
 
 import ast
 import datetime
+import glob
 import os
 import uuid
 
@@ -14,6 +16,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+import power_generation_etl_spark
+from power_generation_etl_spark.plans.queries import stream_dirs
 from power_generation_etl_spark.session import local_frame
 from power_generation_etl_spark.streaming import ingest
 from power_generation_etl_spark.streaming.ingest import (
@@ -21,9 +25,11 @@ from power_generation_etl_spark.streaming.ingest import (
     _commit_version,
     _newest_version,
     _store_versions,
+    run_to_end,
 )
 
 INGEST = ingest.__file__
+PACKAGE = os.path.dirname(power_generation_etl_spark.__file__)
 
 
 def _rows(df) -> set[int]:
@@ -127,14 +133,54 @@ def _calls_outside(tree, attr, owner, pred=lambda call: True):
 
 
 def test_one_version_commit_and_one_stream_start():
-    """Store versions are deleted only by ``_commit_version``; streams
-    are triggered and started only by ``_start``."""
+    """Store versions are deleted only by ``_commit_version``; in every
+    module of the package, streams are triggered, started and waited on
+    only by ``run_to_end``, and nothing sinks to a memory table or
+    registers, probes or drops one."""
     with open(INGEST) as f:
         tree = ast.parse(f.read(), INGEST)
     assert _calls_outside(tree, "rmtree", "_commit_version") == []
-    assert _calls_outside(tree, "trigger", "_start") == []
     no_args = lambda call: not call.args and not call.keywords  # noqa: E731
-    assert _calls_outside(tree, "start", "_start", no_args) == []
+    memory = lambda call: any(  # noqa: E731
+        isinstance(a, ast.Constant) and a.value == "memory" for a in call.args
+    )
+    anything = lambda call: True  # noqa: E731
+    in_run_to_end = [("trigger", anything), ("start", no_args),
+                     ("awaitTermination", anything)]
+    nowhere = [("format", memory), ("dropTempView", anything),
+               ("tableExists", anything)]
+    found = []
+    for path in sorted(glob.glob(os.path.join(PACKAGE, "**", "*.py"), recursive=True)):
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        owner = "run_to_end" if path == INGEST else None
+        for attr, pred in in_run_to_end:
+            found += [(path, attr, n) for n in _calls_outside(tree, attr, owner, pred)]
+        for attr, pred in nowhere:
+            found += [(path, attr, n) for n in _calls_outside(tree, attr, None, pred)]
+    assert found == []
+
+
+def test_run_to_end_raises_the_query_failure_and_stops(spark):
+    """A run whose ``foreachBatch`` raises re-raises the query's failure,
+    leaves no active stream, and, checkpointed inside ``stream_dirs``,
+    no ``temporary-*`` checkpoint dir in the JVM's temp dir."""
+    from pyspark.errors import StreamingQueryException
+
+    tmp = spark.sparkContext._jvm.System.getProperty("java.io.tmpdir")
+    before = set(glob.glob(os.path.join(tmp, "temporary-*")))
+
+    def boom(batch_df, batch_id):
+        raise RuntimeError("sink failed")
+
+    with stream_dirs("run_to_end") as d:
+        with open(os.path.join(d.landing, "a.txt"), "w") as f:
+            f.write("x\n")
+        writer = spark.readStream.text(d.landing).writeStream.foreachBatch(boom)
+        with pytest.raises(StreamingQueryException, match="sink failed"):
+            run_to_end(writer, d.ckpt)
+    assert spark.streams.active == []
+    assert set(glob.glob(os.path.join(tmp, "temporary-*"))) <= before
 
 
 def test_text_index_writer_schema_is_the_pinned_schema(spark, tmp_path):
@@ -171,14 +217,10 @@ def test_text_index_writer_schema_is_the_pinned_schema(spark, tmp_path):
     assert not [n for names in jobs for n in names if n.startswith("parquet ")]
 
 
-def test_hourly_event_counts_rows_in_spark_sort_order(spark, tmp_path):
-    """``stream_hourly_event_counts`` sorts on the driver; its rows come
-    back in the order Spark's ascending, nulls-first sort gives, with a
-    null and non-ASCII event types in the data."""
-    from power_generation_etl_spark.plans.streaming_queries import (
-        stream_hourly_event_counts,
-    )
-
+def _tiny_sf(tmp_path) -> tuple[str, int]:
+    """An sf dir with a tiny events table (null and non-ASCII event
+    types) and a customer table (null and non-ASCII segments); returns
+    (dir, number of events)."""
     sf = tmp_path / "sf"
     sf.mkdir()
     t0 = datetime.datetime(2024, 1, 1, 5, 10)
@@ -196,10 +238,57 @@ def test_hourly_event_counts_rows_in_spark_sort_order(spark, tmp_path):
         "props": pa.array(["{}"] * n, pa.string()),
     })
     pq.write_table(table, str(sf / "events.parquet"))
-    got = stream_hourly_event_counts(spark, str(sf)).collect()
+    customer = pa.table({
+        "c_custkey": pa.array(range(5), pa.int64()),
+        "c_mktsegment": pa.array(
+            ["BUILDING", None, "Österreich", "AUTOMOBILE", "émoi"], pa.string()
+        ),
+    })
+    pq.write_table(customer, str(sf / "customer.parquet"))
+    return str(sf), n
+
+
+def test_hourly_event_counts_rows_in_spark_sort_order(spark, tmp_path):
+    """``stream_hourly_event_counts`` and ``stream_static_enrich`` sort
+    on the driver; their rows come back in the order Spark's ascending,
+    nulls-first sort gives, with nulls and non-ASCII strings in both
+    sort columns."""
+    from power_generation_etl_spark.plans.streaming_queries import (
+        stream_hourly_event_counts,
+        stream_static_enrich,
+    )
+
+    sf, n = _tiny_sf(tmp_path)
+    got = stream_hourly_event_counts(spark, sf).collect()
     assert any(r["event_type"] is None for r in got)
     want = local_frame(
         spark, got, "hour_us long, event_type string, n_events long"
     ).orderBy("hour_us", "event_type").collect()
     assert got == want
     assert sum(r["n_events"] for r in got) == n
+
+    got = stream_static_enrich(spark, sf).collect()
+    assert any(r["segment"] is None for r in got)
+    assert any(r["event_type"] is None for r in got)
+    want = local_frame(
+        spark, got,
+        "segment string, event_type string, n_events long, sum_cents long",
+    ).orderBy("segment", "event_type").collect()
+    assert got == want
+    assert sum(r["n_events"] for r in got) == n
+
+
+def test_collecting_streams_leave_no_session_state(spark, tmp_path):
+    """The two COMPLETE-mode entries register no table or view in the
+    session and leave no stream running."""
+    from power_generation_etl_spark.plans.streaming_queries import (
+        stream_hourly_event_counts,
+        stream_static_enrich,
+    )
+
+    sf, _ = _tiny_sf(tmp_path)
+    tables = sorted(t.name for t in spark.catalog.listTables())
+    for entry in (stream_hourly_event_counts, stream_static_enrich):
+        assert entry(spark, sf).count() > 0
+        assert sorted(t.name for t in spark.catalog.listTables()) == tables
+        assert spark.streams.active == []

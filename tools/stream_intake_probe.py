@@ -61,13 +61,11 @@ def main() -> None:
 
             def run(landing: str) -> None:
                 lap(next(waits))  # staging (+ linking) before this round
-                q = stream_neardup_intake(
+                stream_neardup_intake(
                     spark, landing, out, d.ckpt, os.path.join(d.store, "sig"),
                     threshold=0.5, n=3, k=64, n_bands=16, seed=42,
                     bucket_cap=None,
                 )
-                q.awaitTermination()
-                q.stop()
                 lap(f"round{len(marks) // 2 + 1}_stream")
 
             overlap_two_rounds(d, r1, r2, "json", run)
