@@ -65,7 +65,7 @@ from pyspark.sql import DataFrame
 
 from power_generation_etl_spark import lineage
 
-_DEFAULT_ENV = "SPARK_ETL_PRODUCT_CACHE"
+_ENV = "SPARK_ETL_PRODUCT_CACHE"
 
 
 def _session_token(df: DataFrame) -> tuple | None:
@@ -86,20 +86,20 @@ def _session_token(df: DataFrame) -> tuple | None:
 class PlanMemo:
     """LRU memo of products derived from a source DataFrame plan."""
 
-    def __init__(self, name: str, cap: int = 4, env: str = _DEFAULT_ENV):
+    def __init__(self, name: str, cap: int = 4):
         self.name = name
         self.cap = cap
-        self.env = env
         # (key_hash, src_df, product, session_token, rdd_ids)
         self._slots: list[tuple[tuple, DataFrame, Any, tuple | None, set[int]]] = []
 
     def enabled(self) -> bool:
-        """``$env`` is ``1`` (the default when unset) or ``0``; any other
-        value raises rather than silently leaving the memo on."""
-        env = os.environ.get(self.env, "1")
+        """``SPARK_ETL_PRODUCT_CACHE`` is ``1`` (the default when unset)
+        or ``0``; any other value raises rather than silently leaving the
+        memo on."""
+        env = os.environ.get(_ENV, "1")
         if env not in ("0", "1"):
             raise ValueError(
-                f"{self.env}={env!r} is not 0 or 1; set {self.env}=0 to disable "
+                f"{_ENV}={env!r} is not 0 or 1; set {_ENV}=0 to disable "
                 f"the {self.name} memo, 1 (or unset) to enable it"
             )
         return env == "1"

@@ -94,20 +94,13 @@ def _guard_volume_cap(
     if cap is None:
         return None
     total = sum(v for _, v in rows)
-    empty_note = ""
-    if knob == "doc_freq_cap" and cap == 1:
-        empty_note = (
-            " NOTE: cap=1 removes every shingle shared by >=2 documents "
-            "from the index, so the result will be EMPTY — treat this as "
-            "'the guard degenerated the query', not 'no duplicates'."
-        )
-    elif knob == "bucket_cap" and cap == 1:
-        empty_note = (
-            " NOTE: cap=1 excludes every band bucket holding >=2 "
-            "documents, so zero candidates survive and the result will "
-            "be EMPTY — treat this as 'the guard degenerated the "
-            "query', not 'no duplicates'."
-        )
+    empty_note = (
+        f" NOTE: {knob}=1 keeps no key shared by >=2 documents, so zero "
+        "candidates survive and the result will be EMPTY — treat this as "
+        "'the guard degenerated the query', not 'no duplicates'."
+        if cap == 1
+        else ""
+    )
     warnings.warn(
         f"{op}: exact candidate volume {total} exceeds "
         f"max_candidates={bound}; auto-engaging {knob}={cap} "
@@ -117,6 +110,53 @@ def _guard_volume_cap(
         stacklevel=3,
     )
     return cap
+
+
+def cap_buckets(
+    tagged: DataFrame,
+    keys: list[str],
+    cap: int | None,
+    max_candidates: int | None,
+    memo_key: tuple,
+    key_src: DataFrame,
+    op: str,
+    recall: str,
+) -> DataFrame:
+    """The candidate-volume guard of the bucketed near-dup joins: the
+    rows of `tagged` whose `keys` group (bucket) holds at most `cap`
+    rows. A bucket of p rows feeds p·(p−1) rows into the candidate
+    self-join on `keys`, so hot buckets are where the join goes
+    quadratic.
+
+    An explicit `cap` filters at once. Otherwise the bound resolves
+    through `_resolve_max_candidates`; with no bound `tagged` comes back
+    untouched (a fully lazy plan). With one, Σ p·(p−1) per bucket size
+    is estimated (one aggregation job, memoized per (`memo_key`,
+    `key_src` plan)) and `_guard_volume_cap` picks the largest cap whose
+    smallest-first volume fits, warning with the `recall` contract. On
+    the full shingle index (`keys == ["s"]`) a bucket is a posting
+    list, so its cap is a document-frequency cap.
+
+    Hot buckets leave through a left-anti join with no broadcast hint:
+    the hot key set is the small side, which AQE broadcasts when it
+    fits. The filter compares keys as the candidate join does: a null
+    key column equals nothing, so its rows pass and find no partner; a
+    struct key with a null field equals its twin, so its bucket is
+    sized and capped like any other."""
+    sizes = tagged.groupBy(*keys).agg(F.count(F.lit(1)).alias("_p"))
+    if cap is None:
+        bound = _resolve_max_candidates(max_candidates)
+        if bound is None:
+            return tagged
+        vol_df = sizes.groupBy(F.col("_p").alias("df")).agg(
+            F.sum(F.col("_p") * (F.col("_p") - 1)).alias("vol")
+        )
+        knob = "doc_freq_cap" if keys == ["s"] else "bucket_cap"
+        cap = _guard_volume_cap(vol_df, memo_key, key_src, bound, op, knob, recall)
+        if cap is None:
+            return tagged
+    hot = sizes.where(F.col("_p") > cap).select(*keys)
+    return tagged.join(hot, keys, "left_anti")
 
 
 def _choose_df_cap(per_df: list[tuple[int, int]], bound: int) -> int | None:
@@ -463,42 +503,18 @@ def exact_jaccard_pairs(
         raise ValueError("metric must be 'jaccard' or 'containment'")
     sh = shingle_table(df, id_col, text_col, n)
     counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    posting = sh
-    effective_cap = doc_freq_cap
-    if effective_cap is None:
-        bound = _resolve_max_candidates(max_candidates)
-        if bound is not None:
-            vol_df = (
-                sh.groupBy("s")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .groupBy("df")
-                .agg(
-                    (
-                        F.count(F.lit(1)) * F.col("df") * (F.col("df") - 1)
-                    ).alias("vol")
-                )
-            )
-            effective_cap = _guard_volume_cap(
-                vol_df,
-                ("full", n),
-                df.select(
-                    F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t")
-                ),
-                bound,
-                "exact_jaccard_pairs",
-                "doc_freq_cap",
-                "stop-shingle semantics — hot shingles leave the index, so "
-                "both recall and reported similarities follow the "
-                "doc_freq_cap contract",
-            )
-    if effective_cap is not None:
-        hot = (
-            posting.groupBy("s")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > effective_cap)
-            .select("s")
-        )
-        posting = posting.join(F.broadcast(hot), "s", "left_anti")
+    posting = cap_buckets(
+        sh,
+        ["s"],
+        doc_freq_cap,
+        max_candidates,
+        ("full", n),
+        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t")),
+        "exact_jaccard_pairs",
+        "stop-shingle semantics — hot shingles leave the index, so "
+        "both recall and reported similarities follow the "
+        "doc_freq_cap contract",
+    )
     npar = _par(df)
     a = posting.select(F.col("doc_id").alias("id_a"), "s").repartition(npar, "s")
     b = posting.select(F.col("doc_id").alias("id_b"), "s").repartition(npar, "s")
@@ -614,43 +630,18 @@ def minhash_lsh_pairs(
         lambda: _cut(minhash_signature_table(sh, k, seed)),
     )
     npar = _par(df)
-    tagged = band_key_table(sig, k, n_bands)
-    effective_cap = bucket_cap
-    if effective_cap is None:
-        bound = _resolve_max_candidates(max_candidates)
-        if bound is not None:
-            vol_df = (
-                tagged.groupBy("bk")
-                .agg(F.count(F.lit(1)).alias("p"))
-                .groupBy("p")
-                .agg(
-                    (F.count(F.lit(1)) * F.col("p") * (F.col("p") - 1)).alias(
-                        "vol"
-                    )
-                )
-                .select(F.col("p").alias("df"), "vol")
-            )
-            effective_cap = _guard_volume_cap(
-                vol_df,
-                ("lsh", n, k, n_bands, seed),
-                df.select(
-                    F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t")
-                ),
-                bound,
-                "minhash_lsh_pairs",
-                "bucket_cap",
-                "band buckets larger than the cap leave candidate "
-                "generation — a pair is missed only if EVERY band it "
-                "collides on exceeds the cap; verification stays exact",
-            )
-    if effective_cap is not None:
-        small = (
-            tagged.groupBy("bk")
-            .agg(F.count(F.lit(1)).alias("_p"))
-            .where(F.col("_p") <= effective_cap)
-            .select("bk")
-        )
-        tagged = tagged.join(small, "bk")
+    tagged = cap_buckets(
+        band_key_table(sig, k, n_bands),
+        ["bk"],
+        bucket_cap,
+        max_candidates,
+        ("lsh", n, k, n_bands, seed),
+        src,
+        "minhash_lsh_pairs",
+        "band buckets larger than the cap leave candidate "
+        "generation — a pair is missed only if EVERY band it "
+        "collides on exceeds the cap; verification stays exact",
+    )
     a = tagged.select(F.col("doc_id").alias("id_a"), "bk").repartition(npar, "bk")
     b = tagged.select(
         F.col("doc_id").alias("id_b"), F.col("bk").alias("bk2")
@@ -737,43 +728,18 @@ def simhash_pairs(
             for i in range(4)
         ]
     )
-    tagged = sims.select("doc_id", "sh64", F.explode(chunks).alias("bk"))
-    effective_cap = bucket_cap
-    if effective_cap is None:
-        bound = _resolve_max_candidates(max_candidates)
-        if bound is not None:
-            vol_df = (
-                tagged.groupBy("bk")
-                .agg(F.count(F.lit(1)).alias("p"))
-                .groupBy("p")
-                .agg(
-                    (F.count(F.lit(1)) * F.col("p") * (F.col("p") - 1)).alias(
-                        "vol"
-                    )
-                )
-                .select(F.col("p").alias("df"), "vol")
-            )
-            effective_cap = _guard_volume_cap(
-                vol_df,
-                ("simhash", n),
-                df.select(
-                    F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t")
-                ),
-                bound,
-                "simhash_pairs",
-                "bucket_cap",
-                "chunk buckets larger than the cap leave candidate "
-                "generation — a pair is missed only if EVERY shared "
-                "chunk bucket exceeds the cap; verification stays exact",
-            )
-    if effective_cap is not None:
-        small = (
-            tagged.groupBy("bk")
-            .agg(F.count(F.lit(1)).alias("_p"))
-            .where(F.col("_p") <= effective_cap)
-            .select("bk")
-        )
-        tagged = tagged.join(small, "bk")
+    tagged = cap_buckets(
+        sims.select("doc_id", "sh64", F.explode(chunks).alias("bk")),
+        ["bk"],
+        bucket_cap,
+        max_candidates,
+        ("simhash", n),
+        src,
+        "simhash_pairs",
+        "chunk buckets larger than the cap leave candidate "
+        "generation — a pair is missed only if EVERY shared "
+        "chunk bucket exceeds the cap; verification stays exact",
+    )
     a = tagged.select(F.col("doc_id").alias("id_a"), F.col("sh64").alias("ha"), "bk")
     b = tagged.select(
         F.col("doc_id").alias("id_b"), F.col("sh64").alias("hb"), F.col("bk").alias("bk2")

@@ -50,6 +50,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .minhash import cap_buckets
+
 try:  # optional codec — absent in this container, used when deployed with it
     from PIL import Image as _PILImage
 except ImportError:  # pragma: no cover - exercised implicitly
@@ -1273,46 +1275,19 @@ def dhash_neardup_pairs(
             )
         ).alias("c"),
     ).select("id", "h", F.col("c.band").alias("band"), F.col("c.chunk").alias("chunk"))
-    from power_generation_etl_spark.operators.minhash import (
-        _guard_volume_cap,
-        _resolve_max_candidates,
+    chunks = cap_buckets(
+        chunks,
+        ["band", "chunk"],
+        bucket_cap,
+        max_candidates,
+        ("dhash", max_hamming, bands, hash_col),
+        sig,
+        "dhash_neardup_pairs",
+        "chunk buckets larger than the cap leave candidate "
+        "generation — the pigeonhole recall guarantee is relaxed "
+        "only for pairs whose EVERY shared chunk bucket exceeds "
+        "the cap; verification stays exact",
     )
-
-    effective_cap = bucket_cap
-    if effective_cap is None:
-        bound = _resolve_max_candidates(max_candidates)
-        if bound is not None:
-            vol_df = (
-                chunks.groupBy("band", "chunk")
-                .agg(F.count(F.lit(1)).alias("p"))
-                .groupBy("p")
-                .agg(
-                    (F.count(F.lit(1)) * F.col("p") * (F.col("p") - 1)).alias(
-                        "vol"
-                    )
-                )
-                .select(F.col("p").alias("df"), "vol")
-            )
-            effective_cap = _guard_volume_cap(
-                vol_df,
-                ("dhash", max_hamming, bands, hash_col),
-                sig,
-                bound,
-                "dhash_neardup_pairs",
-                "bucket_cap",
-                "chunk buckets larger than the cap leave candidate "
-                "generation — the pigeonhole recall guarantee is relaxed "
-                "only for pairs whose EVERY shared chunk bucket exceeds "
-                "the cap; verification stays exact",
-            )
-    if effective_cap is not None:
-        small = (
-            chunks.groupBy("band", "chunk")
-            .agg(F.count(F.lit(1)).alias("_p"))
-            .where(F.col("_p") <= effective_cap)
-            .select("band", "chunk")
-        )
-        chunks = chunks.join(small, ["band", "chunk"])
     left = chunks.select(
         F.col("id").alias("id_a"), F.col("h").alias("h_a"), "band", "chunk"
     )

@@ -28,6 +28,7 @@ from pyspark.sql.types import DoubleType, StructField, StructType
 from ..lineage import cut as _cut
 from ..memo import PlanMemo
 from ..session import local_frame
+from .minhash import cap_buckets
 
 
 def as_double_array(col: Column) -> Column:
@@ -413,54 +414,26 @@ def lsh_bucketed_neardup(
     # cost). ids+keys only — vectors join back per DISTINCT pair below,
     # the r11 ids-only rule.
     src = df.select(F.col(id_col).alias("id"), v.alias("_v"))
-    tagged = _VECLSH_MEMO.get_or_build(
-        (n_planes, n_bands, seed, npar),
-        src,
-        lambda: _cut(
-            df.select(
-                F.col(id_col).alias("id"), F.explode(bands).alias("bk")
-            ).repartition(npar, "bk")
+    tagged = cap_buckets(
+        _VECLSH_MEMO.get_or_build(
+            (n_planes, n_bands, seed, npar),
+            src,
+            lambda: _cut(
+                df.select(
+                    F.col(id_col).alias("id"), F.explode(bands).alias("bk")
+                ).repartition(npar, "bk")
+            ),
         ),
+        ["bk"],
+        bucket_cap,
+        max_candidates,
+        ("cos_lsh", n_planes, n_bands, seed),
+        df.select(F.col(id_col).alias("doc_id"), v.alias("_t")),
+        "lsh_bucketed_neardup",
+        "band buckets larger than the cap leave candidate "
+        "generation — a pair is missed only if EVERY band it "
+        "collides on exceeds the cap; verification stays exact",
     )
-    effective_cap = bucket_cap
-    if effective_cap is None:
-        from power_generation_etl_spark.operators.minhash import (
-            _guard_volume_cap,
-            _resolve_max_candidates,
-        )
-
-        bound = _resolve_max_candidates(max_candidates)
-        if bound is not None:
-            vol_df = (
-                tagged.groupBy("bk")
-                .agg(F.count(F.lit(1)).alias("p"))
-                .groupBy("p")
-                .agg(
-                    (F.count(F.lit(1)) * F.col("p") * (F.col("p") - 1)).alias(
-                        "vol"
-                    )
-                )
-                .select(F.col("p").alias("df"), "vol")
-            )
-            effective_cap = _guard_volume_cap(
-                vol_df,
-                ("cos_lsh", n_planes, n_bands, seed),
-                df.select(F.col(id_col).alias("doc_id"), v.alias("_t")),
-                bound,
-                "lsh_bucketed_neardup",
-                "bucket_cap",
-                "band buckets larger than the cap leave candidate "
-                "generation — a pair is missed only if EVERY band it "
-                "collides on exceeds the cap; verification stays exact",
-            )
-    if effective_cap is not None:
-        small = (
-            tagged.groupBy("bk")
-            .agg(F.count(F.lit(1)).alias("_p"))
-            .where(F.col("_p") <= effective_cap)
-            .select("bk")
-        )
-        tagged = tagged.join(F.broadcast(small), "bk")
     # Candidates as IDS ONLY (the minhash-proven shape): carrying the
     # 64-double vectors through the bucket join + pair dedup shuffles
     # ~1 KB per candidate where 16 bytes suffice — at the guard's 5e7

@@ -37,7 +37,7 @@ session typically runs both on the same corpus. `_products` memoizes
 reads of the same parquet path compare equal; different paths or
 different literal data never do) — so the second operator pays zero
 build cost. LRU-capped at 2 corpora; disable with
-``SPARK_ETL_SUFFIX_CACHE=0``.
+``SPARK_ETL_PRODUCT_CACHE=0``, the switch of every product memo.
 
 LCP (for `longest_repeated_substrings`) never materializes suffixes:
 adjacent-pair LCP is exact from the INIT-token window arrays for
@@ -267,9 +267,9 @@ def _rank_levels(
 # `longest_repeated_substrings` in one session: the build (tokenize +
 # O(log maxlen) doubling rounds + the global-rank count pass) is the
 # dominant cost of both operators. Same PlanMemo machinery as the
-# shingle-table and k-means memos, under the suffix family's own env
-# switch (SPARK_ETL_SUFFIX_CACHE). LRU-2: two corpora in flight.
-_PRODUCTS_MEMO = PlanMemo("suffix_products", cap=2, env="SPARK_ETL_SUFFIX_CACHE")
+# shingle-table and k-means memos, under the same switch
+# (SPARK_ETL_PRODUCT_CACHE). LRU-2: two corpora in flight.
+_PRODUCTS_MEMO = PlanMemo("suffix_products", cap=2)
 
 
 def _products(

@@ -1498,17 +1498,16 @@ def doc_metrics_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def customer_max_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = T(spark, sf_dir, "orders")
-    o.createOrReplaceTempView("_orders_cmo")
     return spark.sql(
         """
         SELECT o_custkey, o_orderkey, o_totalprice
-        FROM _orders_cmo o
+        FROM {orders} o
         WHERE o_totalprice = (SELECT max(o2.o_totalprice)
-                              FROM _orders_cmo o2
+                              FROM {orders} o2
                               WHERE o2.o_custkey = o.o_custkey)
         ORDER BY o_custkey, o_orderkey
-        """
+        """,
+        orders=T(spark, sf_dir, "orders"),
     )
 
 
@@ -1783,24 +1782,24 @@ def equi_depth_order_values(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lateral_top2_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-2 orders per (sampled) customer via a correlated LATERAL
     subquery — identical SQL text on both engines modulo view names."""
-    T(spark, sf_dir, "customer").createOrReplaceTempView("_cust_lat")
-    T(spark, sf_dir, "orders").createOrReplaceTempView("_ord_lat")
     return spark.sql(
         """
         SELECT c.c_custkey,
                t.o_orderkey,
                CAST(floor(t.o_totalprice * 100) AS BIGINT) AS cents
-        FROM _cust_lat c
+        FROM {customer} c
         JOIN LATERAL (
             SELECT o_orderkey, o_totalprice
-            FROM _ord_lat
+            FROM {orders}
             WHERE o_custkey = c.c_custkey
             ORDER BY o_totalprice DESC, o_orderkey
             LIMIT 2
         ) t
         WHERE c.c_custkey % 17 = 0
         ORDER BY c.c_custkey, cents DESC, t.o_orderkey
-        """
+        """,
+        customer=T(spark, sf_dir, "customer"),
+        orders=T(spark, sf_dir, "orders"),
     )
 
 

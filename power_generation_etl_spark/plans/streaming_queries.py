@@ -203,7 +203,9 @@ def stream_dedup_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         for et, n in rows:
             totals[et] = totals.get(et, 0) + int(n)
     return local_frame(
-        spark, sorted(totals.items()), "event_type string, n_unique_events long"
+        spark,
+        sorted(totals.items(), key=_spark_order),
+        "event_type string, n_unique_events long",
     )
 
 
@@ -360,7 +362,9 @@ def stream_late_data_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # round 1: on-time rows, fresh checkpoint; round 2: late rows,
         # RESTORED watermark/state
         overlap_two_rounds(d, on_time, late, "parquet", _run_round)
-    rows = sorted(tuple(r) for emitted in batches.values() for r in emitted)
+    rows = sorted(
+        (tuple(r) for emitted in batches.values() for r in emitted), key=_spark_order
+    )
     return local_frame(spark, rows, "hour_us long, event_type string, n_events long")
 
 
@@ -1017,7 +1021,9 @@ def stream_transition_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         for f, t, n in rows:
             totals[(f, t)] = totals.get((f, t), 0) + int(n)
     return local_frame(
-        spark, sorted((f, t, n) for (f, t), n in totals.items()), out_schema
+        spark,
+        sorted(((f, t, n) for (f, t), n in totals.items()), key=_spark_order),
+        out_schema,
     )
 
 

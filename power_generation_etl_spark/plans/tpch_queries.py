@@ -241,18 +241,18 @@ def market_share_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def supplier_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = T(spark, sf_dir, "lineitem")
-    li.select("l_suppkey", _cents().alias("_c")).createOrReplaceTempView("_q11_li")
     return spark.sql(
         """
         WITH s AS (
           SELECT l_suppkey, CAST(sum(_c) AS BIGINT) AS revenue_cents
-          FROM _q11_li GROUP BY l_suppkey
+          FROM {li} GROUP BY l_suppkey
         )
         SELECT l_suppkey, revenue_cents
         FROM s
         WHERE revenue_cents * 100 > (SELECT sum(revenue_cents) FROM s)
         ORDER BY revenue_cents DESC, l_suppkey
-        """
+        """,
+        li=li.select("l_suppkey", _cents().alias("_c")),
     )
 
 
@@ -324,22 +324,22 @@ def customer_order_count_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
 def top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = T(spark, sf_dir, "lineitem")
     s = T(spark, sf_dir, "supplier")
-    li.filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
-    ).select("l_suppkey", _cents().alias("_c")).createOrReplaceTempView("_q15_li")
-    s.select("s_suppkey", "s_name").createOrReplaceTempView("_q15_supp")
     return spark.sql(
         """
         WITH rev AS (
           SELECT l_suppkey, CAST(sum(_c) AS BIGINT) AS total_cents
-          FROM _q15_li GROUP BY l_suppkey
+          FROM {li} GROUP BY l_suppkey
         )
         SELECT s.s_suppkey, s.s_name, rev.total_cents
-        FROM _q15_supp s JOIN rev ON rev.l_suppkey = s.s_suppkey
+        FROM {supp} s JOIN rev ON rev.l_suppkey = s.s_suppkey
         WHERE rev.total_cents = (SELECT max(total_cents) FROM rev)
         ORDER BY s.s_suppkey
-        """
+        """,
+        li=li.filter(
+            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
+            & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
+        ).select("l_suppkey", _cents().alias("_c")),
+        supp=s.select("s_suppkey", "s_name"),
     )
 
 
@@ -367,23 +367,19 @@ def top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = T(spark, sf_dir, "lineitem")
     p = T(spark, sf_dir, "part")
-    li.select("l_partkey", "l_quantity", "l_extendedprice").createOrReplaceTempView(
-        "_q17_li"
-    )
-    p.filter(F.col("p_type") == "SMALL").select("p_partkey").createOrReplaceTempView(
-        "_q17_part"
-    )
     return spark.sql(
         """
         SELECT count(*) AS n_items,
                CAST(sum(CAST(floor(l.l_extendedprice * 100) AS BIGINT)) AS BIGINT)
                  AS revenue_cents
-        FROM _q17_li l
-        JOIN _q17_part p ON p.p_partkey = l.l_partkey
+        FROM {li} l
+        JOIN {part} p ON p.p_partkey = l.l_partkey
         WHERE l.l_quantity < 0.2 * (SELECT avg(l2.l_quantity)
-                                    FROM _q17_li l2
+                                    FROM {li} l2
                                     WHERE l2.l_partkey = l.l_partkey)
-        """
+        """,
+        li=li.select("l_partkey", "l_quantity", "l_extendedprice"),
+        part=p.filter(F.col("p_type") == "SMALL").select("p_partkey"),
     )
 
 
@@ -435,22 +431,21 @@ def dormant_customer_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("bal_cents").cast("bigint").alias("total_cents"),
         F.count(F.lit(1)).alias("n_pos"),
     )
-    c.createOrReplaceTempView("_q22_bal")
-    o.createOrReplaceTempView("_q22_orders")
-    pos.createOrReplaceTempView("_q22_avgpos")
     return spark.sql(
         """
         SELECT c_mktsegment, count(*) AS numcust,
                CAST(sum(bal_cents) AS BIGINT) AS total_bal_cents
-        FROM _q22_bal c
-        WHERE c.bal_cents * (SELECT n_pos FROM _q22_avgpos)
-                > (SELECT total_cents FROM _q22_avgpos)
-          AND NOT EXISTS (SELECT 1 FROM _q22_orders o
+        FROM {bal} c
+        WHERE c.bal_cents * (SELECT n_pos FROM {avgpos})
+                > (SELECT total_cents FROM {avgpos})
+          AND NOT EXISTS (SELECT 1 FROM {urgent} o
                           WHERE o.o_custkey = c.c_custkey)
-        -- _q22_orders is pre-filtered to urgent orders
         GROUP BY c_mktsegment
         ORDER BY c_mktsegment
-        """
+        """,
+        bal=c,
+        avgpos=pos,
+        urgent=o,
     )
 
 

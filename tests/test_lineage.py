@@ -104,7 +104,7 @@ class TestLineageModes:
     def test_modes_identical(self, spark, monkeypatch, fixture):
         # suffix products must not be reused across modes — the point
         # is to rebuild under each strategy.
-        monkeypatch.setenv("SPARK_ETL_SUFFIX_CACHE", "0")
+        monkeypatch.setenv("SPARK_ETL_PRODUCT_CACHE", "0")
         results = {}
         for m in ("local", "persist", "checkpoint"):
             monkeypatch.setenv("SPARK_ETL_LINEAGE_CUT", m)

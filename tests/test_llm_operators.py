@@ -1330,6 +1330,28 @@ class TestLshBucketGuard:
         assert set(pairs) == {(1, 2)}
         assert pairs[(1, 2)] == 0
 
+    def test_cosine_lsh_guard_drops_only_supercap_buckets(self, spark):
+        """``lsh_bucketed_neardup``: a 2-vector cluster at v and a
+        6-vector cluster at -v fall on opposite sides of every
+        hyperplane, so they share no band bucket. bound=10 fits the
+        three size-2 buckets (volume 6) but not the three size-6 ones
+        (volume 90), so the guard engages bucket_cap=2 and returns
+        exactly the pairs of that explicit cap: the small cluster's."""
+        import pytest as pt
+
+        v = [float(i % 5) - 1.5 for i in range(8)]
+        rows = [(i, v) for i in (1, 2)] + [(10 + i, [-x for x in v]) for i in range(6)]
+        emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+        with pt.warns(UserWarning, match="auto-engaging bucket_cap=2"):
+            guarded = sim.lsh_bucketed_neardup(
+                emb, "vec_id", "embedding", max_candidates=10
+            ).collect()
+        explicit = sim.lsh_bucketed_neardup(
+            emb, "vec_id", "embedding", bucket_cap=2
+        ).collect()
+        assert guarded == explicit
+        assert [(r["id_a"], r["id_b"]) for r in guarded] == [(1, 2)]
+
 
 class TestMutualKnn:
     def test_mutuality_and_k(self, spark):
@@ -1446,3 +1468,43 @@ def test_max_candidates_env_rejects_non_finite(monkeypatch, raw):
     monkeypatch.setenv("SPARK_ETL_ALLPAIRS_MAX_CANDIDATES", raw)
     with pytest.raises(ValueError, match="SPARK_ETL_ALLPAIRS_MAX_CANDIDATES"):
         mh._resolve_max_candidates(None)
+
+
+def test_one_candidate_volume_guard():
+    """The bucketed near-dup joins share one guard: no module but
+    ``operators/minhash.py`` imports ``_guard_volume_cap`` or
+    ``_resolve_max_candidates``, and ``_guard_volume_cap`` is called only
+    by ``cap_buckets`` and ``prefix_jaccard_pairs``."""
+    import ast
+    import glob
+    import os
+
+    private = {"_guard_volume_cap", "_resolve_max_candidates"}
+    pkg = os.path.dirname(os.path.dirname(mh.__file__))
+    importers = []
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        if path == mh.__file__:
+            continue
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        importers += [
+            (path, a.name)
+            for n in ast.walk(tree)
+            if isinstance(n, ast.ImportFrom)
+            for a in n.names
+            if a.name in private
+        ]
+    assert importers == []
+
+    with open(mh.__file__) as f:
+        tree = ast.parse(f.read(), mh.__file__)
+    callers = sorted(
+        fn.name
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+        for n in ast.walk(fn)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Name)
+        and n.func.id == "_guard_volume_cap"
+    )
+    assert callers == ["cap_buckets", "prefix_jaccard_pairs"]

@@ -145,10 +145,10 @@ class TestSuffixDifferentialLongDocs:
     @pytest.mark.parametrize("cache_env", ["1", "0"])
     def test_cache_on_off_identical(self, spark, monkeypatch, cache_env):
         """The product memo-cache is semantically invisible: same
-        results with SPARK_ETL_SUFFIX_CACHE on and off, and a second
+        results with SPARK_ETL_PRODUCT_CACHE on and off, and a second
         corpus in the same session never sees the first one's
         products."""
-        monkeypatch.setenv("SPARK_ETL_SUFFIX_CACHE", cache_env)
+        monkeypatch.setenv("SPARK_ETL_PRODUCT_CACHE", cache_env)
         run = " ".join(_w(i) for i in range(30))
         docs_a = {1: run + " tail", 2: run}
         docs_b = {1: "totally different words", 2: "other text here"}
