@@ -131,7 +131,7 @@ class PlanMemo:
     ) -> Any:
         """The cached product for (key, src-plan), else build(), cache,
         and return it. `key` carries every non-plan parameter that
-        shapes the product (shingle n, k-means k/iters/kernel, ...)."""
+        shapes the product (shingle n, k-means k/iters, ...)."""
         if not self.enabled():
             return build()
         tok = _session_token(src)

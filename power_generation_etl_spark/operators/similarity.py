@@ -6,6 +6,13 @@
 - random-hyperplane LSH bucketing as the scale path (candidates only
   meet within a bucket → the O(n²) join becomes O(Σ bucket²)).
 
+Each vector job has ONE implementation, the oracle-exact one: pair
+cosine over candidate rows is `cosine_pairs_seq`, Lloyd's assignment
+in training jobs is `_assign_seq`, IVF probe cells are picked by
+`_probe_cells`, and returned plans use the `cosine()`/`assign_cell()`
+expressions. Every kernel replays the SQL fold's IEEE operations in
+the same order, so its doubles equal the DuckDB oracles' bit for bit.
+
 Scale design: the LSH signature is computed in one projection (no
 shuffle); the bucket join shuffles only (bucket_key, id, vector).
 For 100 TB you'd additionally store vectors bucketed-by-signature so
@@ -16,7 +23,6 @@ from __future__ import annotations
 
 import math
 import random
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -52,45 +58,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def cosine_to_const_fast(vec: Column, query_vec: list[float]) -> Column:
-    """Arrow-vectorized cosine against a constant query vector.
-
-    The portable `cosine()` expression evaluates zip_with/aggregate
-    lambdas interpreted (outside whole-stage codegen, 3-10×/element
-    tax); this kernel moves each Arrow batch into numpy and runs one
-    BLAS matvec per batch. NOT oracle-portable (numpy pairwise
-    summation ≠ sequential fold at the last ulp) — the fast path for
-    production scans; keep `cosine()` for oracle-checked runs."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = float(np.linalg.norm(q))
-
-    @F.pandas_udf("double")
-    def _cos(v: pd.Series) -> pd.Series:
-        m = np.array(v.tolist(), dtype=np.float64)
-        if m.size == 0:
-            return pd.Series(np.zeros(0))
-        return pd.Series((m @ q) / (np.linalg.norm(m, axis=1) * qn))
-
-    return _cos(vec)
-
-
-def cosine_pairwise_fast(a: Column, b: Column) -> Column:
-    """Arrow-vectorized row-wise cosine of two vector columns (the
-    candidate-verification hot loop). Same portability caveat as
-    `cosine_to_const_fast`."""
-    @F.pandas_udf("double")
-    def _cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        ma = np.array(va.tolist(), dtype=np.float64)
-        mb = np.array(vb.tolist(), dtype=np.float64)
-        if ma.size == 0:
-            return pd.Series(np.zeros(0))
-        num = np.einsum("ij,ij->i", ma, mb)
-        den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
-        return pd.Series(num / den)
-
-    return _cos(a, b)
-
-
 def cosine_pairs_seq(
     pairs: DataFrame, a_col: str, b_col: str, out_col: str
 ) -> DataFrame:
@@ -110,15 +77,25 @@ def cosine_pairs_seq(
     the evaluation engine changes. numpy reductions (einsum/sum) are
     NOT used: pairwise summation reorders the adds.
 
-    mapInPandas (an allowed catalog plan node, unlike scalar pandas
+    mapInArrow (an allowed catalog plan node, unlike scalar pandas
     UDFs), dropping the two vector columns so only the narrow result
-    shuffles downstream. NULL vectors map to NULL (as the expression
-    does); zero norms follow IEEE double division (NaN/Inf) on both
-    paths.
+    shuffles downstream. NULL vectors and vectors holding a NULL
+    element map to NULL (as the expression does); zero norms follow
+    IEEE double division (NaN/Inf) on both paths.
     """
     keep = [f for f in pairs.schema.fields if f.name not in (a_col, b_col)]
     out_schema = StructType(list(keep) + [StructField(out_col, DoubleType())])
     keep_names = [f.name for f in keep]
+
+    def dense(vecs, m):
+        """(m, dim) float64 matrix of `m` non-null vectors, and whether
+        each row is free of NULL elements (NULLs read as NaN)."""
+        flat = vecs.flatten()
+        mat = flat.to_numpy(zero_copy_only=False).reshape(m, -1)
+        if not flat.null_count:
+            return mat, True
+        ok = flat.is_valid().to_numpy(zero_copy_only=False)
+        return mat, ok.reshape(m, -1).all(axis=1)
 
     def kern(batches):
         # mapInArrow (r12; was mapInPandas): the Arrow→pandas hop
@@ -150,8 +127,8 @@ def cosine_pairs_seq(
                 fa = va if mask.all() else va.filter(valid)
                 fb = vb if mask.all() else vb.filter(valid)
                 m = int(mask.sum())
-                ma = fa.flatten().to_numpy().reshape(m, -1)
-                mb = fb.flatten().to_numpy().reshape(m, -1)
+                ma, ok_a = dense(fa, m)
+                mb, ok_b = dense(fb, m)
                 num = np.zeros(m)
                 na = np.zeros(m)
                 nb = np.zeros(m)
@@ -162,11 +139,8 @@ def cosine_pairs_seq(
                     nb = nb + y * y
                 with np.errstate(divide="ignore", invalid="ignore"):
                     res[mask] = num / (np.sqrt(na) * np.sqrt(nb))
-            out_arr = (
-                pa.array(res, type=pa.float64())
-                if mask.all()
-                else pa.array(res, type=pa.float64(), mask=~mask)
-            )
+                mask[mask] = ok_a & ok_b
+            out_arr = pa.array(res, type=pa.float64(), mask=~mask)
             yield pa.RecordBatch.from_arrays(
                 kept + [out_arr], names=keep_names + [out_col]
             )
@@ -180,17 +154,13 @@ def brute_force_topk(
     vec_col: str,
     query_vec: list[float],
     k: int = 10,
-    kernel: str = "expr",
 ) -> DataFrame:
     """Exact top-k by cosine for one query vector. TakeOrderedAndProject:
-    per-partition heap + driver merge — no global sort.
-
-    kernel='expr' (default) uses the portable sequential-fold
-    expression (oracle-identical); kernel='arrow' uses the vectorized
-    numpy kernel (same ranking, last-ulp value differences)."""
+    per-partition heap + driver merge — no global sort. The similarity
+    is the sequential-fold `cosine()` expression (oracle-identical); the
+    IVF probes rank their probed rows through this function too."""
     q = F.array(*[F.lit(float(x)) for x in query_vec])
-    v = as_double_array(F.col(vec_col))
-    sim = cosine_to_const_fast(v, query_vec) if kernel == "arrow" else cosine(v, q)
+    sim = cosine(as_double_array(F.col(vec_col)), q)
     return (
         df.select(F.col(id_col), F.round(sim, 4).alias("cosine_sim"))
         .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
@@ -359,15 +329,13 @@ def lsh_bucketed_neardup(
     n_planes: int = 12,
     n_bands: int = 3,
     seed: int = 42,
-    kernel: str = "expr",
     bucket_cap: int | None = None,
     max_candidates: int | None = None,
 ) -> DataFrame:
     """Approximate near-dup: candidates must share at least one band of
-    the hyperplane signature; exact cosine verifies the candidates.
-    Recall < 1 by construction (that's the trade); precision = 1 since
-    every emitted pair is exactly verified. kernel='arrow' runs the
-    verification cosine through the vectorized numpy kernel.
+    the hyperplane signature; exact cosine (`cosine_pairs_seq`) verifies
+    the candidates. Recall < 1 by construction (that's the trade);
+    precision = 1 since every emitted pair is exactly verified.
 
     ``max_candidates`` / ``bucket_cap`` — the counted candidate-volume
     guard every banded family carries (r11; same contract as
@@ -385,7 +353,7 @@ def lsh_bucketed_neardup(
     which pairs are found. At production scale the right recall knob
     is MORE PLANES (the key domain must grow with N); the cap is the
     safety net that keeps a mis-sized index subquadratic."""
-    probe = df.select(vec_col).head()
+    probe = df.select(vec_col).where(F.col(vec_col).isNotNull()).head()
     if probe is None:  # empty corpus -> empty pairs, stable schema
         idt = dict(df.dtypes).get(id_col, "bigint")
         return local_frame(
@@ -449,14 +417,7 @@ def lsh_bucketed_neardup(
     va = df.select(F.col(id_col).alias("id_a"), v.alias("vec"))
     vb = df.select(F.col(id_col).alias("id_b"), v.alias("vec2"))
     cands = cand_ids.join(va, "id_a").join(vb, "id_b")
-    if kernel == "arrow":
-        scored = cands.select(
-            "id_a",
-            "id_b",
-            cosine_pairwise_fast(F.col("vec"), F.col("vec2")).alias("_cos"),
-        )
-    else:
-        scored = cosine_pairs_seq(cands, "vec", "vec2", "_cos")
+    scored = cosine_pairs_seq(cands, "vec", "vec2", "_cos")
     return (
         scored.select("id_a", "id_b", F.round("_cos", 4).alias("cosine_sim"))
         .filter(F.col("cosine_sim") >= threshold)
@@ -486,79 +447,28 @@ def assign_cell(v: Column, cents: list[tuple[int, list[float]]]) -> Column:
     return F.element_at(cell_ids, idx)
 
 
-def assign_cell_fast(vec: Column, cents: list[tuple[int, list[float]]]) -> Column:
-    """Arrow-vectorized nearest-centroid assignment: one numpy distance
-    matrix per Arrow batch instead of k interpreted fold passes per row.
-    Same tie-break (lowest cell id wins — argmin returns the first
-    minimum and cents are sorted ascending). Same portability caveat as
-    the other fast kernels: numpy's summation order differs from the
-    sequential fold in the last ulp, so assignments can differ from
-    `assign_cell` only on exact distance ties — use for production
-    scans, keep `assign_cell` for oracle-checked runs."""
-    import numpy as np
-
-    C = np.asarray([c for _, c in cents], dtype=np.float64)  # k x dim
-    ids = np.asarray([cid for cid, _ in cents], dtype=np.int64)
-    c_sq = (C * C).sum(axis=1)
-
-    @F.pandas_udf("int")
-    def _assign(v: pd.Series) -> pd.Series:
-        m = np.array(v.tolist(), dtype=np.float64)
-        if m.size == 0:
-            return pd.Series(np.zeros(0, dtype=np.int32))
-        # ||v-c||^2 = ||v||^2 - 2 v.c + ||c||^2 ; ||v||^2 constant per row
-        d = -2.0 * (m @ C.T) + c_sq
-        return pd.Series(ids[np.argmin(d, axis=1)].astype(np.int32))
-
-    return _assign(vec)
-
-
-def _assign_seq_fast(cents: list[tuple[int, list[float]]]) -> Column:
-    """BIT-EXACT vectorized twin of `assign_cell` for TRAINING jobs.
+def _assign_seq(
+    books: list[list[tuple[int, list[float]]]], tag: Column
+) -> Column:
+    """BIT-EXACT vectorized twin of `assign_cell` on column `_v` for
+    TRAINING jobs: each row's `tag` picks its codebook from `books`
+    (the PQ trainer's subspace `j`; k-means passes one book and
+    `F.lit(0)`), one Arrow batch crossing instead of k interpreted
+    fold passes per row.
 
     Replays `squared_dist`'s sequential fold — acc = acc + (a−b)·(a−b),
     one numpy float64 vector op per dimension — per centroid, then
     takes the FIRST minimum (np.argmin ≡ array_position(array_min):
-    both return the first exact-equality hit, and cents are sorted
+    both return the first exact-equality hit, and each book is sorted
     ascending by id, so ties break identically). Every intermediate
     double is bit-identical to the interpreted expression, so the
     training trajectory (and with it every oracle that unrolls it) is
-    unchanged — only the evaluation engine moves from per-element
-    interpreted lambdas (k·dim per row) to k·dim vectorized ops per
-    Arrow batch.
+    unchanged.
 
     Scalar pandas UDFs are banned from CATALOG plans (the hygiene gate
     counts ArrowEvalPython), so this kernel is used ONLY inside the
     driver-collected Lloyd's iterations; serving/assignment expressions
     in returned plans keep `assign_cell`."""
-    ids = np.asarray([cid for cid, _ in cents], dtype=np.int32)
-    C = [np.asarray(c, dtype=np.float64) for _, c in cents]
-
-    @F.pandas_udf("int")
-    def _assign(v: pd.Series) -> pd.Series:
-        mat = np.array(v.tolist(), dtype=np.float64)
-        if mat.size == 0:
-            return pd.Series(np.zeros(0, dtype=np.int32))
-        n, d = mat.shape
-        dist = np.empty((n, len(C)))
-        for ci, c in enumerate(C):
-            acc = np.zeros(n)
-            for j in range(d):
-                t = mat[:, j] - c[j]
-                acc = acc + t * t
-            dist[:, ci] = acc
-        return pd.Series(ids[np.argmin(dist, axis=1)])
-
-    return _assign(F.col("_v"))
-
-
-def _assign_seq_fast_multi(
-    books: list[list[tuple[int, list[float]]]]
-) -> Column:
-    """`_assign_seq_fast` for the batched PQ trainer: rows carry a
-    subspace tag `j` and the kernel dispatches to that subspace's
-    codebook — one Arrow batch crossing instead of an m-way when-chain
-    of k interpreted fold passes each. Same bit-exactness argument."""
     ids = [np.asarray([cid for cid, _ in b], dtype=np.int32) for b in books]
     Cs = [[np.asarray(c, dtype=np.float64) for _, c in b] for b in books]
 
@@ -585,7 +495,7 @@ def _assign_seq_fast_multi(
             out[sel] = ids[j][np.argmin(dist, axis=1)]
         return pd.Series(out)
 
-    return _assign(F.col("j"), F.col("_v"))
+    return _assign(tag, F.col("_v"))
 
 
 def kmeans_train(
@@ -594,9 +504,9 @@ def kmeans_train(
     vec_col: str,
     k: int = 8,
     iters: int = 3,
-    kernel: str = "expr",
 ) -> list[tuple[int, list[float]]]:
-    """Lloyd's k-means over DataFrame ops, for IVF cell training.
+    """Lloyd's k-means over DataFrame ops, for IVF cell training. NULL
+    vectors are skipped.
 
     Scale design: the driver holds only k×dim floats; assignment is a
     projection (no shuffle) and each update is ONE aggregation whose
@@ -609,22 +519,17 @@ def kmeans_train(
     that replays the trajectory in SQL), empty cells are dropped, and
     distance ties assign to the lowest cell id.
 
-    kernel='expr' (default) keeps the oracle-reproducible sequential-fold
-    distance; kernel='arrow' assigns cells through the vectorized numpy
-    kernel (`assign_cell_fast`) — the production path for big corpora,
-    identical assignments except on exact distance ties.
-
-    Trainings are MEMOIZED per (corpus plan, k, iters, kernel) via
+    Trainings are MEMOIZED per (corpus plan, k, iters) via
     `memo.PlanMemo` — a session that builds several indexes over the
     same corpus with the same hyper-parameters (e.g. the raw and
     residual IVF-PQ variants share their coarse quantizer) trains once;
     the training is deterministic, so memoization is invisible to the
     oracles. Callers get a fresh copy (mutation-safe)."""
-    src = df.select(
+    src = df.where(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("_id"), as_double_array(F.col(vec_col)).alias("_v")
     )
     cents = _KMEANS_MEMO.get_or_build(
-        (k, iters, kernel), src, lambda: _kmeans_train_impl(src, k, iters, kernel)
+        (k, iters), src, lambda: _kmeans_train_impl(src, k, iters)
     )
     return [(i, list(c)) for i, c in cents]
 
@@ -652,7 +557,7 @@ def _train_base(src: DataFrame) -> DataFrame:
 
 
 def _kmeans_train_impl(
-    src: DataFrame, k: int, iters: int, kernel: str
+    src: DataFrame, k: int, iters: int
 ) -> list[tuple[int, list[float]]]:
     # Materialize the (id, vec) projection once: every Lloyd's round is
     # a fresh job, and without this each one re-scans and re-casts the
@@ -665,18 +570,9 @@ def _kmeans_train_impl(
     if not cents:  # empty corpus -> no cells (callers emit empty results)
         return []
     dim = len(cents[0][1])
-    # Training runs in driver-collected jobs, so the expr path can use
-    # the bit-exact vectorized assigner (same trajectory, no k·dim
-    # interpreted folds per row); 'arrow' keeps the BLAS identity
-    # kernel (ties may differ — the documented production trade).
     for _ in range(iters):
-        cell = (
-            assign_cell_fast(v, cents)
-            if kernel == "arrow"
-            else _assign_seq_fast(cents)
-        )
         rows = (
-            base.groupBy(cell.alias("cell"))
+            base.groupBy(_assign_seq([cents], F.lit(0)).alias("cell"))
             .agg(*[F.round(F.avg(v.getItem(i)), 6).alias(f"c{i}") for i in range(dim)])
             .collect()
         )
@@ -684,6 +580,26 @@ def _kmeans_train_impl(
             (int(r["cell"]), [float(r[f"c{i}"]) for i in range(dim)]) for r in rows
         )
     return cents
+
+
+_CELLS_SCHEMA = "cell int, centroid array<double>"
+
+
+def _probe_cells(
+    cells: DataFrame, query_vec: list[float], n_probe_fraction: float
+) -> list:
+    """The IVF probe set: ids of the ``max(1, ceil(n · n_probe_fraction))``
+    cells of a ``(cell, centroid)`` frame closest to the query by
+    `cosine()`, ties to the lower cell id. One collect of ≤ n_cells
+    tiny rows; the same fold as the oracles' cell ranking."""
+    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    ranked = (
+        cells.select("cell", cosine(F.col("centroid"), q).alias("cell_sim"))
+        .orderBy(F.col("cell_sim").desc(), F.col("cell"))
+        .collect()
+    )
+    n_probe = max(1, int(math.ceil(len(ranked) * n_probe_fraction)))
+    return [r["cell"] for r in ranked[:n_probe]]
 
 
 def ivf_topk(
@@ -696,64 +612,40 @@ def ivf_topk(
     label_col: str | None = None,
     n_cells: int = 8,
     train_iters: int = 3,
-    kernel: str = "expr",
 ) -> DataFrame:
     """IVF-style ANN: partition vectors into coarse cells (a provided
     label column, or k-means cells trained by `kmeans_train`), rank
-    cells by centroid similarity to the query, and search only the
-    closest `n_probe_fraction` of cells exactly.
+    cells by centroid similarity to the query (`_probe_cells`), and
+    search only the closest `n_probe_fraction` of cells exactly.
 
     At 100 TB the cell id is a partition column, so probing reads only
     the probed partitions (partition pruning on the vector table)."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
     v = as_double_array(F.col(vec_col))
+    idt = dict(df.dtypes).get(id_col, "bigint")
     if label_col is not None:
         cell = F.col(label_col)
         # Centroids: per-cell mean vector — one narrow aggregation.
-        probe = df.select(vec_col).head()
+        probe = df.select(vec_col).where(F.col(vec_col).isNotNull()).head()
         if probe is None:  # empty corpus -> empty top-k, stable schema
-            idt = dict(df.dtypes).get(id_col, "bigint")
             return local_frame(
                 df.sparkSession, [], f"{id_col} {idt}, cosine_sim double"
             )
         dim = len(probe[0])
-        centroids = df.groupBy(cell.alias("cell")).agg(
+        cells = df.groupBy(cell.alias("cell")).agg(
             F.array(
                 *[F.avg(v.getItem(i)).alias(f"c{i}") for i in range(dim)]
             ).alias("centroid"),
         )
-        ranked = centroids.select(
-            "cell", cosine(F.col("centroid"), q).alias("cell_sim")
-        ).orderBy(F.col("cell_sim").desc(), F.col("cell"))
     else:
-        cents = kmeans_train(
-            df, id_col, vec_col, k=n_cells, iters=train_iters, kernel=kernel
-        )
+        cents = kmeans_train(df, id_col, vec_col, k=n_cells, iters=train_iters)
         if not cents:  # empty corpus -> empty top-k, stable schema
-            idt = dict(df.dtypes).get(id_col, "bigint")
             return local_frame(
                 df.sparkSession, [], f"{id_col} {idt}, cosine_sim double"
             )
-        cell = (
-            assign_cell_fast(v, cents) if kernel == "arrow" else assign_cell(v, cents)
-        )
-        spark = df.sparkSession
-        ranked = (
-            local_frame(spark, cents, "cell int, centroid array<double>")
-            .select("cell", cosine(F.col("centroid"), q).alias("cell_sim"))
-            .orderBy(F.col("cell_sim").desc(), F.col("cell"))
-        )
-    # One collect (≤ n_cells tiny rows) instead of count + limit-collect.
-    ranked_rows = ranked.collect()
-    n_probe = max(1, int(math.ceil(len(ranked_rows) * n_probe_fraction)))
-    probe_cells = [r["cell"] for r in ranked_rows[:n_probe]]
-    probed = df.filter(cell.isin(probe_cells))
-    sim = cosine_to_const_fast(v, query_vec) if kernel == "arrow" else cosine(v, q)
-    return (
-        probed.select(F.col(id_col), F.round(sim, 4).alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+        cell = assign_cell(v, cents)
+        cells = local_frame(df.sparkSession, cents, _CELLS_SCHEMA)
+    probed = df.filter(cell.isin(_probe_cells(cells, query_vec, n_probe_fraction)))
+    return brute_force_topk(probed, id_col, vec_col, query_vec, k)
 
 
 def write_ivf_index(
@@ -790,33 +682,19 @@ def ivf_probe_index(
     query_vec: list[float],
     k: int = 10,
     n_probe_fraction: float = 0.25,
-    kernel: str = "expr",
 ) -> DataFrame:
-    """Probe a `write_ivf_index` layout: rank cells against the query
-    driver-side (centroids are constants — zero jobs), then scan ONLY
-    the probed cell partitions. The `cell IN (...)` predicate prunes at
-    the partition-directory level — check PartitionFilters in
-    .explain() — so probe cost is O(probed cells), not O(table)."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = np.linalg.norm(q)
-    sims = sorted(
-        (
-            (float(np.dot(np.asarray(c), q) / (np.linalg.norm(np.asarray(c)) * qn)), cid)
-            for cid, c in cents
-        ),
-        key=lambda t: (-t[0], t[1]),
+    """Probe a `write_ivf_index` layout: rank the centroids against the
+    query (`_probe_cells` over the driver-held centroids — 3 small jobs
+    that sort the ≤ n_cells rows, no table scan), then scan ONLY the
+    probed cell partitions. The `cell IN (...)`
+    predicate prunes at the partition-directory level — check
+    PartitionFilters in .explain() — so probe cost is O(probed cells),
+    not O(table)."""
+    probe_cells = _probe_cells(
+        local_frame(spark, cents, _CELLS_SCHEMA), query_vec, n_probe_fraction
     )
-    n_probe = max(1, int(math.ceil(len(sims) * n_probe_fraction)))
-    probe_cells = [cid for _, cid in sims[:n_probe]]
     df = spark.read.parquet(path).filter(F.col("cell").isin(probe_cells))
-    v = F.col("embedding")
-    qa = F.array(*[F.lit(float(x)) for x in query_vec])
-    sim = cosine_to_const_fast(v, query_vec) if kernel == "arrow" else cosine(v, qa)
-    return (
-        df.select(F.col("vec_id"), F.round(sim, 4).alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
-        .limit(k)
-    )
+    return brute_force_topk(df, "vec_id", "embedding", query_vec, k)
 
 
 # ---------------------------------------------------------------------------
@@ -986,7 +864,7 @@ def _pq_train_impl(
     for _ in range(iters):
         # vectorized per-subspace dispatch (bit-exact twin of the flat
         # assign_cell when-chain; training-job-only kernel)
-        cell = _assign_seq_fast_multi(books)
+        cell = _assign_seq(books, F.col("j"))
         rows = (
             exploded.groupBy(F.col("j"), cell.alias("cell"))
             .agg(
@@ -1028,7 +906,7 @@ def _pq_train_sequential_impl(
         sliced = base.select(
             F.col("_id"), F.slice(F.col("_enc"), j * sub + 1, sub).alias("_v")
         )
-        books.append(_kmeans_train_impl(sliced, k_sub, iters, "expr"))
+        books.append(_kmeans_train_impl(sliced, k_sub, iters))
     return books
 
 
@@ -1099,7 +977,6 @@ def semdedup(
     k: int = 8,
     iters: int = 3,
     threshold: float = 0.95,
-    kernel: str = "expr",
 ) -> DataFrame:
     """SemDeDup (Abbas et al., 2023, arXiv:2303.09540): semantic
     deduplication of an embedding corpus — k-means clusters the
@@ -1125,13 +1002,12 @@ def semdedup(
     back to filter the corpus in a pipeline.
     """
     spark = df.sparkSession
-    cents = kmeans_train(df, id_col, vec_col, k=k, iters=iters, kernel=kernel)
+    cents = kmeans_train(df, id_col, vec_col, k=k, iters=iters)
     if not cents:
         return local_frame(spark, [], "cell int, n_vectors bigint, n_dropped bigint")
     v = as_double_array(F.col(vec_col))
-    assigner = assign_cell_fast if kernel == "arrow" else assign_cell
     assigned = df.select(
-        F.col(id_col).alias("id"), v.alias("vec"), assigner(v, cents).alias("cell")
+        F.col(id_col).alias("id"), v.alias("vec"), assign_cell(v, cents).alias("cell")
     ).transform(_cut)  # feeds three subtrees: counts + both join sides
     npar = spark.sparkContext.defaultParallelism
     left = assigned.repartition(npar, "cell")
@@ -1144,16 +1020,9 @@ def semdedup(
         right,
         (F.col("cell") == F.col("cell2")) & (F.col("id") < F.col("id2")),
     )
-    if kernel == "arrow":
-        scored = joined.select(
-            "cell",
-            F.col("id2").alias("id"),
-            cosine_pairwise_fast(F.col("vec"), F.col("vec2")).alias("_cos"),
-        )
-    else:
-        scored = cosine_pairs_seq(
-            joined.select("cell", "id2", "vec", "vec2"), "vec", "vec2", "_cos"
-        ).select("cell", F.col("id2").alias("id"), F.col("_cos"))
+    scored = cosine_pairs_seq(
+        joined.select("cell", "id2", "vec", "vec2"), "vec", "vec2", "_cos"
+    ).select("cell", F.col("id2").alias("id"), F.col("_cos"))
     dropped = (
         scored.select("cell", "id", F.round("_cos", 4).alias("s"))
         .where(F.col("s") >= threshold)
@@ -1228,7 +1097,6 @@ def ivfpq_topk(
         return local_frame(
             df.sparkSession, [], f"{id_col} {idt}, cell int, adc_d2 double"
         )
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
     v = as_double_array(F.col(vec_col))
     spark = df.sparkSession
     dim = len(cents[0][1])
@@ -1275,14 +1143,9 @@ def ivfpq_topk(
     if not books:
         idt = dict(df.dtypes).get(id_col, "bigint")
         return local_frame(spark, [], f"{id_col} {idt}, cell int, adc_d2 double")
-    ranked_rows = (
-        local_frame(spark, cents, "cell int, centroid array<double>")
-        .select("cell", cosine(F.col("centroid"), q).alias("cell_sim"))
-        .orderBy(F.col("cell_sim").desc(), F.col("cell"))
-        .collect()
+    probe_cells = _probe_cells(
+        local_frame(spark, cents, _CELLS_SCHEMA), query_vec, n_probe_fraction
     )
-    n_probe = max(1, int(math.ceil(len(ranked_rows) * n_probe_fraction)))
-    probe_cells = [r["cell"] for r in ranked_rows[:n_probe]]
     probed = enc_src.filter(cell_col.isin(probe_cells)).select(
         F.col(id_col), enc_vec.alias("_v"), cell_col.alias("cell")
     )

@@ -954,7 +954,7 @@ _TR_DELAY_MS = 600_000
           FROM e WINDOW win AS (PARTITION BY user_id ORDER BY t, event_id))
     SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n_transitions
     FROM p, c, m1
-    WHERE from_type IS NOT NULL
+    WHERE pt IS NOT NULL
       AND (NOT (pt <= c.cut AND t > c.cut)
            OR (pt // 1000) + {_TR_TTL_MS} >= (m1.m // 1000) - {_TR_DELAY_MS})
     GROUP BY 1, 2

@@ -3,12 +3,17 @@ similarity search consistency, text analysis, multimodal plumbing."""
 
 from __future__ import annotations
 
+import ast
+import os
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
 from power_generation_etl_spark.operators import minhash as mh
 from power_generation_etl_spark.operators import multimodal as mm
 from power_generation_etl_spark.operators import similarity as sim
+from power_generation_etl_spark.session import local_frame
 
 
 @pytest.fixture(scope="module")
@@ -412,37 +417,6 @@ class TestSimilarity:
         }
         assert lsh <= exact  # exact verification ⇒ precision 1
 
-    def test_arrow_kernel_matches_expr_kernel(self, embeddings):
-        """The vectorized numpy kernel must produce the same ranking and
-        (to rounding) the same similarities as the portable fold."""
-        qv = [
-            float(x)
-            for x in embeddings.filter(F.col("vec_id") == 0).head()["embedding"]
-        ]
-        expr_rows = sim.brute_force_topk(
-            embeddings, "vec_id", "embedding", qv, k=15, kernel="expr"
-        ).collect()
-        arrow_rows = sim.brute_force_topk(
-            embeddings, "vec_id", "embedding", qv, k=15, kernel="arrow"
-        ).collect()
-        assert [r["vec_id"] for r in expr_rows] == [r["vec_id"] for r in arrow_rows]
-        for e, a in zip(expr_rows, arrow_rows):
-            assert a["cosine_sim"] == pytest.approx(e["cosine_sim"], abs=2e-4)
-
-        pairs_expr = {
-            (r["id_a"], r["id_b"])
-            for r in sim.lsh_bucketed_neardup(
-                embeddings, "vec_id", "embedding", threshold=0.4
-            ).collect()
-        }
-        pairs_arrow = {
-            (r["id_a"], r["id_b"])
-            for r in sim.lsh_bucketed_neardup(
-                embeddings, "vec_id", "embedding", threshold=0.4, kernel="arrow"
-            ).collect()
-        }
-        assert pairs_expr == pairs_arrow
-
     def test_ivf_index_partition_pruning(self, spark, embeddings, tmp_path):
         """write_ivf_index + ivf_probe_index: the probe's parquet scan
         must prune at the partition level (PartitionFilters on cell),
@@ -528,6 +502,96 @@ class TestSimilarity:
         for _, cent in c1:
             assert len(cent) == 64
             assert all(abs(x - round(x, 6)) < 1e-12 for x in cent)
+
+
+def _null_vectors(spark):
+    """12 seeded 8-dim vectors, id 6 holding a NULL element, plus a
+    whole-NULL vector at the lowest id (a k-means seed candidate)."""
+    rng = random.Random(3)
+    rows = [(i, [rng.gauss(0.0, 1.0) for _ in range(8)]) for i in range(1, 13)]
+    rows[5] = (6, [1.0, None, 0.5, 0.2, -0.3, 0.1, 0.4, -0.2])
+    return local_frame(
+        spark, [(0, None)] + rows, "vec_id bigint, embedding array<double>"
+    )
+
+
+def _expr_pairs(pairs, a_col, b_col, out_col):
+    """Reference twin of `cosine_pairs_seq`: the `cosine()` expression
+    over the same pair rows."""
+    keep = [c for c in pairs.columns if c not in (a_col, b_col)]
+    return pairs.select(*keep, sim.cosine(F.col(a_col), F.col(b_col)).alias(out_col))
+
+
+class TestNullVectors:
+    @pytest.mark.parametrize("op", [
+        "all_pairs_neardup", "lsh_bucketed_neardup", "semdedup",
+        "semantic_decontam",
+    ])
+    def test_null_element_pairs_match_the_expression(self, spark, monkeypatch, op):
+        """A vector holding a NULL element gets a NULL pair cosine, as
+        `cosine()` gives it, instead of failing the Arrow kernel."""
+        e = _null_vectors(spark)
+        bench = e.where("vec_id IN (0, 1, 2, 6)").toDF("bid", "bv")
+        run = {
+            "all_pairs_neardup": lambda: sim.all_pairs_neardup(
+                e, "vec_id", "embedding", threshold=-1.0
+            ),
+            "lsh_bucketed_neardup": lambda: sim.lsh_bucketed_neardup(
+                e, "vec_id", "embedding", threshold=-1.0
+            ),
+            "semdedup": lambda: sim.semdedup(
+                e, "vec_id", "embedding", k=2, iters=2, threshold=0.0
+            ),
+            "semantic_decontam": lambda: sim.semantic_decontam(
+                e, "vec_id", "embedding", bench, "bid", "bv", threshold=-1.0
+            ),
+        }[op]
+        got = run().collect()
+        assert got
+        monkeypatch.setattr(sim, "cosine_pairs_seq", _expr_pairs)
+        assert got == run().collect()
+
+    def test_kmeans_skips_null_vectors(self, spark):
+        e = _null_vectors(spark)
+        cents = sim.kmeans_train(e, "vec_id", "embedding", k=2, iters=2)
+        assert cents == sim.kmeans_train(
+            e.where("vec_id != 0"), "vec_id", "embedding", k=2, iters=2
+        )
+        assert sim.ivf_topk(
+            e, "vec_id", "embedding", [0.1] * 8, k=5, n_cells=2, label_col=None
+        ).collect()
+        assert sim.semdedup(e, "vec_id", "embedding", k=2, iters=2).collect()
+
+
+def test_one_exact_kernel_per_vector_job():
+    """No function in the package takes a `kernel` option, and the
+    similarity module keeps one scalar pandas UDF: the Lloyd's training
+    assigner."""
+    pkg = os.path.dirname(os.path.dirname(sim.__file__))
+    takes_kernel = []
+    for d, _sub, files in os.walk(pkg):
+        for name in files:
+            if name.endswith(".py"):
+                path = os.path.join(d, name)
+                with open(path) as f:
+                    tree = ast.parse(f.read(), path)
+                takes_kernel += [
+                    f"{os.path.relpath(path, pkg)}:{n.lineno}"
+                    for n in ast.walk(tree)
+                    if isinstance(n, (ast.FunctionDef, ast.Lambda))
+                    and any(
+                        a.arg == "kernel"
+                        for a in n.args.posonlyargs + n.args.args + n.args.kwonlyargs
+                    )
+                ]
+    assert takes_kernel == []
+    with open(sim.__file__) as f:
+        tree = ast.parse(f.read())
+    udfs = [
+        n for n in ast.walk(tree)
+        if isinstance(n, ast.Attribute) and n.attr == "pandas_udf"
+    ]
+    assert len(udfs) == 1
 
 
 class TestPQ:
@@ -935,30 +999,6 @@ class TestRealAudioDecode:
         feat = mm.extract_audio_features(df).collect()[0]
         assert feat["rms"] is None and feat["sample_rate"] is None
         assert feat["n_bytes"] == len(b"ID3\x03\x00fakempeg")
-
-
-class TestArrowKmeansKernel:
-    """kernel='arrow' (production path) must reproduce the expr kernel's
-    trajectory and ranking on non-degenerate data (differences are
-    possible only on exact distance ties)."""
-
-    def test_same_centroids_and_topk(self, spark, sf_dir):
-        from power_generation_etl_spark.operators import similarity as sim
-
-        e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        c_expr = sim.kmeans_train(e, "vec_id", "embedding", k=4, iters=2)
-        c_arrow = sim.kmeans_train(
-            e, "vec_id", "embedding", k=4, iters=2, kernel="arrow"
-        )
-        assert c_expr == c_arrow
-        q = [0.05] * 64
-        a = [r["vec_id"] for r in
-             sim.ivf_topk(e, "vec_id", "embedding", q, k=5,
-                          n_cells=4, train_iters=2).collect()]
-        b = [r["vec_id"] for r in
-             sim.ivf_topk(e, "vec_id", "embedding", q, k=5, n_cells=4,
-                          train_iters=2, kernel="arrow").collect()]
-        assert a == b
 
 
 def _encode_avi(frame_payloads):

@@ -265,9 +265,9 @@ class TestOperatorSharing:
         orig_km = sim._kmeans_train_impl
         orig_pq = sim._pq_train_impl
 
-        def counting_km(src, k, iters, kernel):
-            kmeans_builds.append((k, iters, kernel))
-            return orig_km(src, k, iters, kernel)
+        def counting_km(src, k, iters):
+            kmeans_builds.append((k, iters))
+            return orig_km(src, k, iters)
 
         def counting_pq(src, m, k_sub, iters):
             pq_builds.append((m, k_sub, iters))

@@ -325,14 +325,7 @@ def test_null_event_type_streams_in_spark_sort_order(spark, tmp_path, name):
     assert got == local_frame(spark, got, df.schema).orderBy(*df.columns[:2]).collect()
 
 
-@pytest.mark.parametrize("name", [
-    *_NULL_TYPE_STREAMS[:2],
-    pytest.param(_NULL_TYPE_STREAMS[2], marks=pytest.mark.xfail(
-        strict=True,
-        reason="the oracle's `from_type IS NOT NULL` also drops every "
-        "transition out of a null-type event, which the stream counts",
-    )),
-])
+@pytest.mark.parametrize("name", _NULL_TYPE_STREAMS)
 def test_null_event_type_streams_match_their_oracles(spark, tmp_path, name):
     """With null event types each entry returns its oracle's rows."""
     import duckdb
